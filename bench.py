@@ -71,144 +71,6 @@ EXCLUDED = {
     "ingest_avro_docs": "fixture-file parser (see ingest_csv_docs)",
 }
 
-# Legacy hand-curated set, kept ONLY as documentation of what rounds 1-6
-# benched (cross-round per-query comparisons remain valid for these names).
-_HEADLINE_R6 = [
-    "agg_pricing_summary",
-    "scan_filter_project",
-    "join_revenue_by_segment",
-    "join_multi_region",
-    "anti_join_inactive_customers",
-    "window_topk_orders",
-    "sort_limit_top_orders",
-    "rollup_order_priority",
-    "json_extract_events",
-    "time_window_events",
-    "session_window_events",
-    "scalar_functions_part",
-    "dedup_exact_docs",
-    "dedup_minhash_docs",
-    "dedup_simhash_docs",
-    "knn_cosine_topk",
-    "knn_ivf_topk",
-    "multimodal_metadata_docs",
-    "text_quality_docs",
-    "lang_id_docs",
-    "token_count_docs",
-    "fingerprint_docs",
-    "tfidf_docs",
-    "percentile_lineitem",
-    "percentile_approx_lineitem",
-    "tpch_q6_forecast_revenue",
-    "multi_distinct_events",
-    "asof_join_events_orders",
-    "range_join_event_pairs",
-    "skew_salted_agg_events",
-    "winnow_fingerprint_docs",
-    "chunk_docs",
-    "pii_scrub_docs",
-    "decontaminate_docs",
-    "repetition_stats_docs",
-    "quality_filter_docs",
-    "ngram_topk_corpus",
-    "corpus_stats_by_lang",
-    "sample_docs_hash",
-    "cap_per_source_docs",
-    "normalize_text_docs",
-    "mix_corpus_docs",
-    "embedding_centroids_by_label",
-    "pack_sequences_docs",
-    "dup_ngram_fraction_docs",
-    "inverted_index_terms",
-    "split_docs_hash",
-    "quantize_embeddings",
-    "pagerank_supplier_graph",
-    "covariance_embeddings",
-    "gapfill_events_locf",
-    "funnel_conversion_events",
-    "retention_cohorts_events",
-    "variant_props_events",
-    "setop_multiset_priorities",
-    "map_functions_events",
-    "regression_stats_lineitem",
-    "zipf_slope_corpus",
-    "fuzzy_match_parts",
-    "dq_checks_star_schema",
-    "skew_salted_join_events",
-    "s3_event_decode_docs",
-    # round 3 additions
-    "paragraph_dedup_docs",
-    "snapshot_diff_customers",
-    "scd2_customers",
-    "semantic_dedup_embeddings",
-    "bm25_topk_docs",
-    "zorder_layout_events",
-    "bloom_prune_join_events",
-    "anomaly_zscore_events",
-    "classifier_score_docs",
-    "curriculum_bins_docs",
-    "dedup_substring_docs",
-    "bpe_merge_candidates_corpus",
-    "batch_by_length_docs",
-    "llm_data_pipeline_docs",
-    "corpus_datasheet_docs",
-    "bpe_encode_docs",
-    # round 4 additions
-    "ingest_pdf_docs",
-    "zorder_prune_demo_events",
-    "lm_perplexity_docs",
-    "bpe_train_merges_corpus",
-    "dedup_image_phash_docs",
-    "dedup_audio_fingerprint_docs",
-    "pca_top_component_embeddings",
-    "pca_project_embeddings",
-    "pca_top2_components_embeddings",
-    "merge_upsert_customers",
-    "stratified_split_docs",
-    "nfc_normalize_docs",
-    "incremental_agg_orders",
-    "compact_small_files_docs",
-    "shard_balance_docs",
-    "heavy_hitters_docs",
-    "ingest_html_docs",
-    "time_travel_orders",
-    "char_entropy_docs",
-    "dedup_incremental_docs",
-    "vocab_coverage_docs",
-    "corpus_build_pipeline_docs",
-    "table_changes_orders",
-    "knn_two_stage_topk",
-    "join_cardinality_orders_customer",
-    "matryoshka_qc_embeddings",
-    "backfill_partitions_events",
-    "triangle_count_suppliers",
-    "event_transitions_events",
-    "pit_join_events",
-    "temperature_sample_docs",
-    "winsorize_events",
-    "histogram_lineitem",
-    # round 6 additions
-    "stats_prune_scan_orders",
-    "assign_ids_orders",
-    "kn_bigram_lm_corpus",
-    "psi_drift_docs",
-    "trajectory_events",
-    "pq_adc_topk_embeddings",
-    "pq_ivf_topk_embeddings",
-    "shuffle_ids_docs",
-    "dedup_clusters_docs",
-    "url_dedup_docs",
-    "dsir_importance_docs",
-    "nb_lang_confusion_docs",
-    "wilson_quality_sources",
-    "weighted_sample_docs",
-    "unimax_mixture_sources",
-    "hll_intersection_events",
-    "ewma_user_values",
-    "ks_drift_docs",
-    "chi2_lang_source_docs",
-]
-
 
 def run_canary(spark) -> float:
     """One fixed mid-weight query over in-process data: 3M rows of

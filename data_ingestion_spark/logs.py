@@ -38,6 +38,11 @@ LOG_SCHEMA = T.StructType(
 )
 
 
+def utcnow() -> datetime:
+    """Naive UTC now: the log's timestamp convention."""
+    return datetime.now(timezone.utc).replace(tzinfo=None)
+
+
 class IngestionLogWriter:
     """Append-only audit log writer over a parquet table."""
 
@@ -50,7 +55,7 @@ class IngestionLogWriter:
         (reference: ingestion_service.rs:92-104 — status starts as the
         'Success' placeholder with end_time NULL)."""
         log_id = uuid.uuid4().hex
-        now = datetime.now(timezone.utc).replace(tzinfo=None)
+        now = utcnow()
         row = [(log_id, file_name, now, None, "Success", None)]
         self.spark.createDataFrame(row, LOG_SCHEMA).write.mode("append").parquet(self.path)
         return log_id
@@ -60,10 +65,16 @@ class IngestionLogWriter:
         """Close a log entry (reference: ingestion_service.rs:119-124 /
         log_repo.rs:49-88 — a $set update; rebuilt as an append of the final
         state, reconstructed by ``current_status``)."""
-        now = datetime.now(timezone.utc).replace(tzinfo=None)
+        now = utcnow()
         status = "Success" if success else "Failed"
         row = [(log_id, file_name, start_time, now, status, message)]
         self.spark.createDataFrame(row, LOG_SCHEMA).write.mode("append").parquet(self.path)
+
+    def log_failure(self, file_name: str, start_time: datetime, message: str) -> None:
+        """Audit a file that failed before its ingest started: an open row
+        plus its Failed finalize row, as ``current_status`` expects."""
+        log_id = self.insert_log(file_name)
+        self.finalize_log(log_id, file_name, start_time, False, message)
 
     def read(self) -> DataFrame:
         return self.spark.read.schema(LOG_SCHEMA).parquet(self.path)

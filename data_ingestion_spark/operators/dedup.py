@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..functions import md5_hash60, tokens, word_shingles
 from ..functions.vector_functions import cosine_similarity
+from ..session import cut
 
 SIMHASH_BITS = 60
 
@@ -224,9 +225,12 @@ def jaccard_pairs(
     # preserved. (The r8 prebuilt-base fusion seam was removed in r11:
     # its one consumer, minhash_band_recall_docs, probes the committed
     # shingle-base store now.)
-    base = build_shingle_base(
-        df, id_col, text_col, k=k, block_cols=block_cols, sort_sets=True
-    ).localCheckpoint(eager=False)
+    base = cut(
+        build_shingle_base(
+            df, id_col, text_col, k=k, block_cols=block_cols, sort_sets=True
+        ),
+        eager=False,
+    )
     pref = frequency_ordered_prefix(base, threshold)
     return _allpairs_jaccard_verify(
         pref, base.select("id", "sset"), threshold, block_keys=("block",)
@@ -391,7 +395,7 @@ def shingle_base_store(spark, sf_dir: str, k: int = 3, force: bool = False) -> s
         )
         # two member writes + the df agg all consume base: materialize
         # the tokenize/shingle pass once (executor-local blocks)
-        base = base.localCheckpoint(eager=True)
+        base = cut(base)
         fpos = frequency_ordered_prefix(
             base, threshold=0.0, group_cols=("lang", "bucket")
         )
@@ -519,7 +523,7 @@ def jaccard_pairs_stored(
 # --------------------------------------------------------------------------
 def _minhash_bands(
     df, id_col, text_col, k, num_hash_tables, seed, hash_fn, band_r,
-    materialize, prehash_fn, prebuilt_shingles=None,
+    prehash_fn, prebuilt_shingles=None,
 ):
     """Shared signature machinery for minhash_near_dup /
     minhash_incremental_pairs: shingle sets + (band, key) explode.
@@ -540,8 +544,8 @@ def _minhash_bands(
         )
     if prehash_fn is not None:
         base = base.withColumn("hvals", F.transform("shingles", prehash_fn))
-    if materialize and prebuilt_shingles is None:
-        base = base.localCheckpoint(eager=True)
+    if prebuilt_shingles is None:
+        base = cut(base)
 
     def _table_hash(idx):
         # One-ARG lambda per table: a defaulted second param (lambda s,
@@ -554,9 +558,7 @@ def _minhash_bands(
         F.array_min(F.transform(hash_src, _table_hash(i))).alias(f"mh{i}")
         for i in range(num_hash_tables)
     ]
-    sigs = base.select("id", *mh_cols)
-    if materialize:
-        sigs = sigs.localCheckpoint(eager=True)
+    sigs = cut(base.select("id", *mh_cols))
     n_bands = num_hash_tables // band_r
     bands = F.array(
         *[
@@ -587,7 +589,6 @@ def minhash_near_dup(
     seed: int = 42,
     hash_fn=None,
     band_r: int = 1,
-    materialize: bool = False,
     prehash_fn=None,
     prebuilt_shingles: DataFrame | None = None,
 ) -> DataFrame:
@@ -617,7 +618,7 @@ def minhash_near_dup(
 
     ``prehash_fn(shingle_col) -> Column``: optional shared base hash. When
     given, each shingle is hashed ONCE into a sibling ``hvals`` array (paid
-    once, inside the materialization when ``materialize=True``) and
+    once, inside the base materialization) and
     ``hash_fn`` receives the prehashed value instead of the raw shingle.
     Without it, an expensive base hash inside ``hash_fn`` (e.g. md5) is
     re-evaluated per table — Spark does not CSE across separate
@@ -633,7 +634,7 @@ def minhash_near_dup(
     """
     base, exploded = _minhash_bands(
         df, id_col, text_col, k, num_hash_tables, seed, hash_fn, band_r,
-        materialize, prehash_fn, prebuilt_shingles=prebuilt_shingles,
+        prehash_fn, prebuilt_shingles=prebuilt_shingles,
     )
     a, b = exploded.alias("a"), exploded.alias("b")
     cand = (
@@ -667,7 +668,6 @@ def minhash_incremental_pairs(
     seed: int = 42,
     hash_fn=None,
     band_r: int = 1,
-    materialize: bool = False,
     prehash_fn=None,
     prebuilt_shingles_corpus: DataFrame | None = None,
     prebuilt_shingles_batch: DataFrame | None = None,
@@ -697,11 +697,11 @@ def minhash_incremental_pairs(
     """
     cbase, cbands = _minhash_bands(
         corpus, id_col, text_col, k, num_hash_tables, seed, hash_fn, band_r,
-        materialize, prehash_fn, prebuilt_shingles=prebuilt_shingles_corpus,
+        prehash_fn, prebuilt_shingles=prebuilt_shingles_corpus,
     )
     bbase, bbands = _minhash_bands(
         batch, id_col, text_col, k, num_hash_tables, seed, hash_fn, band_r,
-        materialize, prehash_fn, prebuilt_shingles=prebuilt_shingles_batch,
+        prehash_fn, prebuilt_shingles=prebuilt_shingles_batch,
     )
     cand = (
         cbands.alias("a")
@@ -1041,9 +1041,7 @@ def connected_components(
     # mirrored union is NOT checkpointed again — it is a zero-shuffle map
     # over the already-materialized edge blocks, so a second eager cut only
     # added a redundant materialization job per call.)
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).localCheckpoint(
-        eager=True
-    )
+    e = cut(edges.select(F.col(src).alias("a"), F.col(dst).alias("b")))
     sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     labels = (
         sym.select(F.col("a").alias("id")).distinct().withColumn("comp", F.col("id"))
@@ -1059,7 +1057,7 @@ def connected_components(
         # r14: the checkpoint is LAZY — the convergence count right below
         # is the action that materializes it, so each round runs ONE
         # driver-visible job instead of materialize-then-count (two).
-        stepped = (
+        stepped = cut(
             sym.join(labels.withColumnRenamed("id", "b"), "b")
             .select(F.col("a").alias("id"), "comp", F.lit(False).alias("own"))
             .unionByName(labels.withColumn("own", F.lit(True)))
@@ -1067,8 +1065,8 @@ def connected_components(
             .agg(
                 F.min("comp").alias("comp"),
                 F.max(F.when(F.col("own"), F.col("comp"))).alias("old_comp"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            eager=False,
         )
         changed = stepped.filter(F.col("comp") != F.col("old_comp")).count()
         labels = stepped.select("id", "comp")
@@ -1129,14 +1127,13 @@ def connected_components_twostar(
     included, exactly ``connected_components``'s contract (pytest pins
     equality on random graphs and a 200-node chain).
     """
-    e = (
+    e = cut(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a") != F.col("b"))
         .select(
             F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
     # r14 (guide §1.2): `nodes` is consumed exactly once, by the final
     # star join after the loop — checkpointing it eagerly here was a pure
@@ -1176,13 +1173,13 @@ def connected_components_twostar(
         # neighbors re-point to the minimum
         wu = W.partitionBy("u")
         base = ls.withColumn("m", F.least(F.col("u"), F.min("v").over(wu)))
-        ss = (
+        ss = cut(
             base.select(F.col("v").alias("n"), F.col("m"))
             .union(base.select(F.col("u").alias("n"), F.col("m")))
             .filter(F.col("n") != F.col("m"))
             .select(F.col("n").alias("u"), F.col("m").alias("v"))
-            .distinct()
-            .localCheckpoint(eager=False)
+            .distinct(),
+            eager=False,
         )
         # fixpoint: the (u, v) multiset is unchanged (both sides distinct)
         n_ss = ss.count()

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import cut
+
 
 def pagerank(
     edges: DataFrame,
@@ -124,11 +126,11 @@ def pagerank(
             )
         )
         if checkpoint_every and (it + 1) % checkpoint_every == 0 and it + 1 < n_iter:
-            pr = pr.localCheckpoint(eager=True)
+            pr = cut(pr)
     # one eager cut at the end: materializes the whole folded recursion in a
     # single job and detaches the result from the persisted inputs so the
     # unpersists below cannot force recomputation for the caller's action
-    pr = pr.localCheckpoint(eager=True)
+    pr = cut(pr)
     out = pr.select(
         "node", F.floor(F.col("pr") * F.lit(1e9) + F.lit(0.5)).cast("long").alias("pr_nano")
     )
@@ -155,18 +157,17 @@ def triangle_count(edges: DataFrame, a_col: str = "a", b_col: str = "b") -> Data
     triangles with the naive a<b<c three-way join — two different
     algorithms agreeing is the check.
     """
-    e = (
+    # three downstream actions (edge/node/triangle counts) plus the
+    # two-sided wedge join would otherwise recompute the (possibly
+    # expensive) edge derivation 4×; the canonical edge set is the
+    # bounded thing worth pinning
+    e = cut(
         edges.select(
             F.least(F.col(a_col), F.col(b_col)).alias("x"),
             F.greatest(F.col(a_col), F.col(b_col)).alias("y"),
         )
         .filter(F.col("x") != F.col("y"))
         .distinct()
-        # three downstream actions (edge/node/triangle counts) plus the
-        # two-sided wedge join would otherwise recompute the (possibly
-        # expensive) edge derivation 4×; the canonical edge set is the
-        # bounded thing worth pinning
-        .localCheckpoint(eager=True)
     )
     deg = (
         e.select(F.col("x").alias("n")).unionAll(e.select(F.col("y").alias("n")))

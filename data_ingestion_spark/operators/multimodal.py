@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import cut
 from .jpeg_codec import jpeg_decode, jpeg_metadata
 
 #: magic-byte prefixes → format label (public file-signature table)
@@ -660,10 +661,9 @@ def phash_hamming_pairs(
     # hash) — metadata-scale at any corpus size — so one EAGER
     # localCheckpoint runs the decode exactly once and both join sides
     # read the materialized rows.
-    sig = (
+    sig = cut(
         sig_df.filter(F.col(sig_col).isNotNull())
         .withColumnRenamed(sig_col, "__sig")
-        .localCheckpoint(eager=True)
     )
     bands = F.array(
         *[

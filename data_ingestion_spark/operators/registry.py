@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text_functions import BPE_ISH_PATTERN
-from ..session import load_table
+from ..session import cut, load_table
 from . import cdc, dedup, sampling, similarity, skew, temporal, text
 
 # SQL fragments kept in lockstep with functions/text_functions.py
@@ -124,7 +124,6 @@ def dedup_minhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         jaccard_distance_threshold=0.7,
         hash_fn=portable,
         band_r=2,
-        materialize=True,
         prehash_fn=prehash,
         prebuilt_shingles=base.select("id", F.col("sset").alias("shingles")),
     ).orderBy("id_a", "id_b")
@@ -215,7 +214,6 @@ def dedup_incremental_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         jaccard_distance_threshold=0.7,
         hash_fn=portable,
         band_r=2,
-        materialize=True,
         prehash_fn=prehash,
         prebuilt_shingles_corpus=stored.filter(F.col("id") % 2 == 0),
         prebuilt_shingles_batch=stored.filter(F.col("id") % 2 == 1),
@@ -1410,9 +1408,9 @@ def multimodal_metadata_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # side (plan-measured: 3 Arrow stages). The blobs here are header-only
     # fixtures (tens of bytes/row), so one EAGER localCheckpoint runs the
     # synth once and both branches read the materialized rows.
-    binary = docs.mapInPandas(
+    binary = cut(docs.mapInPandas(
         _synth, schema="path string, content binary"
-    ).localCheckpoint(eager=True)
+    ))
     sniffed = multimodal.sniff_format(binary).select(
         "path", F.col("format").alias("sniffed")
     )
@@ -2161,11 +2159,10 @@ def zipf_slope_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # subtrees (the bucket-total collect, hist→higher, toks, poff) and
     # each would otherwise replay the corpus tokenize+explode+agg
     # (per-branch pruning defeats ReuseExchange — the covariance lesson)
-    freqs = (
+    freqs = cut(
         docs.select(F.explode(text.tokens(F.col("text"))).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("freq"))
-        .localCheckpoint(eager=True)
     )
     # (a) tokens with strictly higher freq, per distinct freq value
     hist = (
@@ -2255,9 +2252,7 @@ def fuzzy_match_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14: eager cut at the distinct-name table — both block sides of the
     # pair join AND the exact-duplicate agg replayed the scan+agg (3
     # customer scans in one plan); the Levenshtein stays the real cost
-    names = c.groupBy("c_name").agg(F.count(F.lit(1)).alias("cnt")).localCheckpoint(
-        eager=True
-    )
+    names = cut(c.groupBy("c_name").agg(F.count(F.lit(1)).alias("cnt")))
     a = names.select(
         F.col("c_name").alias("name_a"),
         F.col("cnt").alias("cnt_a"),
@@ -2915,7 +2910,7 @@ def dedup_nightly_pipeline_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     kwargs = dict(
         k=3, num_hash_tables=8, seed=42, hash_fn=portable, band_r=2,
-        materialize=True, prehash_fn=prehash,
+        prehash_fn=prehash,
     )
     cbase, cbands = dedup._minhash_bands(
         None, "doc_id", "text",
@@ -2970,12 +2965,11 @@ def dedup_nightly_pipeline_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     jac = _inter.cast("double") / (
         F.size("sh_a") + F.size("sh_b") - _inter
     ).cast("double")  # union-free verify (r9), value-identical
-    pairs = (
+    pairs = cut(  # feeds decisions AND the accept filter
         cand.join(sa, "corpus_id")
         .join(sb, "batch_id")
         .select("corpus_id", "batch_id", F.round(jac, 4).alias("est_jaccard"))
         .filter(F.col("est_jaccard") >= 0.3)
-        .localCheckpoint(eager=True)  # feeds decisions AND the accept filter
     )
 
     from pyspark.sql import Window
@@ -3200,10 +3194,10 @@ def minhash_band_recall_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     found = dedup.minhash_near_dup(
         None, id_col="doc_id", text_col="text", k=3,
         jaccard_distance_threshold=0.7, hash_fn=portable, band_r=2,
-        materialize=True, prehash_fn=prehash,
+        prehash_fn=prehash,
         prebuilt_shingles=base.select("id", F.col("sset").alias("shingles")),
     ).select("id_a", "id_b")
-    truth = truth.localCheckpoint(eager=False)  # feeds n_true AND the hit join
+    truth = cut(truth, eager=False)  # feeds n_true AND the hit join
     hits = truth.join(found, ["id_a", "id_b"], "left_semi")
     return (
         truth.agg(F.count(F.lit(1)).alias("n_true_pairs"))
@@ -3328,9 +3322,7 @@ def ndcg_ivf_retrieval_qc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14: eager cut at the exact top-k (≤50 rows) — it feeds TWO
     # subtrees (rel for the join, idcg for the ideal gain), and each
     # would otherwise replay the corpus×queries cosine ranking
-    exact = similarity.cosine_topk(emb, queries, k=10).localCheckpoint(
-        eager=True
-    )
+    exact = cut(similarity.cosine_topk(emb, queries, k=10))
     cents = similarity.ivf_centroids_from_sample(emb, n_lists=8)
     approx = similarity.ivf_topk(emb, queries, cents, k=10, n_probe=2)
     rel = exact.select(
@@ -3872,15 +3864,15 @@ def minhash_band_precision_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base, exploded = dedup._minhash_bands(
         None, "doc_id", "text", k=3, num_hash_tables=8, seed=42,
-        hash_fn=portable, band_r=2, materialize=True, prehash_fn=prehash,
+        hash_fn=portable, band_r=2, prehash_fn=prehash,
         prebuilt_shingles=sbase.select("id", F.col("sset").alias("shingles")),
     )
     a, b = exploded.alias("a"), exploded.alias("b")
-    cand = (
+    cand = cut(
         a.join(b, (F.col("a.bk") == F.col("b.bk")) & (F.col("a.id") < F.col("b.id")))
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        .localCheckpoint(eager=False)  # feeds the count AND the verify
+        .dropDuplicates(["id_a", "id_b"]),
+        eager=False,  # feeds the count AND the verify
     )
     sa = base.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a"))
     sb = base.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b"))

@@ -13,7 +13,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import load_table
+from ..session import cut, load_table
 from . import inference, layout, sampling, stats, text
 
 _SQL_TOKENS = "list_filter(string_split_regex(lower({c}), '\\s+'), x -> x <> '')"
@@ -572,11 +572,11 @@ def llm_data_pipeline_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # "materialized table between jobs" production shape, now mirrored in
     # the lazy chain: without them every downstream gate re-ran the whole
     # upstream pipeline per branch (8 documents scans in one plan)
-    d1 = docs.join(keep_ids, "doc_id").localCheckpoint(eager=True)
+    d1 = cut(docs.join(keep_ids, "doc_id"))
     winners = d1.groupBy(F.md5("text").alias("h")).agg(
         F.min("doc_id").alias("doc_id")
     )
-    d2 = d1.join(winners.select("doc_id"), "doc_id").localCheckpoint(eager=True)
+    d2 = cut(d1.join(winners.select("doc_id"), "doc_id"))
     score_ids = (
         inference.classifier_scores(d2, "doc_id", "text")
         .filter(F.col("score_micro") >= F.lit(_PIPE_SCORE_MIN))
@@ -2087,10 +2087,9 @@ def corpus_build_pipeline_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # final plan plus one more in the vocab collect). One EAGER
     # localCheckpoint runs NFC once; everything downstream reads the
     # materialized (id, text_nfc) rows.
-    norm = (
+    norm = cut(
         text.nfc_normalize(docs, "doc_id", "text")
         .select("id", "text_nfc")
-        .localCheckpoint(eager=True)
     )
     win = norm.groupBy(F.md5("text_nfc").alias("fp")).agg(
         F.min("id").alias("id")
@@ -2562,9 +2561,8 @@ def pit_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     # r15 (duplicate-scan audit tail): v1 and v2 each replayed the events
     # scan + user_id distinct — 3 events scans in one plan → 1 behind an
-    # eager cut of the distinct user list. A/B + plan pair in
-    # OPTIMIZATION_r15.md.
-    users = ev.select(F.col("user_id")).distinct().localCheckpoint(eager=True)
+    # eager cut of the distinct user list. No A/B timing was recorded.
+    users = cut(ev.select(F.col("user_id")).distinct())
     boundary = F.lit("2024-01-15 00:00:00").cast("timestamp")
     v1 = users.select(
         "user_id",
@@ -3769,7 +3767,7 @@ def theta_intersection_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     k = _KMV_K
-    users = (
+    users = cut(
         ev.groupBy("user_id")
         .agg(
             F.sum(
@@ -3786,8 +3784,8 @@ def theta_intersection_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("click_micro") >= _KMV_CLICK_MICRO).alias("a"),
             (F.col("n_purch") >= _KMV_N_PURCH).alias("b"),
             md5_hash60(F.col("user_id").cast("string")).alias("h"),
-        )
-        .localCheckpoint(eager=False)  # feeds 4 consumers; one user-agg pass
+        ),
+        eager=False,  # feeds 4 consumers; one user-agg pass
     )
     ka = sketch.kmv_bottom_k(users.filter(F.col("a")), "h", k)
     kb = sketch.kmv_bottom_k(users.filter(F.col("b")), "h", k)
@@ -4008,14 +4006,12 @@ def pmi_bigrams_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tokenized corpus feeds THREE consumers (unigram counts, bigram
     # counts, total-token scalar); materialize once instead of
     # re-tokenizing per consumer (same pattern as dedup.jaccard_pairs)
-    toks = docs.select(tokens(F.col("text")).alias("toks")).localCheckpoint(
-        eager=False
-    )
-    uni = (
+    toks = cut(docs.select(tokens(F.col("text")).alias("toks")), eager=False)
+    uni = cut(
         toks.select(F.explode("toks").alias("t"))
         .groupBy("t")
-        .agg(F.count(F.lit(1)).alias("n_t"))
-        .localCheckpoint(eager=False)  # joined twice (left/right token)
+        .agg(F.count(F.lit(1)).alias("n_t")),
+        eager=False,  # joined twice (left/right token)
     )
     big = (
         toks.select(F.explode(word_shingles(F.col("toks"), 2)).alias("bigram"))
@@ -5419,11 +5415,10 @@ def assoc_rules_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     # basket-scale rows. Eager cut: three consumers (nb, supp, pairs)
     # would otherwise each replay the basket agg (per-branch pruning
     # defeats ReuseExchange — the covariance_embeddings r14 lesson).
-    baskets = (
+    baskets = cut(
         li.select(F.col("l_orderkey").alias("bid"), F.col("l_partkey").alias("item"))
         .groupBy("bid")
         .agg(F.sort_array(F.collect_set("item")).alias("ss"))
-        .localCheckpoint(eager=True)
     )
     # scalar-subquery crossJoin (not .count()): the basket total rides the
     # same job instead of costing an extra driver round-trip
@@ -7152,7 +7147,7 @@ def session_cooccurrence_lift_events(spark: SparkSession, sf_dir: str) -> DataFr
     tus = F.unix_micros(F.col("ts"))
     w = W.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
     gap = tus - F.lag(tus).over(w)
-    sess_sets = (
+    sess_sets = cut(
         ev.select(
             "user_id",
             "event_type",
@@ -7172,7 +7167,6 @@ def session_cooccurrence_lift_events(spark: SparkSession, sf_dir: str) -> DataFr
         )
         .groupBy("user_id", "sid")
         .agg(F.sort_array(F.collect_set("event_type")).alias("tt"))
-        .localCheckpoint(eager=True)
     )
     ns = sess_sets.agg(F.count(F.lit(1)).cast("long").alias("n_sessions"))
     singles = (
@@ -7276,7 +7270,12 @@ def rfm_segments_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scalar-subquery crossJoin (not collect()): the corpus-max reference
     # date rides the same job instead of an extra driver round-trip
     ref = orders.agg(F.max("o_orderdate").alias("ref"))
-    per = (
+    # r15 (duplicate-scan audit tail): the quintile-boundary agg and
+    # the scoring pass each replayed the per-customer agg (+ its ref
+    # scan) — 4 orders scans in one plan. One eager cut of the
+    # |customers|-row 4-column reduction runs the groupBy once.
+    # No A/B timing was recorded.
+    per = cut(
         orders.groupBy("o_custkey")
         .agg(
             F.max("o_orderdate").alias("last_order"),
@@ -7296,12 +7295,6 @@ def rfm_segments_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
             "freq",
             "cents",
         )
-        # r15 (duplicate-scan audit tail): the quintile-boundary agg and
-        # the scoring pass each replayed the per-customer agg (+ its ref
-        # scan) — 4 orders scans in one plan. One eager cut of the
-        # |customers|-row 4-column reduction runs the groupBy once.
-        # A/B + plan pair in OPTIMIZATION_r15.md.
-        .localCheckpoint(eager=True)
     )
     probs = [0.2, 0.4, 0.6, 0.8]
     bounds = per.agg(

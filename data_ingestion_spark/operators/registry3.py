@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import load_table
+from ..session import cut, load_table
 
 QUERIES: dict = {}
 
@@ -404,15 +404,14 @@ def pq_ivf_stored_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14 eager cuts: queries feeds the probe assignment AND the ADC LUT
     # (each replay = a corpus TakeOrdered); probes feeds the driver
     # list-id collect AND the broadcast candidate join
-    queries = (
+    queries = cut(
         emb.orderBy("vec_id")
         .limit(2)
         .select(F.col("vec_id").alias("qid"), "embedding")
-        .localCheckpoint(eager=True)
     )
-    probes = similarity.ivf_assign(
+    probes = cut(similarity.ivf_assign(
         queries, cent_list, vec_col="embedding", n_probe=n_probe
-    ).select("qid", "list_id").localCheckpoint(eager=True)
+    ).select("qid", "list_id"))
     probed = sorted(
         r["list_id"] for r in probes.select("list_id").distinct().collect()
     )
@@ -594,11 +593,10 @@ def t_closeness_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # left join each replayed the corpus scan + agg — 4 documents scans
     # in one plan. The finest-grain (QI, bucket) count agg runs once
     # behind an eager cut; class/global/total aggregates derive from it
-    # (Σ counts ≡ counts — value-identical). A/B + plan pair in
-    # OPTIMIZATION_r15.md.
-    cb = per.groupBy("lang", "source", "s").agg(
+    # (Σ counts ≡ counts — value-identical). No A/B timing was recorded.
+    cb = cut(per.groupBy("lang", "source", "s").agg(
         F.count(F.lit(1)).cast("long").alias("c")
-    ).localCheckpoint(eager=True)
+    ))
     cls = cb.groupBy("lang", "source").agg(
         F.sum("c").cast("long").alias("n")
     )
@@ -771,10 +769,10 @@ def dedup_impact_report_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # after→winners ×2, totals via both). One eager cut of the narrow
     # (id, source, n_chars, fp) frame — text never materializes — runs
     # the hash pass once; every downstream agg reads the 16-byte
-    # fingerprints. Same-session A/B + plan pair in OPTIMIZATION_r15.md.
-    fp = docs.select(
+    # fingerprints. No A/B timing was recorded.
+    fp = cut(docs.select(
         "doc_id", "source", "n_chars", F.md5(F.col("text")).alias("fp")
-    ).localCheckpoint(eager=True)
+    ))
     winners = (
         fp.groupBy("fp")
         .agg(F.min("doc_id").alias("doc_id"))
@@ -1559,7 +1557,7 @@ def pq_ivf_residual_topk_embeddings(
             ).alias("rv"),
         )
     )
-    res = res.localCheckpoint(eager=True)  # train + encode reuse it
+    res = cut(res)  # train + encode reuse it
     books = similarity.pq_train(res, "vec_id", "rv", m=m, k=k, n_iter=2)
     codes = similarity.pq_encode(res, "vec_id", "rv", books).join(
         res.select("vec_id", "list_id"), "vec_id"
@@ -1579,7 +1577,7 @@ def pq_ivf_residual_topk_embeddings(
     )
     # r14: eager cut — probes feeds the residual LUT explode AND the
     # broadcast candidate join; each replay re-ran the query TakeOrdered
-    probes = similarity.ivf_assign(
+    probes = cut(similarity.ivf_assign(
         queries, cents, vec_col="embedding", n_probe=n_probe
     ).select(
         "qid",
@@ -1588,7 +1586,7 @@ def pq_ivf_residual_topk_embeddings(
             f"zip_with(embedding, {case_cv},"
             " (x, y) -> CAST(x AS DOUBLE) - y)"
         ).alias("qrv"),
-    ).localCheckpoint(eager=True)
+    ))
     lut_struct = ", ".join(
         f"struct({s} AS m, {c} AS code, CAST(floor("
         f"{_sql_l2sq('qrv', s * d_sub, books[s][c])} * 1e6 + 0.5D)"
@@ -1734,7 +1732,7 @@ def label_propagation_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame
     # caller's single action (3 materialization jobs saved per call);
     # the checkpointed edge list bounds the unrolled depth at 3 shallow
     # join+window layers.
-    pairs = pairs.localCheckpoint(eager=True)
+    pairs = cut(pairs)
     to_s = pairs.select(F.col("s").alias("node"), F.col("c").alias("nbr"))
     to_c = pairs.select(F.col("c").alias("node"), F.col("s").alias("nbr"))
     nodes = to_s.select("node").union(to_c.select("node")).distinct()
@@ -1859,8 +1857,9 @@ def quantile_merge_summaries_docs(spark: SparkSession, sf_dir: str) -> DataFrame
     # r14: eager cut of the 3-column value table — it feeds the summary
     # build, the truth side, the total, and the three per-quartile
     # rank-error aggs; the audit counted 24 documents scans in this plan
-    vals = docs.select("source", F.col("n_chars").cast("long").alias("v"),
-                       "doc_id").localCheckpoint(eager=True)
+    vals = cut(
+        docs.select("source", F.col("n_chars").cast("long").alias("v"), "doc_id")
+    )
     wsrc = W.partitionBy("source").orderBy("v", "doc_id")
     ranked = vals.select(
         "source",
@@ -1891,11 +1890,11 @@ def quantile_merge_summaries_docs(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     # summary-scale (≤33 rows/source) and value-domain-scale cuts: each
     # quartile's est/exact agg replayed the full window chain otherwise
-    merged = summ.select(
+    merged = cut(summ.select(
         "v", "source", "r", F.sum("wt").over(wmerge).alias("cum")
-    ).crossJoin(F.broadcast(tot)).localCheckpoint(eager=True)
+    ).crossJoin(F.broadcast(tot)))
     # truth side: distinct values with exact cumulative counts
-    truth = (
+    truth = cut(
         vals.groupBy("v")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
         .select(
@@ -1905,7 +1904,6 @@ def quantile_merge_summaries_docs(spark: SparkSession, sf_dir: str) -> DataFrame
             ).alias("cum_true"),
         )
         .crossJoin(F.broadcast(tot))
-        .localCheckpoint(eager=True)
     )
     out = []
     for p_micro in (250000, 500000, 750000):
@@ -2047,11 +2045,11 @@ def conformal_coverage_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # classifier pass (tokenize + logistic) — 4 full-text scans in one
     # plan. One eager cut of the 16-byte-per-row (doc_id, nc) frame runs
     # the classifier once; everything downstream is integer arithmetic
-    # on the cut blocks. A/B + plan pair in OPTIMIZATION_r15.md.
-    scored = inference.classifier_scores(docs, "doc_id", "text").select(
+    # on the cut blocks. No A/B timing was recorded.
+    scored = cut(inference.classifier_scores(docs, "doc_id", "text").select(
         F.col("id").alias("doc_id"),
         (F.lit(1000000) - F.col("score_micro")).cast("long").alias("nc"),
-    ).localCheckpoint(eager=True)
+    ))
     cal = scored.filter(F.col("doc_id") % 5 == 0)
     ev = scored.filter(F.col("doc_id") % 5 != 0)
     n_cal = cal.agg(F.count(F.lit(1)).cast("long").alias("n_cal"))
@@ -2660,11 +2658,10 @@ def mmr_diversify_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (ce→sims, s1, st2, st3) and each would otherwise replay the
     # corpus×queries rel pass + window — the covariance_embeddings r14
     # lesson (per-branch pruning defeats ReuseExchange)
-    cand = (
+    cand = cut(
         rel.withColumn("rn", F.row_number().over(wq))
         .filter(F.col("rn") <= 8)
         .select("qid", "doc_id", "rel_micro")
-        .localCheckpoint(eager=True)
     )
     ce = cand.join(
         emb.select(F.col("vec_id").alias("doc_id"), "embedding"), "doc_id"
@@ -2673,7 +2670,7 @@ def mmr_diversify_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = ce.select("qid", F.col("doc_id").alias("db"), F.col("embedding").alias("eb"))
     # eager cut at the candidate×candidate similarity table (≤ 112 rows):
     # three consumers (st2, st3 twice), each would replay the emb rejoin
-    sims = (
+    sims = cut(
         a.join(b, "qid")
         .filter(F.col("da") != F.col("db"))
         .select(
@@ -2685,7 +2682,6 @@ def mmr_diversify_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 + F.lit(0.5)
             ).cast("long").alias("sim_micro"),
         )
-        .localCheckpoint(eager=True)
     )
     w1 = W.partitionBy("qid").orderBy(
         F.col("rel_micro").desc(), F.col("doc_id").asc()
@@ -4316,13 +4312,13 @@ def forecast_mase_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     day = F.datediff(
         F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")
     ).cast("long")
-    daily = ev.groupBy(F.col("event_type"), day.alias("d")).agg(
-        F.count(F.lit(1)).cast("long").alias("c")
     # r15 (duplicate-scan audit tail): lag7/lag1 and both join left sides
     # each replayed the events scan + (type, day) agg — 4 scans in one
     # plan → 1 behind an eager cut of the |types|·|days|-row daily table.
-    # A/B + plan pair in OPTIMIZATION_r15.md.
-    ).localCheckpoint(eager=True)
+    # No A/B timing was recorded.
+    daily = cut(ev.groupBy(F.col("event_type"), day.alias("d")).agg(
+        F.count(F.lit(1)).cast("long").alias("c")
+    ))
     lag7 = daily.select(
         "event_type", (F.col("d") + 7).alias("d"), F.col("c").alias("c7")
     )
@@ -4485,10 +4481,10 @@ def wasserstein_pairs_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     # once behind an eager cut, and every coarser aggregate derives from
     # it (Σ counts per source ≡ per-source count; distinct buckets of the
     # count table ≡ distinct buckets of the corpus — value-identical).
-    # A/B + plan pair in OPTIMIZATION_r15.md.
-    counts = per.groupBy("source", "b").agg(
+    # No A/B timing was recorded.
+    counts = cut(per.groupBy("source", "b").agg(
         F.count(F.lit(1)).cast("long").alias("c")
-    ).localCheckpoint(eager=True)
+    ))
     totals = counts.groupBy("source").agg(
         F.sum("c").cast("long").alias("n")
     )
@@ -4738,11 +4734,10 @@ def assoc_triples_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     # generated JVM-side from the sorted per-basket frequent-item set
     # after the shuffle. Eager cut: nb / supp / pairs / triples would each
     # replay the basket agg otherwise.
-    baskets = (
+    baskets = cut(
         li.select(F.col("l_orderkey").alias("bid"), F.col("l_partkey").alias("item"))
         .groupBy("bid")
         .agg(F.sort_array(F.collect_set("item")).alias("ss"))
-        .localCheckpoint(eager=True)
     )
     nb = baskets.agg(F.count(F.lit(1)).cast("long").alias("n_baskets"))
     supp = (
@@ -4757,12 +4752,11 @@ def assoc_triples_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # per-basket sorted FREQUENT-item set (explode → broadcast-join →
     # regroup rides the existing bid partitioning: no new exchange)
-    fs = (
+    fs = cut(  # reused by pairs AND triple counting
         baskets.select("bid", F.explode("ss").alias("item"))
         .join(F.broadcast(freq_items), "item")
         .groupBy("bid")
         .agg(F.sort_array(F.collect_set("item")).alias("fs"))
-        .localCheckpoint(eager=True)  # reused by pairs AND triple counting
     )
     pairs = (
         fs.filter(F.size("fs") >= 2)
@@ -4781,7 +4775,7 @@ def assoc_triples_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n_ab") >= F.expr("greatest(2, n_baskets div 10000)"))
         .select("a", "b")
     )
-    pairs = pairs.localCheckpoint(eager=True)  # reused 3x below
+    pairs = cut(pairs)  # reused 3x below
     # candidate generation: join pairs sharing the first item
     cand = (
         pairs.alias("x")
@@ -4907,10 +4901,8 @@ def rolling_wau_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r15 (duplicate-scan audit tail): dau, the 7-day explode, and the
     # bounds agg each replayed the events scan + (user, day) distinct —
     # 3 scans+distincts in one plan → 1 behind an eager cut of the
-    # distinct (user, day) table. A/B + plan pair in OPTIMIZATION_r15.md.
-    active = ev.select("user_id", day.alias("d")).distinct().localCheckpoint(
-        eager=True
-    )
+    # distinct (user, day) table. No A/B timing was recorded.
+    active = cut(ev.select("user_id", day.alias("d")).distinct())
     dau = active.groupBy("d").agg(
         F.countDistinct("user_id").cast("long").alias("dau")
     )
@@ -4996,19 +4988,19 @@ def mad_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whole upstream). Eager cuts of the two |event_type|-row frames pin
     # each percentile pass to run once: 6 events scans → 3 (the three
     # genuinely distinct passes — median, MAD, outlier count).
-    # A/B + plan pair in OPTIMIZATION_r15.md.
-    med = ev.groupBy("event_type").agg(
+    # No A/B timing was recorded.
+    med = cut(ev.groupBy("event_type").agg(
         F.expr("percentile(cents, 0.5)").alias("med_c")
-    ).localCheckpoint(eager=True)
+    ))
     dev = ev.join(F.broadcast(med), "event_type").select(
         "event_type",
         "med_c",
         F.abs(F.col("cents") - F.col("med_c")).alias("adev"),
     )
-    mad = dev.groupBy("event_type").agg(
+    mad = cut(dev.groupBy("event_type").agg(
         F.max("med_c").alias("med_c"),
         F.expr("percentile(adev, 0.5)").alias("mad_c"),
-    ).localCheckpoint(eager=True)
+    ))
     out = (
         dev.select("event_type", "adev")
         .join(F.broadcast(mad.select("event_type", "mad_c")), "event_type")
@@ -5190,7 +5182,7 @@ def int8_recall_qc_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda v: F.floor(v / F.col("_scale") + F.lit(0.5)).cast("long"),
         ).alias("q"),
     )
-    staged = staged.localCheckpoint(eager=True)
+    staged = cut(staged)
     qside = staged.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("qid"),
         F.col("embedding").alias("qv"),
@@ -5457,9 +5449,9 @@ def cluster_keywords_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14: eager cut at the distinct-token stream — it feeds BOTH the
     # corpus-df agg and the per-cluster tf agg, and each branch would
     # otherwise replay the tokenize+explode over the full corpus
-    toks = docs.select(
+    toks = cut(docs.select(
         "doc_id", F.explode(F.array_distinct(tokens(F.col("text")))).alias("t")
-    ).localCheckpoint(eager=True)
+    ))
     n_docs = docs.agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
     df_t = toks.groupBy("t").agg(
         F.countDistinct("doc_id").cast("long").alias("df")

@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.text_functions import md5_hash60
+from ..session import cut
 
 
 def hash_sample(
@@ -307,7 +308,6 @@ def assign_contiguous_ids(
     order_cols: list,
     id_col: str = "row_id",
     n_buckets: int = 64,
-    materialize: bool = True,
 ) -> DataFrame:
     """0-based CONTIGUOUS ids in ``order_cols`` order — the training-data
     primitive behind sample manifests, sequence packing, and resumable
@@ -339,10 +339,8 @@ def assign_contiguous_ids(
     # (shuffle_ids' md5 ran 3x). The callers pass metadata-scale (id, key)
     # projections, so the checkpoint is bounded. Cuts computed from the
     # materialized blocks are identical to cuts from the source: same
-    # rows, same approxQuantile sketch. r15: ``materialize=False`` opts
-    # out for already-materialized inputs (lazy-construction contract).
-    if materialize:
-        df = df.localCheckpoint(eager=True)
+    # rows, same approxQuantile sketch.
+    df = cut(df)
     qs = [i / n_buckets for i in range(1, n_buckets)]
     # n_buckets=1 -> no cuts, one bucket (approxQuantile rejects an empty
     # probability list)
@@ -423,12 +421,11 @@ def dsir_importance(
     # r14: eager cut at the (doc, bucket, count) table — the bucket
     # log-ratio chain and the final per-doc dot product would each replay
     # the corpus tokenize+shingle+explode otherwise
-    doc_b = (
+    doc_b = cut(
         grams.groupBy(
             id_col, "is_target", F.pmod(md5_hash60(F.col("g")), n_buckets).alias("b")
         )
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
     )
     bs = doc_b.groupBy("b").agg(
         F.sum("c").alias("cr"),

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.vector_functions import cosine_similarity
+from ..session import cut
 
 
 def cosine_topk(
@@ -549,10 +550,9 @@ def covariance_matrix(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
     # localCheckpoint of the d(d+1)/2+d+1-row reduction (~KBs at any
     # corpus size) runs the scan ONCE; eager, not lazy, so concurrent
     # broadcast subtrees cannot race the materialization.
-    agg = (
+    agg = cut(
         partials.groupBy("p")
         .agg(F.sum("s").alias("s"))
-        .localCheckpoint(eager=True)
     )
     n_df = agg.filter(F.col("p") == n_tri + dim).select(F.col("s").alias("n"))
     means = agg.filter(
@@ -1198,7 +1198,6 @@ def pq_ivf_topk(
     k: int = 8,
     n_iter: int = 2,
     topk: int = 5,
-    materialize: bool = True,
 ) -> DataFrame:
     """IVF-PQ composition (FAISS's IVFPQ shape, here without residual
     re-encoding — by_residual=False): a coarse quantizer routes each
@@ -1220,11 +1219,7 @@ def pq_ivf_topk(
     # r14: eager cut of the tiny query frame — it feeds the probe
     # assignment AND the ADC LUT, and each replay is a full corpus
     # TakeOrdered when the caller passes emb.orderBy(...).limit(q).
-    # r15: ``materialize=False`` opts out for already-materialized
-    # query frames (lazy-construction contract; avoids the
-    # double-checkpoint a pre-cut caller would otherwise pay).
-    if materialize:
-        queries = queries.localCheckpoint(eager=True)
+    queries = cut(queries)
     assigned = ivf_assign(
         corpus.select(F.col(id_col), F.col(vec_col)), cents,
         vec_col=vec_col, n_probe=1,

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import tokens
+from ..session import cut
 
 
 def _mg_merge_shrink(counters: dict, batch_counts: dict, k: int) -> dict:
@@ -184,7 +185,6 @@ def cms_table(
     text_col: str,
     depth: int = 4,
     width: int = 1024,
-    materialize: bool = True,
 ) -> DataFrame:
     """Count-Min sketch of the token stream as a (row, col, cnt) table
     (Cormode & Muthukrishnan, J.Alg 2005): row i counts tokens at column
@@ -209,14 +209,12 @@ def cms_table(
     # executor-local footprint drops from corpus-scale to |vocab| (the
     # r14 ADVICE executor-loss/footprint finding), and each branch now
     # hashes |vocab| rows instead of every token occurrence.
-    # ``materialize=False`` opts out (lazy-construction contract).
     tok = (
         df.select(F.explode(tokens(F.col(text_col))).alias("t"))
         .groupBy("t")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    if materialize:
-        tok = tok.localCheckpoint(eager=True)
+    tok = cut(tok)
     rows = [
         tok.select(
             F.lit(i).alias("row"),

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import cut
+
 
 def zscore_outliers(
     df: DataFrame,
@@ -173,12 +175,12 @@ def psi_by_group(
     # and the total folds into the same plan as a broadcast scalar
     # (Σ counts ≡ df.count(); (n_total + n_bins) cast to double is the
     # bit-identical divisor float(n_total + n_bins) was).
-    # A/B in OPTIMIZATION_r15.md.
-    counts = (
+    # No A/B timing was recorded.
+    counts = cut(
         df.select(F.col(group_col).alias("grp"), bucket.alias("bkt"))
         .groupBy("grp", "bkt")
         .agg(F.count(F.lit(1)).alias("c"))
-    ).localCheckpoint(eager=True)
+    )
     base = counts.groupBy("bkt").agg(F.sum("c").alias("cq"))
     nt = counts.agg(F.sum("c").cast("long").alias("n_total"))
     n_bins = max_pow + 1
@@ -299,10 +301,10 @@ def ks_by_group(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     # and n_all each replayed the corpus scan + (group, value) agg — 4-5
     # scans in one plan → 1 behind an eager cut of the
     # |groups|·|distinct values|-row count table (metadata-scale by the
-    # docstring's own grid argument). A/B in OPTIMIZATION_r15.md.
-    gv = df.groupBy(F.col(group_col).alias("grp"), F.col(value_col).alias("v")).agg(
+    # docstring's own grid argument). No A/B timing was recorded.
+    gv = cut(df.groupBy(F.col(group_col).alias("grp"), F.col(value_col).alias("v")).agg(
         F.count(F.lit(1)).alias("c")
-    ).localCheckpoint(eager=True)
+    ))
     vals = gv.groupBy("v").agg(F.sum("c").alias("c_all"))
     groups = gv.groupBy("grp").agg(F.sum("c").alias("n_g"))
     n_all = vals.agg(F.sum("c_all").alias("n_all"))
@@ -371,10 +373,10 @@ def chi_square_independence(
     # r15 (duplicate-scan audit tail): ra, cb, n, and the grid's left join
     # each replayed the corpus scan + contingency agg — 4 scans in one
     # plan → 1 behind an eager cut of the |levels_a|·|levels_b|-row
-    # table. A/B in OPTIMIZATION_r15.md.
-    ab = df.groupBy(F.col(a_col).alias("a"), F.col(b_col).alias("b")).agg(
+    # table. No A/B timing was recorded.
+    ab = cut(df.groupBy(F.col(a_col).alias("a"), F.col(b_col).alias("b")).agg(
         F.count(F.lit(1)).alias("c")
-    ).localCheckpoint(eager=True)
+    ))
     ra = ab.groupBy("a").agg(F.sum("c").alias("ra"))
     cb = ab.groupBy("b").agg(F.sum("c").alias("cb"))
     n = ab.agg(F.sum("c").alias("n"))

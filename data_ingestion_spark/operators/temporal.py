@@ -22,6 +22,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ..session import cut
+
 
 def asof_join(
     left: DataFrame,
@@ -326,7 +328,6 @@ def funnel_steps(
     ts_col: str,
     steps: Sequence[str],
     window: str = "7 days",
-    materialize: bool = True,
 ) -> DataFrame:
     """Ordered-step conversion funnel — a greedy funnel anchored at each
     user's EARLIEST step-0 event, a deliberate RESTRICTION of ClickHouse
@@ -358,17 +359,13 @@ def funnel_steps(
     """
     # r14: eager cut of the 3-column step-filtered stream — each stage's
     # right side re-scanned the event source otherwise (see
-    # window_funnel_exact; same rationale). r15: ``materialize=False``
-    # opts out for callers that pass an already-materialized stream
-    # (lazy-construction contract — building a plan that is never
-    # collected must not run jobs at call time).
+    # window_funnel_exact; same rationale).
     ev = events.select(
         F.col(user_col).alias("u"),
         F.col(type_col).alias("et"),
         F.col(ts_col).alias("t"),
     ).filter(F.col(type_col).isin(list(steps)))
-    if materialize:
-        ev = ev.localCheckpoint(eager=True)
+    ev = cut(ev)
     reached = (
         ev.filter(F.col("et") == steps[0])
         .groupBy("u")
@@ -419,7 +416,6 @@ def window_funnel_exact(
     ts_col: str,
     steps: Sequence[str],
     window: str = "7 days",
-    materialize: bool = True,
 ) -> DataFrame:
     """EXACT ClickHouse ``windowFunnel('strict_increase')`` semantics:
     the anchor slides across EVERY step-0 event — a user reaches step *i*
@@ -453,14 +449,12 @@ def window_funnel_exact(
     # r14: eager cut of the 3-column step-filtered stream — every stage's
     # right side re-scanned the event source otherwise (the combo query
     # funnel_windowfunnel_exact_events held 13 event scans in one plan).
-    # r15: ``materialize=False`` opt-out, same contract as funnel_steps.
     ev = events.select(
         F.col(user_col).alias("u"),
         F.col(type_col).alias("et"),
         F.col(ts_col).alias("t"),
     ).filter(F.col(type_col).isin(list(steps)))
-    if materialize:
-        ev = ev.localCheckpoint(eager=True)
+    ev = cut(ev)
     reached = (
         ev.filter(F.col("et") == steps[0])
         .select("u", F.col("t").alias("t0"))

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import bpe_ish_tokens, md5_hash60, stopword_hits, tokens, word_shingles
+from ..session import cut
 
 #: PII patterns — dialect-portable (identical semantics in Java regex and
 #: RE2/DuckDB: no lookaround, no backrefs), kept in lockstep with the
@@ -189,10 +190,9 @@ def tfidf_top_terms(
     )
     # r14: eager cut at the (id, term, tf) table — dfreq and the scored
     # join would each replay the corpus tokenize+explode+agg otherwise
-    tf = (
+    tf = cut(
         toks.groupBy("id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=True)
     )
     dfreq = tf.groupBy("term").agg(F.countDistinct("id").alias("df"))
     # N fetched driver-side (one-row action, like IVF's centroid seeds) and
@@ -732,10 +732,9 @@ def bm25_topk(
     # r14: eager cut at the term-filtered tf table (≤|q| rows per doc) —
     # dfreq and the scored join would each replay the corpus
     # tokenize+explode pass otherwise
-    tf = (
+    tf = cut(
         hits.groupBy("id", "term")
         .agg(F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl"))
-        .localCheckpoint(eager=True)
     )
     dfreq = tf.groupBy("term").agg(F.countDistinct("id").alias("df"))
     stats = df.select(
@@ -886,16 +885,15 @@ def lm_perplexity_scores(
     # and BOTH bigram subtrees (the c2 vocab agg and the per-doc scoring
     # stream), so the tokenize would otherwise run 3x in the final plan
     # plus once for the |vocab| action below
-    base = df.select(
+    base = cut(df.select(
         F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks")
-    ).localCheckpoint(eager=True)
+    ))
     # vocab-scale cut: the |vocab| driver action and the scored join both
     # consume the unigram table
-    uni = (
+    uni = cut(
         base.select(F.explode("toks").alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c1"))
-        .localCheckpoint(eager=True)
     )
     v = uni.count()  # |vocab|: bounded driver metadata
     bigrams = base.filter(F.size("toks") >= 2).select(
@@ -1066,7 +1064,7 @@ def bpe_train(
         # round. localCheckpoint cuts the lineage on cadence so a 32k-merge
         # run never grows a deep plan.
         if (round_no + 1) % checkpoint_every == 0:
-            vocab = vocab.localCheckpoint(eager=True)
+            vocab = cut(vocab)
     base.unpersist()
     return merges
 
@@ -1481,9 +1479,7 @@ def kneser_ney_bigrams(
     # r14: eager cut at the bigram-type table — it feeds FOUR consumers
     # (the |bigrams| driver count, left, right, and the scored join) and
     # each would otherwise replay the corpus bigram explode+agg
-    c2 = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2")).localCheckpoint(
-        eager=True
-    )
+    c2 = cut(bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2")))
     left = c2.groupBy("w1").agg(
         F.sum("c2").alias("c1"), F.count(F.lit(1)).alias("n1p_fw")
     )
@@ -1549,19 +1545,16 @@ def nb_classify(df: DataFrame, id_col: str, label_col: str, text_col: str) -> Da
     # tokenize ran 4x in the final plan); ``dt`` feeds the model chain and
     # the score join; ``ct`` feeds the class totals, the vocab, and the
     # dense-grid left join — every one a separate replay otherwise
-    base = df.select(
+    base = cut(df.select(
         F.col(id_col), F.col(label_col).alias("_label"), tokens(F.col(text_col)).alias("toks")
-    ).filter(F.size("toks") >= 1).localCheckpoint(eager=True)
-    dt = (
+    ).filter(F.size("toks") >= 1))
+    dt = cut(
         base.select(id_col, "_label", F.explode("toks").alias("t"))
         .groupBy(id_col, "_label", "t")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
     )
     # class-token counts, class totals, global vocab — all vocab-collapsed
-    ct = dt.groupBy("_label", "t").agg(F.sum("c").alias("nct")).localCheckpoint(
-        eager=True
-    )
+    ct = cut(dt.groupBy("_label", "t").agg(F.sum("c").alias("nct")))
     cls = ct.groupBy("_label").agg(F.sum("nct").alias("nc"))
     vocab = ct.select("t").distinct()
     v_size = vocab.agg(F.count(F.lit(1)).alias("v"))

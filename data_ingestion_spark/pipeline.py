@@ -26,14 +26,13 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass
-from datetime import datetime, timezone
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .errors import FetchError, IngestionError, ParseError
-from .logs import IngestionLogWriter
+from .logs import IngestionLogWriter, utcnow
 from .rules import DEFAULT_RULES, RuleSet
 from .sinks.parquet_sink import ParquetSink
 from .sources.dispatch import extract_file_type, parse_file
@@ -93,8 +92,7 @@ class IngestionPipeline:
         return f"{file.bucket}/{file.key}"
 
     def process_file(self, file: FileToProcess) -> IngestResult:
-        start = datetime.now(timezone.utc).replace(tzinfo=None)
-        log_id: Optional[str] = None
+        start = utcnow()
         try:
             # Step 1: config match (ingestion_service.rs:49-55)
             rule = self.rules.match_or_raise(file.key)
@@ -117,8 +115,7 @@ class IngestionPipeline:
         except IngestionError as ex:
             if not self.compat_reference_logs:
                 # upgrade: early failures get a log row too (vs §2.3 L3 gap)
-                log_id = self.log.insert_log(file.file_name)
-                self.log.finalize_log(log_id, file.file_name, start, False, str(ex))
+                self.log.log_failure(file.file_name, start, str(ex))
             raise
 
         # Step 5: enrich + log + insert (ingestion_service.rs:79-116)

@@ -365,27 +365,13 @@ _PRIORITY = [
 
 def merged_queries() -> dict:
     """All query registries merged, ``_PRIORITY`` names first."""
+    from ..operators import registry, registry2, registry3
     from . import advanced, ingestion, relational, tpch, tpch2, tpch3
 
-    sources = [relational, tpch, tpch2, tpch3, advanced, ingestion]
-    try:
-        from ..operators import registry as ops_registry
-
-        sources.append(ops_registry)
-    except ImportError:
-        pass
-    try:
-        from ..operators import registry2 as ops_registry2
-
-        sources.append(ops_registry2)
-    except ImportError:
-        pass
-    try:
-        from ..operators import registry3 as ops_registry3
-
-        sources.append(ops_registry3)
-    except ImportError:
-        pass
+    sources = [
+        relational, tpch, tpch2, tpch3, advanced, ingestion,
+        registry, registry2, registry3,
+    ]
     pool: dict = {}
     for mod in sources:
         # A name registered twice would SILENTLY shadow the earlier

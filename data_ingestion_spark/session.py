@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -118,6 +118,22 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
         if dtype == "timestamp_ntz":
             df = df.withColumn(col, F.col(col).cast("timestamp"))
     return df
+
+
+def cut(df: DataFrame, eager: bool = True) -> DataFrame:
+    """Cut ``df``'s lineage: the package's one place that decides how.
+
+    Eager (the default) runs one job now and returns a frame that reads
+    the stored blocks, so every later consumer skips the upstream work.
+    Lazy stores the blocks during the first action that reads the frame.
+
+    Fault-tolerance trade-off: the blocks are executor-local
+    (``localCheckpoint``), so losing an executor fails the query instead
+    of recomputing it. The cluster-scale remedy is a reliable
+    ``checkpoint(eager=True)`` to a shared checkpoint directory here; it
+    is deliberately not added until a deployment needs it.
+    """
+    return df.localCheckpoint(eager=eager)
 
 
 def register_tables(spark: SparkSession, sf_dir: str, tables=TABLES) -> None:

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import tableformat
+from ..session import cut
 from .neardup_stream import band_keys, simhash_expr
 
 
@@ -155,7 +156,7 @@ def neardup_batch(
         state = _state_or_empty(
             spark, state_root, "band_key string, doc_id long, simhash long"
         )
-        banded = (
+        banded = cut(  # feeds 3 passes below
             batch_df.select(
                 F.col("doc_id"), simhash_expr(F.col("text")).alias("simhash")
             )
@@ -165,7 +166,6 @@ def neardup_batch(
                 "simhash",
                 F.explode(band_keys(F.col("simhash"))).alias("band_key"),
             )
-            .localCheckpoint(eager=True)  # feeds 3 passes below
         )
         ham = lambda a, b: F.bit_count(a.bitwiseXOR(b))  # noqa: E731
 

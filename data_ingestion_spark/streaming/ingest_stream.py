@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..errors import IngestionError
+from ..logs import utcnow
 from ..pipeline import FileToProcess, IngestionPipeline
 
 #: Fixed schema of the binaryFile source (streams can't infer at start).
@@ -106,10 +107,7 @@ class IngestionStreamLoop:
                 # keep processing the batch's siblings
                 name = os.path.basename(unquote(urlparse(url).path))
                 self.failures.append((name, str(ex)))
-                log_id = self.pipeline.log.insert_log(name)
-                self.pipeline.log.finalize_log(
-                    log_id, name, _utcnow_naive(), False, str(ex)
-                )
+                self.pipeline.log.log_failure(name, utcnow(), str(ex))
                 continue
             if file.file_name in done:
                 self.skipped.append(file.file_name)
@@ -220,9 +218,8 @@ class SqsFrontDoorLoop:
                     if r["bucket"] and r["key"]
                     else "<sqs-message>"
                 )
-                log_id = self.pipeline.log.insert_log(name)
-                self.pipeline.log.finalize_log(
-                    log_id, name, _utcnow_naive(), False, f"s3-event: {r['status']}"
+                self.pipeline.log.log_failure(
+                    name, utcnow(), f"s3-event: {r['status']}"
                 )
                 continue
             file = FileToProcess(bucket=r["bucket"], key=r["key"])
@@ -255,9 +252,3 @@ class SqsFrontDoorLoop:
         q = self.start(available_now=True)
         q.awaitTermination()
         return self.results
-
-
-def _utcnow_naive():
-    from datetime import datetime, timezone
-
-    return datetime.now(timezone.utc).replace(tzinfo=None)

@@ -43,6 +43,7 @@ from __future__ import annotations
 from typing import Callable, Optional
 
 from ..errors import IngestionError
+from ..logs import utcnow
 from ..pipeline import FileToProcess, IngestionPipeline
 
 #: statuses that can never succeed on redelivery → ack after audit-logging
@@ -110,10 +111,7 @@ class SqsIngestLoop:
         """Poison record → Failed audit row (warn-as-data, not log text)."""
         self.warns[status] = self.warns.get(status, 0) + 1
         name = f"{bucket}/{key}" if bucket and key else "<sqs-message>"
-        log_id = self.pipeline.log.insert_log(name)
-        self.pipeline.log.finalize_log(
-            log_id, name, _utcnow_naive(), False, f"s3-event: {status}"
-        )
+        self.pipeline.log.log_failure(name, utcnow(), f"s3-event: {status}")
 
     def poll_once(self) -> int:
         """One receive → process → ack cycle; returns the number of
@@ -187,9 +185,3 @@ class SqsIngestLoop:
             if self.poll_once() == 0:
                 break
         return self.results
-
-
-def _utcnow_naive():
-    from datetime import datetime, timezone
-
-    return datetime.now(timezone.utc).replace(tzinfo=None)

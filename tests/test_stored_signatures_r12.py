@@ -265,7 +265,7 @@ def test_minhash_stored_shingles_equals_inline(spark, tmp_path):
             load_table(spark, sf, "documents"),
             id_col="doc_id", text_col="text", k=3,
             jaccard_distance_threshold=0.7, hash_fn=portable, band_r=2,
-            materialize=True, prehash_fn=prehash,
+            prehash_fn=prehash,
         ).collect()
     }
     assert got == inline and got
