@@ -21,6 +21,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -134,6 +135,42 @@ def cut(df: DataFrame, eager: bool = True) -> DataFrame:
     is deliberately not added until a deployment needs it.
     """
     return df.localCheckpoint(eager=eager)
+
+
+def _sql_literal(value, field: T.StructField) -> str:
+    if value is None:
+        if not field.nullable:
+            raise ValueError(f"field {field.name} is not nullable but got None")
+        return f"CAST(NULL AS {field.dataType.simpleString()})"
+    if isinstance(field.dataType, T.StringType):
+        # hex-encoded UTF-8: no quoting or escaping for any string content
+        lit = f"CAST(X'{value.encode('utf-8').hex()}' AS STRING)"
+    elif isinstance(field.dataType, T.TimestampType):
+        # the instant createDataFrame stores for the same datetime
+        lit = f"timestamp_micros({T.TimestampType().toInternal(value)})"
+    else:
+        raise TypeError(f"local_frame supports string and timestamp fields, not {field.dataType}")
+    # an inline table's column is nullable iff one of its expressions is:
+    # keep a nullable field nullable in a batch that holds a value
+    return f"if(true, {lit}, NULL)" if field.nullable else lit
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """A few driver-side rows as a one-partition frame with ``schema``.
+
+    The rows become a ``VALUES`` local relation that the JVM builds
+    itself, so no Python worker runs and a write of the frame is one task
+    and one file. ``createDataFrame(list)`` instead splits the rows into
+    ``defaultParallelism`` slices that a Python worker re-serialises, one
+    task per slice; ``coalesce(1)`` on that frame makes one task drive
+    every slice, which is slower still (SCALING.md).
+    """
+    values = ", ".join(
+        "(" + ", ".join(_sql_literal(v, f) for v, f in zip(row, schema.fields)) + ")"
+        for row in rows
+    )
+    names = ", ".join(f"`{name}`" for name in schema.fieldNames())
+    return spark.sql(f"SELECT * FROM VALUES {values} AS t({names})").coalesce(1)
 
 
 def register_tables(spark: SparkSession, sf_dir: str, tables=TABLES) -> None:

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 _FORMATS = ("parquet", "orc")
@@ -35,14 +35,21 @@ class ParquetSink:
     def insert_documents(self, target_table: str, df: DataFrame) -> int:
         """Append df to the target table; returns the row count written
         (the reference returns inserted ids; counts are what its audit layer
-        actually consumes — ingestion_service.rs:77)."""
-        if not df.columns:
-            return 0  # empty-batch short-circuit (data_repo.rs:23-26)
-        n = df.count()
-        if n == 0:
+        actually consumes — ingestion_service.rs:77).
+
+        The count is an ``Observation`` on the write itself, so the input
+        is read once. A zero-row frame writes nothing, creates no table
+        directory and returns 0 (data_repo.rs:23-26): Spark would write a
+        schema-only part file for it, which ``mergeSchema`` readers would
+        fold into the table's columns. Two jobs per call, the ``isEmpty``
+        probe and the write."""
+        if not df.columns or df.isEmpty():
             return 0
-        df.write.mode("append").format(self.fmt).save(self.table_path(target_table))
-        return n
+        written = Observation()
+        df.observe(written, F.count(F.lit(1)).alias("rows")).write.mode("append").format(
+            self.fmt
+        ).save(self.table_path(target_table))
+        return written.get["rows"]
 
     def read_table(self, target_table: str) -> DataFrame:
         return (

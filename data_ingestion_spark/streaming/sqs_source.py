@@ -42,12 +42,19 @@ from __future__ import annotations
 
 from typing import Callable, Optional
 
+from pyspark.sql import types as T
+
 from ..errors import IngestionError
 from ..logs import utcnow
 from ..pipeline import FileToProcess, IngestionPipeline
+from ..session import local_frame
 
 #: statuses that can never succeed on redelivery → ack after audit-logging
 _POISON = {"invalid_json", "no_records", "missing_bucket_or_key"}
+
+_BODIES = T.StructType(
+    [T.StructField("msg_id", T.StringType()), T.StructField("body", T.StringType())]
+)
 
 
 def make_sqs_client(region_name: Optional[str] = None):
@@ -127,9 +134,10 @@ class SqsIngestLoop:
 
         from .s3_events import s3_event_files
 
-        bodies = self.pipeline.spark.createDataFrame(
+        bodies = local_frame(
+            self.pipeline.spark,
             [(m["MessageId"], m.get("Body") or "") for m in messages],
-            "msg_id string, body string",
+            _BODIES,
         )
         # bounded collect: ≤ max_messages bodies × records per event —
         # queue-control metadata, never file contents
