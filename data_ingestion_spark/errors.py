@@ -21,6 +21,3 @@ class ParseError(IngestionError):
     """Parser-level failure, including the unsupported-file-type rejection
     (reference: parser_adapter.rs:54-57, xml_parser.rs:66-69)."""
 
-
-class SinkError(IngestionError):
-    """Write to the target table failed (reference: data_repo.rs insert paths)."""

@@ -114,7 +114,8 @@ class IngestionLogWriter:
         the streaming loops: a micro-batch re-offered after a crash must
         not re-ingest files that already completed (files are
         immutable-once-landed, the S3-event contract). Empty set when no
-        log exists yet.
+        log exists yet; a log that exists but cannot be read raises, since
+        an empty guard would re-ingest every file of the batch.
 
         Invariant: each log_id has at most one row with end_time set,
         because every writer finalizes an entry once (``process_file``'s
@@ -122,19 +123,12 @@ class IngestionLogWriter:
         log_id is a finalized Success" (``current_status``) is the plain
         filter below: one job and no shuffle. Driver-side and bounded by
         the audit log."""
-        import glob as _glob
-
-        if not _glob.glob(os.path.join(self.path, "*.parquet")) and not os.path.isdir(
-            self.path
-        ):
+        if not os.path.isdir(self.path):
             return set()
-        try:
-            rows = (
-                self.read()
-                .filter((F.col("status") == "Success") & F.col("end_time").isNotNull())
-                .select("file_name")
-                .collect()
-            )
-        except Exception:  # noqa: BLE001 — unreadable/absent log = no guard
-            return set()
+        rows = (
+            self.read()
+            .filter((F.col("status") == "Success") & F.col("end_time").isNotNull())
+            .select("file_name")
+            .collect()
+        )
         return {r["file_name"] for r in rows}

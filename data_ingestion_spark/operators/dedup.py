@@ -10,9 +10,10 @@ Four tiers, cheapest first — the standard LLM-corpus dedup ladder:
    pairs restricted to cheap blocks (lang × length bucket). Exact within a
    block; the block join bounds the O(n²) blowup. This is also the oracle
    for the approximate tiers.
-3. **MinHash LSH** — `pyspark.ml.feature.MinHashLSH` over HashingTF shingle
-   vectors; `approxSimilarityJoin` keeps the candidate set sub-quadratic via
-   banding. The 100 TB path: cost ~ O(n · bands) shuffle, never all-pairs.
+3. **MinHash LSH** — `minhash_near_dup`: xxhash64 minhashes over word
+   shingles in codegen'd JVM expressions; banding keeps the candidate set
+   sub-quadratic. The 100 TB path: cost ~ O(n · bands) shuffle, never
+   all-pairs.
 4. **SimHash** — 60-bit rotation-invariant signature (md5-derived token
    hashes, bitwise majority vote); near-dups share signatures in most bands.
    Entirely JVM-side bit arithmetic, cross-checkable in SQL.
@@ -37,11 +38,6 @@ SIMHASH_BITS = 60
 # --------------------------------------------------------------------------
 # Tier 1: exact
 # --------------------------------------------------------------------------
-def exact_dedup(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """Keep one row per distinct key (any row): hash-based shuffle dedup."""
-    return df.dropDuplicates(cols) if cols else df.dropDuplicates()
-
-
 def exact_dedup_representatives(
     df: DataFrame, content_col: str, id_col: str
 ) -> DataFrame:
@@ -723,48 +719,6 @@ def minhash_incremental_pairs(
         .join(sb, "batch_id")
         .select("corpus_id", "batch_id", F.round(jac, 4).alias("est_jaccard"))
         .filter(F.col("est_jaccard") >= 1.0 - jaccard_distance_threshold)
-    )
-
-
-def minhash_near_dup_ml(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    num_hash_tables: int = 8,
-    num_features: int = 1 << 18,
-    jaccard_distance_threshold: float = 0.8,
-    seed: int = 42,
-) -> DataFrame:
-    """ml.feature.MinHashLSH variant (HashingTF → MinHashLSH →
-    approxSimilarityJoin). Kept as the library-API reference implementation;
-    ~10× slower than minhash_near_dup at equal recall because keyDistance
-    evaluates sparse vectors per candidate outside codegen."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    base = (
-        df.select(F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks"))
-        .filter(F.size("toks") >= k)
-        .select("id", word_shingles(F.col("toks"), k).alias("shingles"))
-    )
-    tf = HashingTF(
-        inputCol="shingles", outputCol="features", numFeatures=num_features, binary=True
-    )
-    feats = tf.transform(base)
-    lsh = MinHashLSH(
-        inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=seed
-    )
-    model = lsh.fit(feats)
-    pairs = model.approxSimilarityJoin(
-        feats, feats, jaccard_distance_threshold, distCol="jaccard_distance"
-    )
-    return (
-        pairs.filter(F.col("datasetA.id") < F.col("datasetB.id"))
-        .select(
-            F.col("datasetA.id").alias("id_a"),
-            F.col("datasetB.id").alias("id_b"),
-            F.round(F.lit(1.0) - F.col("jaccard_distance"), 4).alias("est_jaccard"),
-        )
     )
 
 

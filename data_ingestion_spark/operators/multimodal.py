@@ -402,11 +402,6 @@ def resize_nearest(arr, width: int, height: int):
     return arr[ys][:, xs]
 
 
-def png_resize_codec(data: bytes, width: int, height: int) -> bytes:
-    """decode → nearest-neighbor resize → encode, all stdlib."""
-    return png_encode(resize_nearest(png_decode(data), width, height))
-
-
 # ---------------------------------------------------------------------------
 # Pure-stdlib WAV PCM codec (RIFF spec): the audio analog of the PNG codec
 # above — decode/encode 16-bit PCM with no external libraries, so waveform

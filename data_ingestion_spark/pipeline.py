@@ -17,8 +17,7 @@ Cross-cutting semantics preserved (SURVEY.md §3.4):
 
 Deliberate upgrades (each flagged):
 - failures in steps 1-4 ARE logged (the reference only logs insert-phase
-  failures — SURVEY.md §2.3 L3); pass ``compat_reference_logs=True`` to
-  replicate the reference's no-log-row-on-early-failure gap
+  failures — SURVEY.md §2.3 L3): every failed file has its Failed audit row
 - CSV delimiter/has_headers honored (reference ignores them, §2.2 P4)
 """
 
@@ -76,7 +75,6 @@ class IngestionPipeline:
         warehouse_dir: str,
         rules: Optional[RuleSet] = None,
         base_dir: Optional[str] = None,
-        compat_reference_logs: bool = False,
     ) -> None:
         self.spark = spark
         self.rules = rules if rules is not None else DEFAULT_RULES
@@ -84,7 +82,6 @@ class IngestionPipeline:
         self.base_dir = base_dir
         self.sink = ParquetSink(spark, warehouse_dir)
         self.log = IngestionLogWriter(spark, warehouse_dir)
-        self.compat_reference_logs = compat_reference_logs
 
     def path_for(self, file: FileToProcess) -> str:
         if self.base_dir is not None:
@@ -113,9 +110,8 @@ class IngestionPipeline:
                 # normalize so failures are loggable and typed
                 raise ParseError(f"Failed to parse {file.file_name}: {ex}") from ex
         except IngestionError as ex:
-            if not self.compat_reference_logs:
-                # upgrade: early failures get a log row too (vs §2.3 L3 gap)
-                self.log.log_failure(file.file_name, start, str(ex))
+            # upgrade: early failures get a log row too (vs §2.3 L3 gap)
+            self.log.log_failure(file.file_name, start, str(ex))
             raise
 
         # Step 5: enrich + log + insert (ingestion_service.rs:79-116)

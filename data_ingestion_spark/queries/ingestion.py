@@ -19,6 +19,7 @@ from ..operators import stores
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..errors import IngestionError
 from ..pipeline import IngestionPipeline
 from ..rules import DEFAULT_RULES
 
@@ -28,7 +29,8 @@ def _run_pipeline(spark: SparkSession, files: dict, keys: list[str], rules=None)
     pipeline (fresh warehouse per call — queries must be rerunnable).
     File values: str → text file; callable → invoked with the target path
     (e.g. the xlsx writer). ``rules`` overrides DEFAULT_RULES (e.g. the
-    opt-in pdf route)."""
+    opt-in pdf route). A key whose sink write failed raises its message,
+    so the query fails with the root cause, not on the unwritten table."""
     tmp = stores.scratch_dir("ingestq_")
     landing = os.path.join(tmp, "landing")
     bucket = os.path.join(landing, "qbucket")
@@ -47,7 +49,9 @@ def _run_pipeline(spark: SparkSession, files: dict, keys: list[str], rules=None)
         base_dir=landing,
     )
     for key in keys:
-        pipe.process_key("qbucket", key)
+        result = pipe.process_key("qbucket", key)
+        if result.status == "Failed":
+            raise IngestionError(result.message)
     return pipe
 
 

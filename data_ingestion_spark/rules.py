@@ -74,13 +74,6 @@ def rules_from_dicts(rows: list[dict[str, Any]]) -> RuleSet:
     return RuleSet(out)
 
 
-def rules_from_dataframe(df) -> RuleSet:
-    """Load rules from a (small) DataFrame — rule tables are tiny (the
-    reference seeds 7 rows, migration.js:5-51), so collecting to the driver
-    is the right plan at any scale."""
-    return rules_from_dicts([r.asDict() for r in df.collect()])
-
-
 #: The reference's seed rules (migration.js:5-51), kept as the default so the
 #: out-of-the-box routing behavior matches the shipped system.
 DEFAULT_RULES = RuleSet(

@@ -59,7 +59,10 @@ class ParquetSink:
         )
 
     def table_exists(self, target_table: str) -> bool:
-        return os.path.exists(self.table_path(target_table))
+        """True once a write to the table committed. A write that fails
+        mid-job leaves its directory behind, empty, so the directory alone
+        says nothing; the committer's ``_SUCCESS`` marker does."""
+        return os.path.exists(os.path.join(self.table_path(target_table), "_SUCCESS"))
 
 
 def write_partitioned(

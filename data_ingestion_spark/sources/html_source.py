@@ -176,14 +176,6 @@ def _html_parser(spark: SparkSession, path: str, parser_config=None) -> DataFram
         raise ParseError(f"Failed to parse HTML: {ex}") from ex
 
 
-def register_html_parser(overwrite: bool = False) -> None:
-    """Opt into HTML ingestion (S5 plug-in API). NOT called at import time
-    — the default pipeline rejects HTML exactly like the reference."""
-    from .dispatch import register_parser
-
-    register_parser("html", _html_parser, overwrite=overwrite)
-
-
 @contextmanager
 def html_parser_registered():
     """Scoped registration (register on enter, restore on exit)."""

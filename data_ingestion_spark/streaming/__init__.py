@@ -2,10 +2,13 @@
 
 The reference's only "stream" is an SQS long-poll loop feeding the per-file
 pipeline (src/ecs_service.rs:113-174) — no event-time semantics anywhere.
-This package rebuilds that loop on Structured Streaming (ingest_stream) and
-adds the event-time operators Spark unlocks for free once the loop is a real
-stream: watermarked tumbling/sliding/session windows (event_time) and a
-custom stateful sessionizer (sessionize).
+This package rebuilds that loop with three front doors — a landing-dir
+file stream and an SQS-message stream (ingest_stream), and a boto3-shaped
+SQS receive/delete adapter (sqs_source) — which differ only in source and
+decode: every receive goes through one shared per-receive step (receive).
+It adds the event-time operators Spark unlocks for free once the loop is a
+real stream: watermarked tumbling/sliding/session windows (event_time) and
+a custom stateful sessionizer (sessionize).
 """
 
 from .event_time import (
@@ -15,7 +18,7 @@ from .event_time import (
     tumbling_window_counts,
 )
 from .ingest_stream import IngestionStreamLoop, SqsFrontDoorLoop
-from .s3_events import S3_EVENT_SCHEMA, files_to_process, s3_event_files
+from .s3_events import S3_EVENT_SCHEMA, s3_event_files
 from .sqs_source import SqsIngestLoop, make_sqs_client
 from .stream_joins import dedup_events, interval_join
 
@@ -25,7 +28,6 @@ __all__ = [
     "SqsIngestLoop",
     "make_sqs_client",
     "S3_EVENT_SCHEMA",
-    "files_to_process",
     "s3_event_files",
     "dedup_events",
     "interval_join",

@@ -12,8 +12,8 @@ DataFrame lives (a Kinesis/Kafka/SQS-connector stream at scale, a plain
 DataFrame in tests). No Python touches the JSON. Malformed shapes don't
 throw: every input row becomes an output row with a ``status`` column
 (``ok`` / ``missing_bucket_or_key`` / ``no_records`` / ``invalid_json``),
-so the caller can route warnings to the audit log — same information the
-reference emits as log lines, but as data.
+and ``receive.event_records`` routes the warnings to the audit log — same
+information the reference emits as log lines, but as data.
 
 Keys are passed through EXACTLY as the event carries them (the reference
 does not URL-decode either — S3 event keys are percent-encoded, so a
@@ -109,26 +109,3 @@ def s3_event_files(
         *keep, bucket.alias("bucket"), key.alias("key"), status.alias("status")
     )
 
-
-def files_to_process(df: DataFrame, body_col: str = "body"):
-    """Decoded valid files as driver-side ``FileToProcess`` objects, plus
-    skipped-record counts — the drop-in front end for users keeping the
-    SQS queue: feed each message batch through here, hand the files to
-    ``IngestionPipeline.process_file``, log the warn counts.
-
-    The collect is bounded by the SQS receive size (≤10 messages × records
-    per event), never corpus-scale.
-    """
-    from ..pipeline import FileToProcess
-
-    decoded = s3_event_files(df, body_col).collect()
-    files = [
-        FileToProcess(bucket=r["bucket"], key=r["key"])
-        for r in decoded
-        if r["status"] == "ok"
-    ]
-    warns: dict[str, int] = {}
-    for r in decoded:
-        if r["status"] != "ok":
-            warns[r["status"]] = warns.get(r["status"], 0) + 1
-    return files, warns

@@ -11,8 +11,10 @@ sinks/document_sink.py) — tests drive a fake client; production passes
 ``boto3.client("sqs")`` or nothing and gets one lazily. Each receive batch
 is decoded by the SAME ``s3_events.s3_event_files`` DataFrame transform the
 streaming path uses (narrow JVM ``from_json``, no Python in the parse), and
-each decoded file runs the SAME per-file batch pipeline
-(``IngestionPipeline.process_file``).
+the decoded records go through the SAME per-receive step as the stream
+front doors (``receive.FrontDoor.ingest``: replay guard, poison audit,
+per-file ``IngestionPipeline.process_file``); what stays here is the
+receive and the per-message ack.
 
 Deliberate upgrades over the reference (SURVEY.md §3.4):
 
@@ -44,13 +46,10 @@ from typing import Callable, Optional
 
 from pyspark.sql import types as T
 
-from ..errors import IngestionError
-from ..logs import utcnow
-from ..pipeline import FileToProcess, IngestionPipeline
+from ..pipeline import IngestionPipeline
 from ..session import local_frame
-
-#: statuses that can never succeed on redelivery → ack after audit-logging
-_POISON = {"invalid_json", "no_records", "missing_bucket_or_key"}
+from .receive import FrontDoor, event_records
+from .s3_events import s3_event_files
 
 _BODIES = T.StructType(
     [T.StructField("msg_id", T.StringType()), T.StructField("body", T.StringType())]
@@ -75,7 +74,7 @@ def make_sqs_client(region_name: Optional[str] = None):
     return boto3.client("sqs", region_name=region_name)  # pragma: no cover
 
 
-class SqsIngestLoop:
+class SqsIngestLoop(FrontDoor):
     """Receive → decode → per-file ingest → delete-on-success.
 
     ``client`` is any object with the boto3 SQS surface used here:
@@ -94,16 +93,12 @@ class SqsIngestLoop:
         max_messages: int = 10,
         wait_time_seconds: int = 20,
     ) -> None:
-        self.pipeline = pipeline
+        super().__init__(pipeline)
         self.queue_url = queue_url
         self._client = client
         self._client_factory = client_factory or make_sqs_client
         self.max_messages = max_messages
         self.wait_time_seconds = wait_time_seconds
-        self.results: list = []  # IngestResult per successfully ingested file
-        self.failures: list[tuple[str, str]] = []  # (file_name, error)
-        self.warns: dict[str, int] = {}  # poison-status tallies
-        self.skipped: list[str] = []  # already-Success files seen on redelivery
         self.deleted: int = 0  # messages acked
         self.redelivered: int = 0  # messages left on the queue for retry
 
@@ -112,13 +107,6 @@ class SqsIngestLoop:
         if self._client is None:
             self._client = self._client_factory()
         return self._client
-
-    # ------------------------------------------------------------------
-    def _audit_warn(self, bucket: Optional[str], key: Optional[str], status: str) -> None:
-        """Poison record → Failed audit row (warn-as-data, not log text)."""
-        self.warns[status] = self.warns.get(status, 0) + 1
-        name = f"{bucket}/{key}" if bucket and key else "<sqs-message>"
-        self.pipeline.log.log_failure(name, utcnow(), f"s3-event: {status}")
 
     def poll_once(self) -> int:
         """One receive → process → ack cycle; returns the number of
@@ -132,8 +120,6 @@ class SqsIngestLoop:
         if not messages:
             return 0
 
-        from .s3_events import s3_event_files
-
         bodies = local_frame(
             self.pipeline.spark,
             [(m["MessageId"], m.get("Body") or "") for m in messages],
@@ -146,32 +132,21 @@ class SqsIngestLoop:
         for r in decoded:
             by_msg[r["msg_id"]].append(r)
 
-        done = self.pipeline.log.successful_files()
+        # messages in receive order, each one's records sorted by (bucket, key)
+        owned = [(m["MessageId"], rec) for m in messages
+                 for rec in event_records(by_msg[m["MessageId"]])]
+        settled = self.ingest([rec for _, rec in owned])
+        # a message with a failed file stays for redelivery; poison records
+        # are settled (audited), so their message is acked
+        retry = {msg_id for (msg_id, _), ok in zip(owned, settled) if not ok}
         for m in messages:
-            ok_to_delete = True
-            for r in sorted(
-                by_msg[m["MessageId"]],
-                key=lambda r: (r["bucket"] or "", r["key"] or ""),
-            ):
-                if r["status"] != "ok":
-                    self._audit_warn(r["bucket"], r["key"], r["status"])
-                    continue  # poison: audited, still acked
-                file = FileToProcess(bucket=r["bucket"], key=r["key"])
-                if file.file_name in done:
-                    self.skipped.append(file.file_name)
-                    continue
-                try:
-                    self.results.append(self.pipeline.process_file(file))
-                except IngestionError as ex:
-                    self.failures.append((file.file_name, str(ex)))
-                    ok_to_delete = False  # leave message for redelivery
-            if ok_to_delete:
+            if m["MessageId"] in retry:
+                self.redelivered += 1
+            else:
                 self.client.delete_message(
                     QueueUrl=self.queue_url, ReceiptHandle=m["ReceiptHandle"]
                 )
                 self.deleted += 1
-            else:
-                self.redelivered += 1
         return len(messages)
 
     def run(self, max_polls: Optional[int] = None) -> list:

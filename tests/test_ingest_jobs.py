@@ -14,9 +14,11 @@ import os
 from datetime import datetime
 
 import pytest
+from front_doors import DOORS, run_receive
 from pyspark.sql import functions as F
 
 from data_ingestion_spark.logs import LOG_SCHEMA, IngestionLogWriter
+from data_ingestion_spark.pipeline import IngestionPipeline
 from data_ingestion_spark.session import local_frame
 from data_ingestion_spark.sinks.parquet_sink import ParquetSink
 
@@ -99,6 +101,40 @@ def test_zero_row_frame_writes_nothing(spark, tmp_path, warehouse):
     assert not sink.table_exists("empty")
 
 
+def test_failed_write_leaves_no_table_and_raises_its_cause(spark, tmp_path, monkeypatch):
+    from data_ingestion_spark import pipeline as pipeline_mod
+    from data_ingestion_spark.errors import IngestionError
+    from data_ingestion_spark.queries.ingestion import _run_pipeline
+
+    def poisoned_parse(spark, path, ftype, parser_config):
+        # the empty-probe job reads partition 0; the write fails on the last
+        ids = spark.range(0, 100, numPartitions=4)
+        bad = F.raise_error(F.lit("row 90 is poisoned"))
+        return ids.select(F.when(F.col("id") == 90, bad).otherwise(F.col("id")).alias("id"))
+
+    monkeypatch.setattr(pipeline_mod, "parse_file", poisoned_parse)
+    (tmp_path / "b").mkdir()
+    (tmp_path / "b" / "a.csv").write_text("h\n1\n")
+    pipe = IngestionPipeline(spark, warehouse_dir=str(tmp_path / "wh"), base_dir=str(tmp_path))
+    result = pipe.process_key("b", "a.csv")
+    assert result.status == "Failed" and "row 90 is poisoned" in result.message
+    assert os.path.isdir(pipe.sink.table_path("csv_data"))  # the failed job's leftover
+    assert not pipe.sink.table_exists("csv_data")
+    with pytest.raises(IngestionError, match="row 90 is poisoned"):
+        _run_pipeline(spark, {"uploads/a.csv": "h\n1\n"}, ["uploads/a.csv"])
+
+
+def test_unreadable_audit_log_fails_the_replay_guard(spark, warehouse):
+    log = IngestionLogWriter(spark, warehouse)
+    log.log_failure("a.csv", datetime(2024, 1, 2), "seed")
+    with open(os.path.join(log.path, "part-corrupt.parquet"), "wb") as fh:
+        fh.write(b"not parquet")
+    # an empty guard would let the batch re-ingest every file it names
+    with pytest.raises(Exception) as err:
+        log.successful_files()
+    assert "part-corrupt.parquet" in str(err.value)
+
+
 def test_replay_guard_is_one_shuffle_free_job(spark, warehouse):
     log = IngestionLogWriter(spark, warehouse)
     t = datetime(2024, 5, 6, 7, 8, 9)
@@ -127,6 +163,28 @@ def test_replay_guard_is_one_shuffle_free_job(spark, warehouse):
         .collect()
     }
     assert done == by_status == {"ok.csv", "retried.csv", "again.csv"}
+
+
+@pytest.mark.parametrize("door", DOORS)
+def test_one_receive_reads_the_guard_once_in_one_job(spark, tmp_path, door):
+    landing = tmp_path / "landing"
+    (landing / "bkt").mkdir(parents=True)
+    keys = ["a.csv", "b.json", "c.csv"]
+    for key in keys:
+        (landing / "bkt" / key).write_text('[{"k": 1}]' if key.endswith(".json") else "h\n1\n")
+    pipe = IngestionPipeline(spark, warehouse_dir=str(tmp_path / "wh"), base_dir=str(landing))
+    pipe.log.log_failure("earlier.csv", datetime(2024, 1, 1), "seed")  # a log to read
+    read, guard_jobs = pipe.log.successful_files, []
+
+    def guard():
+        done, jobs, _, _ = _measure(spark, read)
+        guard_jobs.append(jobs)
+        return done
+
+    pipe.log.successful_files = guard
+    loop = run_receive(door, pipe, str(landing), [("bkt", k) for k in keys], str(tmp_path))
+    assert guard_jobs == [1]
+    assert sorted(r.file_name for r in loop.results) == [f"bkt/{k}" for k in keys]
 
 
 def test_log_timestamps_round_trip(spark, warehouse):

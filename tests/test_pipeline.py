@@ -102,16 +102,6 @@ def test_unsupported_type_rejected_and_logged(spark, warehouse, bucket):
     assert "Unsupported file type" in logs[0]["message"]
 
 
-def test_compat_reference_logs_gap(spark, warehouse, bucket):
-    # compat flag replicates the reference's no-log-row-on-early-failure
-    import os
-
-    pipe = make_pipeline(spark, warehouse, bucket, compat_reference_logs=True)
-    with pytest.raises(ConfigError):
-        pipe.process_key("test-bucket", "uploads/report.pdf")
-    assert not os.path.exists(pipe.log.path)
-
-
 def test_no_rule_match(spark, warehouse, bucket):
     pipe = make_pipeline(spark, warehouse, bucket)
     with pytest.raises(ConfigError, match="No configuration found"):

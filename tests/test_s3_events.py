@@ -12,7 +12,8 @@ from __future__ import annotations
 import json
 
 from data_ingestion_spark.pipeline import IngestionPipeline
-from data_ingestion_spark.streaming import files_to_process, s3_event_files
+from data_ingestion_spark.streaming import s3_event_files
+from data_ingestion_spark.streaming.receive import FrontDoor, event_records
 
 
 def _event(bucket: str, key: str) -> str:
@@ -104,13 +105,16 @@ def test_files_to_process_feeds_pipeline_end_to_end(spark, tmp_path):
         ],
         ["body"],
     )
-    files, warns = files_to_process(bodies)
-    assert [f.file_name for f in files] == ["stream-bucket/uploads/a.csv"]
-    assert warns == {"missing_bucket_or_key": 1}
+    records = event_records(s3_event_files(bodies).collect())
+    assert [r.file.file_name for r in records if r.file] == ["stream-bucket/uploads/a.csv"]
 
+    # the decoded receive through the step every front door shares
     pipe = IngestionPipeline(
         spark, warehouse_dir=str(tmp_path / "wh"), base_dir=str(landing)
     )
-    results = [pipe.process_file(f) for f in files]
-    assert results[0].rows == 2
+    door = FrontDoor(pipe)
+    assert door.ingest(records) == [True, True]
+    assert door.warns == {"missing_bucket_or_key": 1}
+    assert door.failures == [] and door.skipped == []
+    assert [r.rows for r in door.results] == [2]
     assert pipe.sink.read_table("csv_data").count() == 2
