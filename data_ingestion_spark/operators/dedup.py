@@ -575,6 +575,25 @@ def _minhash_bands(
     return base, exploded
 
 
+def _jaccard_verify(cand: DataFrame, base_a: DataFrame, base_b: DataFrame,
+                    a: str, b: str, min_jaccard: float) -> DataFrame:
+    """Candidate pairs ``(a, b)`` with their exact shingle Jaccard
+    ``est_jaccard`` (4 dp) from ``base_a``/``base_b``, kept at ``min_jaccard``."""
+    sa = base_a.select(F.col("id").alias(a), F.col("shingles").alias("sh_a"))
+    sb = base_b.select(F.col("id").alias(b), F.col("shingles").alias("sh_b"))
+    # |A ∪ B| = |A| + |B| − |A ∩ B| (shingles distinct by construction)
+    # — the r9 union-free verify, value-identical to array_union
+    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
+    union = F.size("sh_a") + F.size("sh_b") - inter
+    jac = inter.cast("double") / union.cast("double")
+    return (
+        cand.join(sa, a)
+        .join(sb, b)
+        .select(a, b, F.round(jac, 4).alias("est_jaccard"))
+        .filter(F.col("est_jaccard") >= min_jaccard)
+    )
+
+
 def minhash_near_dup(
     df: DataFrame,
     id_col: str,
@@ -638,18 +657,8 @@ def minhash_near_dup(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    sa = base.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a"))
-    sb = base.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b"))
-    # |A ∪ B| = |A| + |B| − |A ∩ B| (shingles distinct by construction)
-    # — the r9 union-free verify, value-identical to array_union
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = inter.cast("double") / union.cast("double")
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select("id_a", "id_b", F.round(jac, 4).alias("est_jaccard"))
-        .filter(F.col("est_jaccard") >= 1.0 - jaccard_distance_threshold)
+    return _jaccard_verify(
+        cand, base, base, "id_a", "id_b", 1.0 - jaccard_distance_threshold
     )
 
 
@@ -707,18 +716,8 @@ def minhash_incremental_pairs(
         )
         .dropDuplicates(["corpus_id", "batch_id"])
     )
-    sa = cbase.select(F.col("id").alias("corpus_id"), F.col("shingles").alias("sh_a"))
-    sb = bbase.select(F.col("id").alias("batch_id"), F.col("shingles").alias("sh_b"))
-    # |A ∪ B| = |A| + |B| − |A ∩ B| (shingles distinct by construction)
-    # — the r9 union-free verify, value-identical to array_union
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = inter.cast("double") / union.cast("double")
-    return (
-        cand.join(sa, "corpus_id")
-        .join(sb, "batch_id")
-        .select("corpus_id", "batch_id", F.round(jac, 4).alias("est_jaccard"))
-        .filter(F.col("est_jaccard") >= 1.0 - jaccard_distance_threshold)
+    return _jaccard_verify(
+        cand, cbase, bbase, "corpus_id", "batch_id", 1.0 - jaccard_distance_threshold
     )
 
 
@@ -750,6 +749,37 @@ def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return agg.select(F.col("id"), sig.alias("simhash"))
 
 
+def band_keys(sig: Column, n_bands: int, band_bits: int, shift=F.shiftright) -> Column:
+    """``(band, key)`` structs: the ``n_bands`` low-to-high ``band_bits``-bit
+    chunks of the signature ``sig``, cut with ``shift``."""
+    return F.array(
+        *[
+            F.struct(
+                F.lit(bi).alias("band"),
+                shift(sig, bi * band_bits)
+                .bitwiseAND(F.lit((1 << band_bits) - 1))
+                .alias("key"),
+            )
+            for bi in range(n_bands)
+        ]
+    )
+
+
+def hamming_verify(joined: DataFrame, sig: str, max_hamming: int) -> DataFrame:
+    """Distinct ``(id_a, id_b, hamming)`` of a band join of sides ``a``/``b``
+    whose signatures ``sig`` differ in at most ``max_hamming`` bits."""
+    cand = joined.select(
+        F.col("a.id").alias("id_a"),
+        F.col("b.id").alias("id_b"),
+        F.col(f"a.{sig}").alias("sig_a"),
+        F.col(f"b.{sig}").alias("sig_b"),
+    ).dropDuplicates(["id_a", "id_b"])
+    hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
+    return cand.select("id_a", "id_b", hamming.alias("hamming")).filter(
+        F.col("hamming") <= max_hamming
+    )
+
+
 def simhash_hamming_pairs(
     sig_df: DataFrame, max_hamming: int = 3, band_bits: int = 15
 ) -> DataFrame:
@@ -757,32 +787,12 @@ def simhash_hamming_pairs(
     60/band_bits chunks; pairs agreeing on ≥1 band (pigeonhole guarantee for
     hamming ≤ bands-1) are verified with an exact popcount filter."""
     n_bands = SIMHASH_BITS // band_bits
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(bi).alias("band"),
-                F.shiftright(F.col("simhash"), bi * band_bits)
-                .bitwiseAND(F.lit((1 << band_bits) - 1))
-                .alias("key"),
-            )
-            for bi in range(n_bands)
-        ]
-    )
+    bands = band_keys(F.col("simhash"), n_bands, band_bits)
     exploded = sig_df.select("id", "simhash", F.explode(bands).alias("bk"))
     a, b = exploded.alias("a"), exploded.alias("b")
-    cand = (
-        a.join(b, (F.col("a.bk") == F.col("b.bk")) & (F.col("a.id") < F.col("b.id")))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.simhash").alias("sig_a"),
-            F.col("b.simhash").alias("sig_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-    return cand.select("id_a", "id_b", hamming.alias("hamming")).filter(
-        F.col("hamming") <= max_hamming
+    return hamming_verify(
+        a.join(b, (F.col("a.bk") == F.col("b.bk")) & (F.col("a.id") < F.col("b.id"))),
+        "simhash", max_hamming,
     )
 
 
@@ -809,19 +819,7 @@ def simhash_multiprobe_pairs(
     base = sig_df.select(
         "id",
         "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        F.shiftright(F.col("simhash"), bi * band_bits)
-                        .bitwiseAND(F.lit((1 << band_bits) - 1))
-                        .alias("key"),
-                    )
-                    for bi in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
+        F.explode(band_keys(F.col("simhash"), n_bands, band_bits)).alias("bk"),
     ).select("id", "simhash", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
     flips = [0] + [1 << i for i in range(band_bits)]
     probe = base.select(
@@ -832,25 +830,14 @@ def simhash_multiprobe_pairs(
             F.array(*[F.col("key").bitwiseXOR(F.lit(fl)) for fl in flips])
         ).alias("key"),
     )
-    cand = (
-        probe.alias("a")
-        .join(
+    return hamming_verify(
+        probe.alias("a").join(
             base.alias("b"),
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.key") == F.col("b.key"))
             & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.simhash").alias("sig_a"),
-            F.col("b.simhash").alias("sig_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-    return cand.select("id_a", "id_b", hamming.alias("hamming")).filter(
-        F.col("hamming") <= max_hamming
+        ),
+        "simhash", max_hamming,
     )
 
 

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import cut
+from .dedup import band_keys, hamming_verify
 from .jpeg_codec import jpeg_decode, jpeg_metadata
 
 #: magic-byte prefixes → format label (public file-signature table)
@@ -660,32 +661,12 @@ def phash_hamming_pairs(
         sig_df.filter(F.col(sig_col).isNotNull())
         .withColumnRenamed(sig_col, "__sig")
     )
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(bi).alias("band"),
-                F.shiftrightunsigned(F.col("__sig"), bi * band_bits)
-                .bitwiseAND(F.lit((1 << band_bits) - 1))
-                .alias("key"),
-            )
-            for bi in range(n_bands)
-        ]
-    )
+    bands = band_keys(F.col("__sig"), n_bands, band_bits, F.shiftrightunsigned)
     exploded = sig.select("id", "__sig", F.explode(bands).alias("bk"))
     a, b = exploded.alias("a"), exploded.alias("b")
-    cand = (
-        a.join(b, (F.col("a.bk") == F.col("b.bk")) & (F.col("a.id") < F.col("b.id")))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.__sig").alias("h_a"),
-            F.col("b.__sig").alias("h_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    hamming = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
-    return cand.select("id_a", "id_b", hamming.alias("hamming")).filter(
-        F.col("hamming") <= max_hamming
+    return hamming_verify(
+        a.join(b, (F.col("a.bk") == F.col("b.bk")) & (F.col("a.id") < F.col("b.id"))),
+        "__sig", max_hamming,
     )
 
 

@@ -14,13 +14,211 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text_functions import BPE_ISH_PATTERN
+from ..functions.text_functions import BPE_ISH_PATTERN, md5_hash60
 from ..session import cut, load_table
 from . import cdc, dedup, sampling, similarity, skew, temporal, text
 
 # SQL fragments kept in lockstep with functions/text_functions.py
 _SQL_TOKENS = "list_filter(string_split_regex(lower({c}), '\\s+'), x -> x <> '')"
 _SQL_HASH60 = "(('0x' || substr(md5({c}), 1, 15))::BIGINT)"
+
+
+# Vector-search oracle fragments (DuckDB): seeds, k-means rounds, IVF lists.
+def _sql_seed_cents(limit) -> str:
+    """The ``limit`` lowest-vec_id embeddings as centroids ``(cid, cv)``."""
+    return f"""SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, embedding AS cv
+  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id
+        LIMIT {limit})"""
+
+
+def _sql_nearest_cid(src: str, cols: str = "vec_id, cid") -> str:
+    """Each embedding's highest-dot centroid of ``src`` (cid tie-break)."""
+    return f"""SELECT {cols} FROM (
+    SELECT e.vec_id, c.cid,
+           row_number() OVER (PARTITION BY e.vec_id
+             ORDER BY list_inner_product(e.embedding::DOUBLE[],
+                                         c.cv::DOUBLE[]) DESC, c.cid ASC) AS rk
+    FROM embeddings e, {src} c
+  ) WHERE rk = 1"""
+
+
+def _sql_lloyd_ctes(k: int, n_iter: int) -> str:
+    """``cents0`` (the k lowest-id seeds), then per Lloyd round r the
+    assignment ``a{r}``, the per-dim means ``c{r}`` rounded 6 dp, and
+    their vectors ``c{r}l``."""
+    ctes = [f"cents0 AS (\n  {_sql_seed_cents(k)}\n)"]
+    for r in range(1, n_iter + 1):
+        prev = f"c{r - 1}l" if r > 1 else "cents0"
+        ctes += [
+            f"a{r} AS (\n  {_sql_nearest_cid(prev)}\n)",
+            f"""c{r} AS (
+  SELECT cid, i - 1 AS dim, round(avg(e.embedding[i]::DOUBLE), 6) AS c
+  FROM a{r} JOIN embeddings e USING (vec_id), generate_series(1, 64) s(i)
+  GROUP BY cid, i
+)""",
+            f"c{r}l AS (\n  SELECT cid, list(c ORDER BY dim) AS cv FROM c{r} GROUP BY cid\n)",
+        ]
+    return ", ".join(ctes)
+
+
+def _sql_ivf_rank(cols: str, sel: str, src: str, v: str = "e",
+                  where: str = "", keep: str = "rk = 1") -> str:
+    """Rows of ``embeddings {v}`` ranked over the centroids of ``src`` by
+    dot product (cid tie-break), kept where ``keep``."""
+    return f"""SELECT {cols} FROM (
+    SELECT {sel}, c.cid,
+           row_number() OVER (
+             PARTITION BY {v}.vec_id
+             ORDER BY list_inner_product({v}.embedding::DOUBLE[],
+                                         c.cv::DOUBLE[]) DESC, c.cid ASC
+           ) AS rk
+    FROM embeddings {v}, {src} c{where}
+  ) WHERE {keep}"""
+
+
+def _sql_ivf_corpus_assign(src: str) -> str:
+    """``corpus_assign``: every embedding on its best list of ``src``."""
+    return f"""corpus_assign AS (
+  {_sql_ivf_rank("neighbor_id, cv2, cid", "e.vec_id AS neighbor_id, e.embedding AS cv2", src)}
+)"""
+
+
+# Each query's 10 highest-cosine neighbors of ``scored``, ranked.
+_SQL_COSINE_TOP10 = """), ranked AS (
+  SELECT query_id, neighbor_id, cosine,
+         row_number() OVER (PARTITION BY query_id
+                            ORDER BY cosine DESC, neighbor_id ASC) AS rank
+  FROM scored
+)
+SELECT query_id, neighbor_id, cosine, CAST(rank AS INTEGER) AS rank
+FROM ranked WHERE rank <= 10"""
+
+
+def _sql_ivf_probe_topk(src: str) -> str:
+    """IVF search for queries vec_id < 5 over ``corpus_assign``: probe the
+    2 best lists of ``src``, score cosine there, keep the top 10."""
+    probe = _sql_ivf_rank("query_id, qv, cid", "q.vec_id AS query_id, q.embedding AS qv",
+                          src, "q", "\n    WHERE q.vec_id < 5", "rk <= 2")
+    return f"""query_probe AS (
+  {probe}
+), scored AS (
+  SELECT DISTINCT p.query_id, a.neighbor_id,
+         round(list_cosine_similarity(p.qv::DOUBLE[], a.cv2::DOUBLE[]), 6)
+           AS cosine
+  FROM query_probe p
+  JOIN corpus_assign a ON a.cid = p.cid
+  WHERE a.neighbor_id <> p.query_id
+{_SQL_COSINE_TOP10}"""
+
+
+def _sql_ivf_lists(n_lists: int) -> str:
+    """IVF coarse lists: ``cents`` (the n_lists lowest-id seeds) and
+    ``asg``, every embedding's ``list_id``."""
+    return f"""cents AS (
+  {_sql_seed_cents(n_lists)}
+), asg AS (
+  {_sql_nearest_cid("cents", "vec_id, cid AS list_id")}
+)"""
+
+
+def _sql_adc_topk(topk: int) -> str:
+    """The ``topk`` smallest ADC sums per query of ``sc`` (vec_id tie-break)."""
+    return f"""SELECT qid, vec_id, adc_micro, rk FROM (
+  SELECT qid, vec_id, adc_micro,
+         row_number() OVER (PARTITION BY qid
+                            ORDER BY adc_micro ASC, vec_id ASC)::INT AS rk
+  FROM sc
+) WHERE rk <= {topk} ORDER BY qid, rk"""
+
+
+def _sql_pq_dist(d_sub: int, vec: str) -> str:
+    """Squared L2 between a subvector of ``vec`` and the codeword list
+    ``b.cv`` (b = alias of a b{i}l books table)."""
+    return (
+        f"list_sum(list_transform(generate_series(1, {d_sub}), j -> "
+        f"({vec}[b.m * {d_sub} + j]::DOUBLE - b.cv[j])"
+        f" * ({vec}[b.m * {d_sub} + j]::DOUBLE - b.cv[j])))"
+    )
+
+
+def _sql_pq_training_ctes(m: int, k: int, d_sub: int, table: str = "embeddings",
+                          vec: str = "embedding") -> str:
+    """The PQ-training WITH-body over ``table``'s ``vec`` lists: seeds ->
+    b0/b0l -> two Lloyd rounds (assign, re-mean, empty-cluster coalesce)
+    -> b2l, then the encoding ``enc``."""
+    def nearest(books: str) -> str:  # each subvector's closest codeword
+        return f"""SELECT vec_id, m, code FROM (
+    SELECT d.vec_id, d.m, d.code,
+           row_number() OVER (PARTITION BY d.vec_id, d.m
+                              ORDER BY d.dist ASC, d.code ASC) AS rk
+    FROM (SELECT e.vec_id, b.m, b.code, {_sql_pq_dist(d_sub, 'e.' + vec)} AS dist
+          FROM {table} e, {books} b) d
+  ) WHERE rk = 1"""
+
+    # each round coalesces empty clusters against the PREVIOUS round's table
+    rounds = []
+    for i in (1, 2):
+        prev = f"b{i-1}"
+        rounds.append(f"""a{i} AS (
+  {nearest(prev + 'l')}
+), n{i} AS (
+  SELECT a.m, a.code, t.j - 1 AS dim,
+         round(avg(e.{vec}[a.m * {d_sub} + t.j]::DOUBLE), 6) AS c
+  FROM a{i} a JOIN {table} e USING (vec_id),
+       generate_series(1, {d_sub}) t(j)
+  GROUP BY 1, 2, 3
+), b{i} AS (
+  SELECT p.m, p.code, p.dim, coalesce(n{i}.c, p.c) AS c
+  FROM {prev} p LEFT JOIN n{i}
+    ON n{i}.m = p.m AND n{i}.code = p.code AND n{i}.dim = p.dim
+), b{i}l AS (
+  SELECT m, code, list(c ORDER BY dim) AS cv FROM b{i} GROUP BY m, code
+)""")
+    rounds_sql = ",\n".join(rounds)
+    return f"""seeds AS (
+  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS code, {vec}
+  FROM (SELECT vec_id, {vec} FROM {table} ORDER BY vec_id LIMIT {k})
+), b0 AS (
+  SELECT s.m, seeds.code, t.j - 1 AS dim,
+         seeds.{vec}[s.m * {d_sub} + t.j]::DOUBLE AS c
+  FROM seeds, (SELECT range::INT AS m FROM range(0, {m})) s,
+       generate_series(1, {d_sub}) t(j)
+), b0l AS (
+  SELECT m, code, list(c ORDER BY dim) AS cv FROM b0 GROUP BY m, code
+),
+{rounds_sql},
+enc AS (
+  {nearest('b2l')}
+)"""
+
+
+def _sql_winnow_fp(cols: str = "doc_id") -> str:
+    """``hs`` (each document's md5 5-gram hashes) and ``fp`` (its distinct
+    window-4 minima, ``winnow_hash``), both carrying ``cols``."""
+    return f"""hs AS (
+  SELECT {cols},
+         list_transform(
+           range(1, len(text) - 5 + 2),
+           i -> substr(md5(substr(text, i, 5)), 1, 15)
+         ) AS hs
+  FROM documents
+  WHERE len(text) >= 5 + 4 - 1
+), fp AS (
+  SELECT {cols},
+         unnest(list_distinct(list_transform(
+             range(1, len(hs) - 4 + 2),
+             i -> list_min(hs[i:i+3])
+         ))) AS winnow_hash
+  FROM hs
+)"""
+
+
+# SemDeDup's dynamic-k lists: max(8, n/64) lowest-id seeds, best-dot assign.
+_SQL_SEMDEDUP_LISTS = f"""cents AS (
+  {_sql_seed_cents("(SELECT greatest(8, count(*) // 64) FROM embeddings)")}
+), assign AS (
+  {_sql_ivf_rank("vec_id, embedding, cid", "e.vec_id, e.embedding", "cents")}
+)"""
 
 
 # --------------------------------------------------------------------------
@@ -53,8 +251,17 @@ def dedup_jaccard_pairs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DEDUP_JACCARD_PAIRS_DOCS_SQL = f"""
-WITH base AS (
+def _sql_jaccard(a: str = "a", b: str = "b") -> str:
+    """Exact Jaccard (4 dp) of the ``shingles`` sets of aliases ``a``, ``b``."""
+    return (
+        f"round(len(list_intersect({a}.shingles, {b}.shingles))::DOUBLE"
+        f" / len(list_distinct(list_concat({a}.shingles, {b}.shingles))), 4)"
+    )
+
+
+# Each document's 3-shingle list with its (lang, n_chars // 200) block keys,
+# and the same-block pairs of the non-empty ones.
+_SQL_SHINGLE_BLOCKS = f"""base AS (
   SELECT doc_id, lang, n_chars // 200 AS bucket,
          list_transform(
            generate_series(1, greatest(len(toks) - 2, 0)),
@@ -64,15 +271,16 @@ WITH base AS (
         FROM documents)
 ), nonempty AS (
   SELECT * FROM base WHERE len(shingles) > 0
-)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       round(len(list_intersect(a.shingles, b.shingles))::DOUBLE
-             / len(list_distinct(list_concat(a.shingles, b.shingles))), 4) AS jaccard
-FROM nonempty a
+)"""
+_SQL_BLOCKED_PAIRS = """FROM nonempty a
 JOIN nonempty b
-  ON a.lang IS NOT DISTINCT FROM b.lang AND a.bucket IS NOT DISTINCT FROM b.bucket AND a.doc_id < b.doc_id
-WHERE round(len(list_intersect(a.shingles, b.shingles))::DOUBLE
-            / len(list_distinct(list_concat(a.shingles, b.shingles))), 4) >= 0.3
+  ON a.lang IS NOT DISTINCT FROM b.lang AND a.bucket IS NOT DISTINCT FROM b.bucket AND a.doc_id < b.doc_id"""
+
+DEDUP_JACCARD_PAIRS_DOCS_SQL = f"""
+WITH {_SQL_SHINGLE_BLOCKS}
+SELECT a.doc_id AS id_a, b.doc_id AS id_b, {_sql_jaccard()} AS jaccard
+{_SQL_BLOCKED_PAIRS}
+WHERE {_sql_jaccard()} >= 0.3
 """
 
 
@@ -84,6 +292,85 @@ def _minhash_ab(i: int) -> tuple[int, int]:
     a = (1103515245 * i + 12345) % _MINHASH_P or 1
     b = (7919 * i + 17) % _MINHASH_P
     return a, b
+
+
+def _minhash_prehash(s):
+    # ONE md5 per shingle, shared by all tables via minhash_near_dup's
+    # prehash_fn hook (each table re-hashing would cost 8 md5 passes —
+    # Spark doesn't CSE across separate transform() lambda bodies).
+    return md5_hash60(s) % _MINHASH_P
+
+
+def _minhash_portable(h, i):
+    """Table ``i`` of the portable universal family over the prehash."""
+    a, b = _minhash_ab(i)
+    return h * F.lit(a) % _MINHASH_P + F.lit(b)
+
+
+# Exact Jaccard of the candidate pair's shingle sets (DuckDB oracle side).
+_SQL_MINHASH_JACCARD = _sql_jaccard("sa", "sb")
+# Candidate pairings of the banded join: (left name, right name, predicate).
+_MINHASH_PAIRS = ("id_a", "id_b", "a.id < b.id")
+_MINHASH_CROSS = ("corpus_id", "batch_id", "a.id % 2 = 0 AND b.id % 2 = 1")
+
+
+def _minhash_verify_sql(pairing: tuple, bound: str, cols: str = "") -> str:
+    """Candidates whose exact Jaccard reaches ``bound``, projected to
+    ``cols`` (default: both ids and the Jaccard as ``est_jaccard``)."""
+    a, b, _on = pairing
+    cols = cols or f"{a}, {b}, {_SQL_MINHASH_JACCARD} AS est_jaccard"
+    return f"""
+SELECT {cols}
+  FROM cand
+  JOIN base sa ON sa.id = cand.{a}
+  JOIN base sb ON sb.id = cand.{b}
+  WHERE {_SQL_MINHASH_JACCARD} >= {bound}"""
+
+
+def _minhash_oracle_sql(pairing: tuple, tail: str, *, blocked: bool = False,
+                        truth: str = "", num_hash_tables: int = 8,
+                        band_r: int = 2) -> str:
+    """DuckDB replay of the portable MinHash banding: the 3-shingle ``base``
+    (with the (lang, bucket) block keys when ``blocked``), an optional CTE
+    text ``truth`` spliced after it, the ``sigs``/``bands`` CTEs and the
+    distinct ``cand`` pairs of ``pairing``; ``tail`` continues the query."""
+    h = _SQL_HASH60.format(c="s")
+    mh = ",\n         ".join(
+        f"list_min(list_transform(shingles, s -> "
+        f"(({h} % {_MINHASH_P}) * {_minhash_ab(i)[0]} % {_MINHASH_P}"
+        f" + {_minhash_ab(i)[1]}))) AS mh{i}"
+        for i in range(num_hash_tables)
+    )
+    bands = " UNION ALL ".join(
+        "SELECT id, {bi} AS band, {key} AS key FROM sigs".format(
+            bi=bi,
+            key=" || ',' || ".join(
+                f"mh{bi * band_r + j}::VARCHAR" for j in range(band_r)
+            ),
+        )
+        for bi in range(num_hash_tables // band_r)
+    )
+    keys, cols = ("lang, n_chars // 200 AS bucket,", "lang, n_chars, ") if blocked else ("", "")
+    a, b, on = pairing
+    return f"""
+WITH base AS (
+  SELECT doc_id AS id, {keys}
+         list_distinct(list_transform(
+           generate_series(1, greatest(len(toks) - 2, 0)),
+           i -> array_to_string(list_slice(toks, i, i + 2), ' ')
+         )) AS shingles
+  FROM (SELECT doc_id, {cols}{_SQL_TOKENS.format(c='text')} AS toks FROM documents)
+  WHERE len(toks) >= 3
+){truth}, sigs AS (
+  SELECT id, {mh}
+  FROM base
+), bands AS (
+  {bands}
+), cand AS (
+  SELECT DISTINCT a.id AS {a}, b.id AS {b}
+  FROM bands a JOIN bands b
+    ON a.band = b.band AND a.key = b.key AND {on}
+){tail}"""
 
 
 def dedup_minhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -105,80 +392,20 @@ def dedup_minhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed values is order-free and idempotent under distinct), and the
     exact-Jaccard verify's intersect/union sizes are set-level. Output
     identical (equivalence pytest-pinned)."""
-    from ..functions import md5_hash60
-
     base, _fpos = dedup.shingle_base_probe(spark, sf_dir, k=3)
-
-    def prehash(s):
-        # ONE md5 per shingle, shared by all tables via minhash_near_dup's
-        # prehash_fn hook (each table re-hashing would cost 8 md5 passes —
-        # Spark doesn't CSE across separate transform() lambda bodies).
-        return md5_hash60(s) % _MINHASH_P
-
-    def portable(h, i):
-        a, b = _minhash_ab(i)
-        return h * F.lit(a) % _MINHASH_P + F.lit(b)
-
     return dedup.minhash_near_dup(
         None, id_col="doc_id", text_col="text", k=3,
         jaccard_distance_threshold=0.7,
-        hash_fn=portable,
+        hash_fn=_minhash_portable,
         band_r=2,
-        prehash_fn=prehash,
+        prehash_fn=_minhash_prehash,
         prebuilt_shingles=base.select("id", F.col("sset").alias("shingles")),
     ).orderBy("id_a", "id_b")
 
 
-def _minhash_oracle(num_hash_tables: int = 8, band_r: int = 2) -> str:
-    h = _SQL_HASH60.format(c="s")
-    mh = ",\n         ".join(
-        f"list_min(list_transform(shingles, s -> "
-        f"(({h} % {_MINHASH_P}) * {_minhash_ab(i)[0]} % {_MINHASH_P}"
-        f" + {_minhash_ab(i)[1]}))) AS mh{i}"
-        for i in range(num_hash_tables)
-    )
-    bands = " UNION ALL ".join(
-        "SELECT id, {bi} AS band, {key} AS key FROM sigs".format(
-            bi=bi,
-            key=" || ',' || ".join(
-                f"mh{bi * band_r + j}::VARCHAR" for j in range(band_r)
-            ),
-        )
-        for bi in range(num_hash_tables // band_r)
-    )
-    return f"""
-WITH base AS (
-  SELECT doc_id AS id,
-         list_distinct(list_transform(
-           generate_series(1, greatest(len(toks) - 2, 0)),
-           i -> array_to_string(list_slice(toks, i, i + 2), ' ')
-         )) AS shingles
-  FROM (SELECT doc_id, {_SQL_TOKENS.format(c='text')} AS toks FROM documents)
-  WHERE len(toks) >= 3
-), sigs AS (
-  SELECT id, {mh}
-  FROM base
-), bands AS (
-  {bands}
-), cand AS (
-  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.key = b.key AND a.id < b.id
+DEDUP_MINHASH_DOCS_SQL = _minhash_oracle_sql(
+    _MINHASH_PAIRS, _minhash_verify_sql(_MINHASH_PAIRS, "(1.0 - 0.7)")
 )
-SELECT id_a, id_b,
-       round(len(list_intersect(sa.shingles, sb.shingles))::DOUBLE
-             / len(list_distinct(list_concat(sa.shingles, sb.shingles))), 4)
-         AS est_jaccard
-FROM cand
-JOIN base sa ON sa.id = cand.id_a
-JOIN base sb ON sb.id = cand.id_b
-WHERE round(len(list_intersect(sa.shingles, sb.shingles))::DOUBLE
-            / len(list_distinct(list_concat(sa.shingles, sb.shingles))), 4)
-      >= (1.0 - 0.7)
-"""
-
-
-DEDUP_MINHASH_DOCS_SQL = _minhash_oracle()
 
 
 def dedup_incremental_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -195,82 +422,24 @@ def dedup_incremental_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-free over the identical set), and the exact-Jaccard verify is
     set-arithmetic over the same sets, so every emitted value is
     unchanged (same oracle)."""
-    from ..functions import md5_hash60
-
     base, _fpos = dedup.shingle_base_probe(spark, sf_dir, k=3)
     stored = base.select("id", F.col("sset").alias("shingles"))
-
-    def prehash(s):
-        return md5_hash60(s) % _MINHASH_P
-
-    def portable(h, i):
-        a, b = _minhash_ab(i)
-        return h * F.lit(a) % _MINHASH_P + F.lit(b)
-
     return dedup.minhash_incremental_pairs(
         None,
         None,
         id_col="doc_id", text_col="text", k=3,
         jaccard_distance_threshold=0.7,
-        hash_fn=portable,
+        hash_fn=_minhash_portable,
         band_r=2,
-        prehash_fn=prehash,
+        prehash_fn=_minhash_prehash,
         prebuilt_shingles_corpus=stored.filter(F.col("id") % 2 == 0),
         prebuilt_shingles_batch=stored.filter(F.col("id") % 2 == 1),
     ).orderBy("corpus_id", "batch_id")
 
 
-def _minhash_incremental_oracle(num_hash_tables: int = 8, band_r: int = 2) -> str:
-    h = _SQL_HASH60.format(c="s")
-    mh = ",\n         ".join(
-        f"list_min(list_transform(shingles, s -> "
-        f"(({h} % {_MINHASH_P}) * {_minhash_ab(i)[0]} % {_MINHASH_P}"
-        f" + {_minhash_ab(i)[1]}))) AS mh{i}"
-        for i in range(num_hash_tables)
-    )
-    bands = " UNION ALL ".join(
-        "SELECT id, {bi} AS band, {key} AS key FROM sigs".format(
-            bi=bi,
-            key=" || ',' || ".join(
-                f"mh{bi * band_r + j}::VARCHAR" for j in range(band_r)
-            ),
-        )
-        for bi in range(num_hash_tables // band_r)
-    )
-    return f"""
-WITH base AS (
-  SELECT doc_id AS id,
-         list_distinct(list_transform(
-           generate_series(1, greatest(len(toks) - 2, 0)),
-           i -> array_to_string(list_slice(toks, i, i + 2), ' ')
-         )) AS shingles
-  FROM (SELECT doc_id, {_SQL_TOKENS.format(c='text')} AS toks FROM documents)
-  WHERE len(toks) >= 3
-), sigs AS (
-  SELECT id, {mh}
-  FROM base
-), bands AS (
-  {bands}
-), cand AS (
-  SELECT DISTINCT a.id AS corpus_id, b.id AS batch_id
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.key = b.key
-   AND a.id % 2 = 0 AND b.id % 2 = 1
+DEDUP_INCREMENTAL_DOCS_SQL = _minhash_oracle_sql(
+    _MINHASH_CROSS, _minhash_verify_sql(_MINHASH_CROSS, "(1.0 - 0.7)")
 )
-SELECT corpus_id, batch_id,
-       round(len(list_intersect(sa.shingles, sb.shingles))::DOUBLE
-             / len(list_distinct(list_concat(sa.shingles, sb.shingles))), 4)
-         AS est_jaccard
-FROM cand
-JOIN base sa ON sa.id = cand.corpus_id
-JOIN base sb ON sb.id = cand.batch_id
-WHERE round(len(list_intersect(sa.shingles, sb.shingles))::DOUBLE
-            / len(list_distinct(list_concat(sa.shingles, sb.shingles))), 4)
-      >= (1.0 - 0.7)
-"""
-
-
-DEDUP_INCREMENTAL_DOCS_SQL = _minhash_incremental_oracle()
 
 
 def dedup_simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -665,20 +834,13 @@ def knn_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.cosine_topk(emb, queries, k=10).orderBy("query_id", "rank")
 
 
-KNN_COSINE_TOPK_SQL = """
+KNN_COSINE_TOPK_SQL = f"""
 WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5),
 scored AS (
   SELECT q.query_id, c.vec_id AS neighbor_id,
          round(list_cosine_similarity(q.qv::DOUBLE[], c.embedding::DOUBLE[]), 6) AS cosine
   FROM q JOIN embeddings c ON c.vec_id <> q.query_id
-), ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, cosine, CAST(rank AS INTEGER) AS rank
-FROM ranked WHERE rank <= 10
+{_SQL_COSINE_TOP10}
 """
 
 
@@ -861,22 +1023,7 @@ base_cert AS (
          sum(CAST(floor(nrm * 1e6 + 0.5) AS BIGINT))::BIGINT AS chk2
   FROM sigs GROUP BY sig % 16
 ),
-cents AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, embedding AS cv
-  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id
-        LIMIT (SELECT greatest(8, count(*) // 64) FROM embeddings))
-),
-assign AS (
-  SELECT vec_id, embedding, cid FROM (
-    SELECT e.vec_id, e.embedding, c.cid,
-           row_number() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY list_inner_product(e.embedding::DOUBLE[],
-                                         c.cv::DOUBLE[]) DESC, c.cid ASC
-           ) AS rk
-    FROM embeddings e, cents c
-  ) WHERE rk = 1
-),
+{_SQL_SEMDEDUP_LISTS},
 assign_cert AS (
   SELECT 'assign' AS member, cid::BIGINT AS grp, count(*)::BIGINT AS n_rows,
          sum(vec_id)::BIGINT AS chk1,
@@ -1138,7 +1285,6 @@ def decontaminate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct gram set, docs under 3 tokens have no grams on either
     path). dedup.contamination remains the general two-frame operator
     for external eval sets that have no stored base."""
-    from ..functions import md5_hash60
 
     base, _ = dedup.shingle_base_probe(spark, sf_dir)
     grams = base.select(
@@ -1312,46 +1458,10 @@ def knn_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: ranks centroid dot products descending with index ascending tie-break
 #: (ivf_assign's array_sort on (-dot, idx)); scoring/ranking mirrors
 #: KNN_COSINE_TOPK_SQL on the probed lists only.
-KNN_IVF_TOPK_SQL = """
+KNN_IVF_TOPK_SQL = f"""
 WITH cents AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, embedding AS cv
-  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)
-), corpus_assign AS (
-  SELECT neighbor_id, cv2, cid FROM (
-    SELECT e.vec_id AS neighbor_id, e.embedding AS cv2, c.cid,
-           row_number() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY list_inner_product(e.embedding::DOUBLE[],
-                                         c.cv::DOUBLE[]) DESC, c.cid ASC
-           ) AS rk
-    FROM embeddings e, cents c
-  ) WHERE rk = 1
-), query_probe AS (
-  SELECT query_id, qv, cid FROM (
-    SELECT q.vec_id AS query_id, q.embedding AS qv, c.cid,
-           row_number() OVER (
-             PARTITION BY q.vec_id
-             ORDER BY list_inner_product(q.embedding::DOUBLE[],
-                                         c.cv::DOUBLE[]) DESC, c.cid ASC
-           ) AS rk
-    FROM embeddings q, cents c
-    WHERE q.vec_id < 5
-  ) WHERE rk <= 2
-), scored AS (
-  SELECT DISTINCT p.query_id, a.neighbor_id,
-         round(list_cosine_similarity(p.qv::DOUBLE[], a.cv2::DOUBLE[]), 6)
-           AS cosine
-  FROM query_probe p
-  JOIN corpus_assign a ON a.cid = p.cid
-  WHERE a.neighbor_id <> p.query_id
-), ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, cosine, CAST(rank AS INTEGER) AS rank
-FROM ranked WHERE rank <= 10
+  {_sql_seed_cents(8)}
+), {_sql_ivf_corpus_assign("cents")}, {_sql_ivf_probe_topk("cents")}
 """
 
 
@@ -1463,22 +1573,9 @@ def winnow_fingerprint_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-WINNOW_FINGERPRINT_DOCS_SQL = """
-WITH hs AS (
-  SELECT doc_id,
-         list_transform(
-           range(1, len(text) - 5 + 2),
-           i -> substr(md5(substr(text, i, 5)), 1, 15)
-         ) AS hs
-  FROM documents
-  WHERE len(text) >= 5 + 4 - 1
-)
-SELECT doc_id,
-       unnest(list_distinct(list_transform(
-           range(1, len(hs) - 4 + 2),
-           i -> list_min(hs[i:i+3])
-       ))) AS winnow_hash
-FROM hs
+WINNOW_FINGERPRINT_DOCS_SQL = f"""
+WITH {_sql_winnow_fp()}
+SELECT doc_id, winnow_hash FROM fp
 """
 
 
@@ -1497,23 +1594,10 @@ def dedup_clusters_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 DEDUP_CLUSTERS_DOCS_SQL = f"""
-WITH RECURSIVE base AS (
-  SELECT doc_id, lang, n_chars // 200 AS bucket,
-         list_transform(
-           generate_series(1, greatest(len(toks) - 2, 0)),
-           i -> array_to_string(list_slice(toks, i, i + 2), ' ')
-         ) AS shingles
-  FROM (SELECT doc_id, lang, n_chars, {_SQL_TOKENS.format(c='text')} AS toks
-        FROM documents)
-), nonempty AS (
-  SELECT * FROM base WHERE len(shingles) > 0
-), pairs AS (
+WITH RECURSIVE {_SQL_SHINGLE_BLOCKS}, pairs AS (
   SELECT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM nonempty a
-  JOIN nonempty b
-    ON a.lang IS NOT DISTINCT FROM b.lang AND a.bucket IS NOT DISTINCT FROM b.bucket AND a.doc_id < b.doc_id
-  WHERE round(len(list_intersect(a.shingles, b.shingles))::DOUBLE
-              / len(list_distinct(list_concat(a.shingles, b.shingles))), 4) >= 0.3
+  {_SQL_BLOCKED_PAIRS}
+  WHERE {_sql_jaccard()} >= 0.3
 ), edges AS (
   SELECT id_a AS a, id_b AS b FROM pairs
   UNION
@@ -1623,32 +1707,9 @@ def kmeans_centroids_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("grp", "dim")
 
 
-KMEANS_CENTROIDS_EMBEDDINGS_SQL = """
-WITH cents0 AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, embedding AS cv
-  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 4)
-), a1 AS (
-  SELECT vec_id, cid FROM (
-    SELECT e.vec_id, c.cid,
-           row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY list_inner_product(e.embedding::DOUBLE[],
-                                         c.cv::DOUBLE[]) DESC, c.cid ASC) AS rk
-    FROM embeddings e, cents0 c
-  ) WHERE rk = 1
-), c1 AS (
-  SELECT cid, i - 1 AS dim, round(avg(e.embedding[i]::DOUBLE), 6) AS c
-  FROM a1 JOIN embeddings e USING (vec_id), generate_series(1, 64) s(i)
-  GROUP BY cid, i
-), c1l AS (
-  SELECT cid, list(c ORDER BY dim) AS cv FROM c1 GROUP BY cid
-), a2 AS (
-  SELECT vec_id, cid FROM (
-    SELECT e.vec_id, c.cid,
-           row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY list_inner_product(e.embedding::DOUBLE[],
-                                         c.cv::DOUBLE[]) DESC, c.cid ASC) AS rk
-    FROM embeddings e, c1l c
-  ) WHERE rk = 1
+KMEANS_CENTROIDS_EMBEDDINGS_SQL = f"""
+WITH {_sql_lloyd_ctes(4, 1)}, a2 AS (
+  {_sql_nearest_cid("c1l")}
 )
 SELECT CAST(cid AS INTEGER) AS grp, CAST(i - 1 AS INTEGER) AS dim,
        round(avg(e.embedding[i]::DOUBLE), 6) AS centroid_val
@@ -1723,22 +1784,33 @@ def quality_filter_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.quality_flags(docs, "doc_id", "text").orderBy("doc_id")
 
 
-_ALL_SW = ", ".join(f"'{w}'" for w in text.ALL_STOPWORDS)
-
-QUALITY_FILTER_DOCS_SQL = f"""
-WITH base AS (
-  SELECT doc_id, text, {_SQL_TOKENS.format(c='text')} AS toks FROM documents
-), m AS (
-  SELECT doc_id,
-         CAST(len(toks) AS INTEGER) AS n,
+# Per-document quality stats over ``toks``/``text`` and the keep rule over
+# them (the text.QUALITY_* constants of text.quality_flags), shared by every
+# oracle that replays the quality gate.
+_SQL_STOPWORDS = ", ".join(f"'{w}'" for w in text.ALL_STOPWORDS)
+_SQL_QUALITY_STATS = f"""CAST(len(toks) AS INTEGER) AS n,
          CAST(len(list_distinct(toks)) AS INTEGER) AS nd,
          CAST(coalesce(list_sum(list_transform(toks, t -> length(t))), 0)
               AS BIGINT) AS sum_len,
          length(text) AS n_chars,
          length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g'))
              AS n_sym,
-         CAST(len(list_filter(toks, x -> x IN ({_ALL_SW}))) AS INTEGER)
-             AS hits
+         CAST(len(list_filter(toks, x -> x IN ({_SQL_STOPWORDS}))) AS INTEGER)
+             AS hits"""
+_SQL_QUALITY_KEEP = f"""(n BETWEEN {text.QUALITY_MIN_TOKENS} AND {text.QUALITY_MAX_TOKENS})
+       AND (sum_len >= {text.QUALITY_MIN_MEAN_WORD_LEN} * n
+            AND sum_len <= {text.QUALITY_MAX_MEAN_WORD_LEN} * n)
+       AND hits >= {text.QUALITY_MIN_STOPWORD_HITS}
+       AND n_sym * 10 <= {text.QUALITY_MAX_SYMBOL_PER_10_CHARS} * n_chars
+       AND (n - nd) * {text.QUALITY_MAX_DUP_FRAC_DEN}
+           <= {text.QUALITY_MAX_DUP_FRAC_NUM} * n"""
+
+QUALITY_FILTER_DOCS_SQL = f"""
+WITH base AS (
+  SELECT doc_id, text, {_SQL_TOKENS.format(c='text')} AS toks FROM documents
+), m AS (
+  SELECT doc_id,
+         {_SQL_QUALITY_STATS}
   FROM base
 )
 SELECT doc_id,
@@ -1752,13 +1824,7 @@ SELECT doc_id,
            AS ok_symbol,
        (n - nd) * {text.QUALITY_MAX_DUP_FRAC_DEN}
            <= {text.QUALITY_MAX_DUP_FRAC_NUM} * n AS ok_repetition,
-       (n BETWEEN {text.QUALITY_MIN_TOKENS} AND {text.QUALITY_MAX_TOKENS})
-       AND (sum_len >= {text.QUALITY_MIN_MEAN_WORD_LEN} * n
-            AND sum_len <= {text.QUALITY_MAX_MEAN_WORD_LEN} * n)
-       AND hits >= {text.QUALITY_MIN_STOPWORD_HITS}
-       AND n_sym * 10 <= {text.QUALITY_MAX_SYMBOL_PER_10_CHARS} * n_chars
-       AND (n - nd) * {text.QUALITY_MAX_DUP_FRAC_DEN}
-           <= {text.QUALITY_MAX_DUP_FRAC_NUM} * n AS keep
+       {_SQL_QUALITY_KEEP} AS keep
 FROM m
 """
 
@@ -1952,6 +2018,19 @@ FROM q
 """
 
 
+def _trade_pairs(o: DataFrame, li: DataFrame) -> DataFrame:
+    """Distinct (customer, supplier) trade pairs of orders ⋈ lineitem as
+    integer nodes ``c`` = custkey*2 and ``s`` = suppkey*2+1."""
+    return (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .select(
+            (F.col("o_custkey") * 2).alias("c"),
+            (F.col("l_suppkey") * 2 + 1).alias("s"),
+        )
+        .distinct()
+    )
+
+
 def pagerank_supplier_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank (3 fixed iterations, d=0.85) over the bipartite
     customer↔supplier trade graph (distinct pairs via orders⋈lineitem) —
@@ -1964,14 +2043,7 @@ def pagerank_supplier_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Integer node encoding (custkey*2 / suppkey*2+1): every shuffle and
     # join in the iterations moves 8-byte keys; the human-readable label is
     # attached once, at output time, not carried through the hot path.
-    pairs = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("c"),
-            (F.col("l_suppkey") * 2 + 1).alias("s"),
-        )
-        .distinct()
-    )
+    pairs = _trade_pairs(o, li)
     edges = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).union(
         pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
     )
@@ -2043,8 +2115,8 @@ def covariance_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.covariance_matrix(emb, "embedding", dim=64).orderBy("i", "j")
 
 
-COVARIANCE_EMBEDDINGS_SQL = """
-WITH ex AS (
+# Per-dim means and upper-triangle mean products of the 64-dim embeddings.
+_SQL_COV_CTES = """ex AS (
   SELECT vec_id, g.i - 1 AS i, embedding[g.i]::DOUBLE AS x
   FROM embeddings, generate_series(1, 64) AS g(i)
 ), means AS (
@@ -2053,7 +2125,9 @@ WITH ex AS (
   SELECT a.i AS i, b.i AS j, avg(a.x * b.x) AS pij
   FROM ex a JOIN ex b ON a.vec_id = b.vec_id AND b.i >= a.i
   GROUP BY a.i, b.i
-)
+)"""
+COVARIANCE_EMBEDDINGS_SQL = f"""
+WITH {_SQL_COV_CTES}
 SELECT p.i::BIGINT AS i, p.j::BIGINT AS j,
        floor((p.pij - ma.m * mb.m) * 1e6 + 0.5)::BIGINT AS cov_micro
 FROM prods p JOIN means ma ON ma.i = p.i JOIN means mb ON mb.i = p.j
@@ -2726,22 +2800,8 @@ def semantic_dedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SEMANTIC_DEDUP_EMBEDDINGS_SQL = """
-WITH cents AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, embedding AS cv
-  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id
-        LIMIT (SELECT greatest(8, count(*) // 64) FROM embeddings))
-), assign AS (
-  SELECT vec_id, embedding, cid FROM (
-    SELECT e.vec_id, e.embedding, c.cid,
-           row_number() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY list_inner_product(e.embedding::DOUBLE[],
-                                         c.cv::DOUBLE[]) DESC, c.cid ASC
-           ) AS rk
-    FROM embeddings e, cents c
-  ) WHERE rk = 1
-), dropped AS (
+SEMANTIC_DEDUP_EMBEDDINGS_SQL = f"""
+WITH {_SQL_SEMDEDUP_LISTS}, dropped AS (
   SELECT DISTINCT b.vec_id
   FROM assign a JOIN assign b ON a.cid = b.cid AND a.vec_id < b.vec_id
   WHERE floor(list_cosine_similarity(a.embedding::DOUBLE[],
@@ -2887,7 +2947,6 @@ def dedup_nightly_pipeline_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from . import stores
 
-    from ..functions import md5_hash60
     from . import tableformat
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2901,16 +2960,9 @@ def dedup_nightly_pipeline_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sstore, _fpos = dedup.shingle_base_probe(spark, sf_dir, k=3)
     sstore = sstore.select("id", F.col("sset").alias("shingles"))
 
-    def prehash(s):
-        return md5_hash60(s) % _MINHASH_P
-
-    def portable(h, i):
-        a, b = _minhash_ab(i)
-        return h * F.lit(a) % _MINHASH_P + F.lit(b)
-
     kwargs = dict(
-        k=3, num_hash_tables=8, seed=42, hash_fn=portable, band_r=2,
-        prehash_fn=prehash,
+        k=3, num_hash_tables=8, seed=42, hash_fn=_minhash_portable, band_r=2,
+        prehash_fn=_minhash_prehash,
     )
     cbase, cbands = dedup._minhash_bands(
         None, "doc_id", "text",
@@ -3049,58 +3101,13 @@ def dedup_nightly_pipeline_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decisions.crossJoin(audit).orderBy("batch_id")
 
 
-def _nightly_oracle(num_hash_tables: int = 8, band_r: int = 2) -> str:
-    """CTE replay of the whole nightly pipeline: the versioned-table
-    mechanics (commit/read/table_changes) are Spark-side storage plumbing;
-    the ORACLE replays their observable algebra — the candidate join
-    against the v0 index contents, the accept filter, the insert feed
-    count, and both index cardinalities."""
-    h = _SQL_HASH60.format(c="s")
-    mh = ",\n         ".join(
-        f"list_min(list_transform(shingles, s -> "
-        f"(({h} % {_MINHASH_P}) * {_minhash_ab(i)[0]} % {_MINHASH_P}"
-        f" + {_minhash_ab(i)[1]}))) AS mh{i}"
-        for i in range(num_hash_tables)
-    )
-    bands = " UNION ALL ".join(
-        "SELECT id, {bi} AS band, {key} AS key FROM sigs".format(
-            bi=bi,
-            key=" || ',' || ".join(
-                f"mh{bi * band_r + j}::VARCHAR" for j in range(band_r)
-            ),
-        )
-        for bi in range(num_hash_tables // band_r)
-    )
-    return f"""
-WITH base AS (
-  SELECT doc_id AS id,
-         list_distinct(list_transform(
-           generate_series(1, greatest(len(toks) - 2, 0)),
-           i -> array_to_string(list_slice(toks, i, i + 2), ' ')
-         )) AS shingles
-  FROM (SELECT doc_id, {_SQL_TOKENS.format(c='text')} AS toks FROM documents)
-  WHERE len(toks) >= 3
-), sigs AS (
-  SELECT id, {mh}
-  FROM base
-), bands AS (
-  {bands}
-), cand AS (
-  SELECT DISTINCT a.id AS corpus_id, b.id AS batch_id
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.key = b.key
-   AND a.id % 2 = 0 AND b.id % 2 = 1
-), pairs AS (
-  SELECT corpus_id, batch_id,
-         round(len(list_intersect(sa.shingles, sb.shingles))::DOUBLE
-               / len(list_distinct(list_concat(sa.shingles, sb.shingles))), 4)
-           AS est_jaccard
-  FROM cand
-  JOIN base sa ON sa.id = cand.corpus_id
-  JOIN base sb ON sb.id = cand.batch_id
-  WHERE round(len(list_intersect(sa.shingles, sb.shingles))::DOUBLE
-              / len(list_distinct(list_concat(sa.shingles, sb.shingles))), 4)
-        >= 0.3
+# CTE replay of the whole nightly pipeline: the versioned-table mechanics
+# (commit/read/table_changes) are Spark-side storage plumbing; the ORACLE
+# replays their observable algebra — the candidate join against the v0
+# index contents, the accept filter, the insert feed count, and both index
+# cardinalities.
+DEDUP_NIGHTLY_PIPELINE_DOCS_SQL = _minhash_oracle_sql(_MINHASH_CROSS, f""", pairs AS (
+  {_minhash_verify_sql(_MINHASH_CROSS, "0.3")}
 ), ranked AS (
   SELECT *, row_number() OVER (
            PARTITION BY batch_id
@@ -3132,10 +3139,7 @@ WITH base AS (
 )
 SELECT decisions.*, audit.* FROM decisions, audit
 ORDER BY batch_id
-"""
-
-
-DEDUP_NIGHTLY_PIPELINE_DOCS_SQL = _nightly_oracle()
+""")
 
 QUERIES["dedup_nightly_pipeline_docs"] = (
     dedup_nightly_pipeline_docs,
@@ -3164,7 +3168,6 @@ def minhash_band_recall_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the textbook S-curve value at the threshold, 1−(1−s^r)^b at s=0.3:
     the measured recall should beat it because most true pairs sit well
     above the threshold."""
-    from ..functions import md5_hash60
 
     # r11: BOTH sides of the recall measurement — the exact AllPairs
     # truth and the banded minhash find — now probe the COMMITTED
@@ -3184,17 +3187,10 @@ def minhash_band_recall_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         block_keys=("lang", "bucket"),
     ).select("id_a", "id_b")
 
-    def prehash(s):
-        return md5_hash60(s) % _MINHASH_P
-
-    def portable(h, i):
-        a, b = _minhash_ab(i)
-        return h * F.lit(a) % _MINHASH_P + F.lit(b)
-
     found = dedup.minhash_near_dup(
         None, id_col="doc_id", text_col="text", k=3,
-        jaccard_distance_threshold=0.7, hash_fn=portable, band_r=2,
-        prehash_fn=prehash,
+        jaccard_distance_threshold=0.7, hash_fn=_minhash_portable, band_r=2,
+        prehash_fn=_minhash_prehash,
         prebuilt_shingles=base.select("id", F.col("sset").alias("shingles")),
     ).select("id_a", "id_b")
     truth = cut(truth, eager=False)  # feeds n_true AND the hit join
@@ -3218,57 +3214,8 @@ def minhash_band_recall_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_recall_oracle(num_hash_tables: int = 8, band_r: int = 2) -> str:
-    h = _SQL_HASH60.format(c="s")
-    mh = ",\n         ".join(
-        f"list_min(list_transform(shingles, s -> "
-        f"(({h} % {_MINHASH_P}) * {_minhash_ab(i)[0]} % {_MINHASH_P}"
-        f" + {_minhash_ab(i)[1]}))) AS mh{i}"
-        for i in range(num_hash_tables)
-    )
-    bands = " UNION ALL ".join(
-        "SELECT id, {bi} AS band, {key} AS key FROM sigs".format(
-            bi=bi,
-            key=" || ',' || ".join(
-                f"mh{bi * band_r + j}::VARCHAR" for j in range(band_r)
-            ),
-        )
-        for bi in range(num_hash_tables // band_r)
-    )
-    return f"""
-WITH base AS (
-  SELECT doc_id AS id, lang, n_chars // 200 AS bucket,
-         list_distinct(list_transform(
-           generate_series(1, greatest(len(toks) - 2, 0)),
-           i -> array_to_string(list_slice(toks, i, i + 2), ' ')
-         )) AS shingles
-  FROM (SELECT doc_id, lang, n_chars, {_SQL_TOKENS.format(c='text')} AS toks
-        FROM documents)
-  WHERE len(toks) >= 3
-), truth AS (
-  SELECT a.id AS id_a, b.id AS id_b
-  FROM base a JOIN base b
-    ON a.lang IS NOT DISTINCT FROM b.lang AND a.bucket IS NOT DISTINCT FROM b.bucket AND a.id < b.id
-  WHERE round(len(list_intersect(a.shingles, b.shingles))::DOUBLE
-              / len(list_distinct(list_concat(a.shingles, b.shingles))), 4)
-        >= 0.3
-), sigs AS (
-  SELECT id, {mh}
-  FROM base
-), bands AS (
-  {bands}
-), cand AS (
-  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.key = b.key AND a.id < b.id
-), found AS (
-  SELECT cand.id_a, cand.id_b
-  FROM cand
-  JOIN base sa ON sa.id = cand.id_a
-  JOIN base sb ON sb.id = cand.id_b
-  WHERE round(len(list_intersect(sa.shingles, sb.shingles))::DOUBLE
-              / len(list_distinct(list_concat(sa.shingles, sb.shingles))), 4)
-        >= 0.3
+MINHASH_BAND_RECALL_DOCS_SQL = _minhash_oracle_sql(_MINHASH_PAIRS, f""", found AS (
+  {_minhash_verify_sql(_MINHASH_PAIRS, "0.3", "cand.id_a, cand.id_b")}
 ), hit AS (
   SELECT t.id_a, t.id_b FROM truth t
   JOIN found f ON f.id_a = t.id_a AND f.id_b = t.id_b
@@ -3281,10 +3228,13 @@ SELECT (SELECT count(*) FROM truth)::BIGINT AS n_true_pairs,
                   // (SELECT count(*) FROM truth) END)::BIGINT
            AS recall_micro,
        {_MINHASH_THEORY_HIT_MICRO}::BIGINT AS theory_hit_micro
-"""
-
-
-MINHASH_BAND_RECALL_DOCS_SQL = _minhash_recall_oracle()
+""", blocked=True, truth=f""", truth AS (
+  SELECT a.id AS id_a, b.id AS id_b
+  FROM base a JOIN base b
+    ON a.lang IS NOT DISTINCT FROM b.lang AND a.bucket IS NOT DISTINCT FROM b.bucket AND a.id < b.id
+  WHERE {_sql_jaccard()}
+        >= 0.3
+)""")
 
 QUERIES["minhash_band_recall_docs"] = (
     minhash_band_recall_docs,
@@ -3554,74 +3504,11 @@ def knn_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-KNN_IVF_KMEANS_TOPK_SQL = """
-WITH cents0 AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, embedding AS cv
-  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 4)
-), a1 AS (
-  SELECT vec_id, cid FROM (
-    SELECT e.vec_id, c.cid,
-           row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY list_inner_product(e.embedding::DOUBLE[],
-                                         c.cv::DOUBLE[]) DESC, c.cid ASC) AS rk
-    FROM embeddings e, cents0 c
-  ) WHERE rk = 1
-), c1 AS (
-  SELECT cid, i - 1 AS dim, round(avg(e.embedding[i]::DOUBLE), 6) AS c
-  FROM a1 JOIN embeddings e USING (vec_id), generate_series(1, 64) s(i)
-  GROUP BY cid, i
-), c1l AS (
-  SELECT cid, list(c ORDER BY dim) AS cv FROM c1 GROUP BY cid
-), a2 AS (
-  SELECT vec_id, cid FROM (
-    SELECT e.vec_id, c.cid,
-           row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY list_inner_product(e.embedding::DOUBLE[],
-                                         c.cv::DOUBLE[]) DESC, c.cid ASC) AS rk
-    FROM embeddings e, c1l c
-  ) WHERE rk = 1
-), c2 AS (
-  SELECT cid, i - 1 AS dim, round(avg(e.embedding[i]::DOUBLE), 6) AS c
-  FROM a2 JOIN embeddings e USING (vec_id), generate_series(1, 64) s(i)
-  GROUP BY cid, i
-), c2l AS (
-  SELECT cid, list(c ORDER BY dim) AS cv FROM c2 GROUP BY cid
-), corpus_assign AS (
-  SELECT neighbor_id, cv2, cid FROM (
-    SELECT e.vec_id AS neighbor_id, e.embedding AS cv2, c.cid,
-           row_number() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY list_inner_product(e.embedding::DOUBLE[],
-                                         c.cv::DOUBLE[]) DESC, c.cid ASC
-           ) AS rk
-    FROM embeddings e, c2l c
-  ) WHERE rk = 1
-), query_probe AS (
-  SELECT query_id, qv, cid FROM (
-    SELECT q.vec_id AS query_id, q.embedding AS qv, c.cid,
-           row_number() OVER (
-             PARTITION BY q.vec_id
-             ORDER BY list_inner_product(q.embedding::DOUBLE[],
-                                         c.cv::DOUBLE[]) DESC, c.cid ASC
-           ) AS rk
-    FROM embeddings q, c2l c
-    WHERE q.vec_id < 5
-  ) WHERE rk <= 2
-), scored AS (
-  SELECT DISTINCT p.query_id, a.neighbor_id,
-         round(list_cosine_similarity(p.qv::DOUBLE[], a.cv2::DOUBLE[]), 6)
-           AS cosine
-  FROM query_probe p
-  JOIN corpus_assign a ON a.cid = p.cid
-  WHERE a.neighbor_id <> p.query_id
-), ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, cosine, CAST(rank AS INTEGER) AS rank
-FROM ranked WHERE rank <= 10
+# The training CTE chain (2 Lloyd rounds, k=4) through corpus_assign;
+# knn_ivf_index_build_embeddings certifies the same chain.
+_KNN_IVF_TRAIN_CTES = f"""
+WITH {_sql_lloyd_ctes(4, 2)}, {_sql_ivf_corpus_assign("c2l")}"""
+KNN_IVF_KMEANS_TOPK_SQL = f"""{_KNN_IVF_TRAIN_CTES}, {_sql_ivf_probe_topk("c2l")}
 """
 
 QUERIES["knn_ivf_kmeans_topk"] = (knn_ivf_kmeans_topk, KNN_IVF_KMEANS_TOPK_SQL)
@@ -3803,12 +3690,7 @@ def knn_ivf_index_build_embeddings(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 # The oracle replays the training CTE chain of KNN_IVF_KMEANS_TOPK_SQL
-# verbatim up through corpus_assign (slice asserted below so a reworded
-# base oracle can't silently desynchronize), then certifies the members.
-_KNN_IVF_TRAIN_CTES = KNN_IVF_KMEANS_TOPK_SQL.split(", query_probe AS")[0]
-assert _KNN_IVF_TRAIN_CTES.rstrip().endswith(")") and (
-    "corpus_assign" in _KNN_IVF_TRAIN_CTES
-)
+# up through corpus_assign, then certifies the members.
 KNN_IVF_INDEX_BUILD_SQL = f"""
 {_KNN_IVF_TRAIN_CTES}
 SELECT * FROM (
@@ -3851,20 +3733,12 @@ def minhash_band_precision_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     prebuilt_shingles seam (the dedup_minhash_docs plumbing; minhash over
     the stored sorted-distinct sset is value-identical — array_min is
     order-free over the same set, the verify is set arithmetic)."""
-    from ..functions import md5_hash60
 
     sbase, _fpos = dedup.shingle_base_probe(spark, sf_dir, k=3)
 
-    def prehash(s):
-        return md5_hash60(s) % _MINHASH_P
-
-    def portable(h, i):
-        a, b = _minhash_ab(i)
-        return h * F.lit(a) % _MINHASH_P + F.lit(b)
-
     base, exploded = dedup._minhash_bands(
         None, "doc_id", "text", k=3, num_hash_tables=8, seed=42,
-        hash_fn=portable, band_r=2, prehash_fn=prehash,
+        hash_fn=_minhash_portable, band_r=2, prehash_fn=_minhash_prehash,
         prebuilt_shingles=sbase.select("id", F.col("sset").alias("shingles")),
     )
     a, b = exploded.alias("a"), exploded.alias("b")
@@ -3905,47 +3779,8 @@ def minhash_band_precision_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_precision_oracle(num_hash_tables: int = 8, band_r: int = 2) -> str:
-    h = _SQL_HASH60.format(c="s")
-    mh = ",\n         ".join(
-        f"list_min(list_transform(shingles, s -> "
-        f"(({h} % {_MINHASH_P}) * {_minhash_ab(i)[0]} % {_MINHASH_P}"
-        f" + {_minhash_ab(i)[1]}))) AS mh{i}"
-        for i in range(num_hash_tables)
-    )
-    bands = " UNION ALL ".join(
-        "SELECT id, {bi} AS band, {key} AS key FROM sigs".format(
-            bi=bi,
-            key=" || ',' || ".join(
-                f"mh{bi * band_r + j}::VARCHAR" for j in range(band_r)
-            ),
-        )
-        for bi in range(num_hash_tables // band_r)
-    )
-    return f"""
-WITH base AS (
-  SELECT doc_id AS id,
-         list_distinct(list_transform(
-           generate_series(1, greatest(len(toks) - 2, 0)),
-           i -> array_to_string(list_slice(toks, i, i + 2), ' ')
-         )) AS shingles
-  FROM (SELECT doc_id, {_SQL_TOKENS.format(c='text')} AS toks FROM documents)
-  WHERE len(toks) >= 3
-), sigs AS (
-  SELECT id, {mh} FROM base
-), bands AS (
-  {bands}
-), cand AS (
-  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.key = b.key AND a.id < b.id
-), verified AS (
-  SELECT cand.id_a FROM cand
-  JOIN base sa ON sa.id = cand.id_a
-  JOIN base sb ON sb.id = cand.id_b
-  WHERE round(len(list_intersect(sa.shingles, sb.shingles))::DOUBLE
-              / len(list_distinct(list_concat(sa.shingles, sb.shingles))), 4)
-        >= 0.3
+MINHASH_BAND_PRECISION_DOCS_SQL = _minhash_oracle_sql(_MINHASH_PAIRS, f""", verified AS (
+  {_minhash_verify_sql(_MINHASH_PAIRS, "0.3", "cand.id_a")}
 )
 SELECT (SELECT count(*) FROM cand)::BIGINT AS n_candidates,
        (SELECT count(*) FROM verified)::BIGINT AS n_verified,
@@ -3953,10 +3788,7 @@ SELECT (SELECT count(*) FROM cand)::BIGINT AS n_candidates,
              ELSE ((SELECT count(*) FROM verified) * 1000000)
                   // (SELECT count(*) FROM cand) END)::BIGINT
            AS precision_micro
-"""
-
-
-MINHASH_BAND_PRECISION_DOCS_SQL = _minhash_precision_oracle()
+""")
 
 QUERIES["minhash_band_precision_docs"] = (
     minhash_band_precision_docs,

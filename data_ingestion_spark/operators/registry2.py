@@ -15,9 +15,19 @@ from pyspark.sql import functions as F
 
 from ..session import cut, load_table
 from . import inference, layout, sampling, stats, text
-
-_SQL_TOKENS = "list_filter(string_split_regex(lower({c}), '\\s+'), x -> x <> '')"
-_SQL_HASH60 = "(('0x' || substr(md5({c}), 1, 15))::BIGINT)"
+from .registry import (
+    DEDUP_CLUSTERS_DOCS_SQL,
+    _SQL_COV_CTES,
+    _SQL_HASH60,
+    _SQL_QUALITY_KEEP,
+    _SQL_QUALITY_STATS,
+    _SQL_TOKENS,
+    _sql_adc_topk,
+    _sql_ivf_lists,
+    _sql_pq_dist,
+    _sql_pq_training_ctes,
+    _sql_winnow_fp,
+)
 
 # --------------------------------------------------------------------------
 # BM25 retrieval
@@ -87,18 +97,23 @@ BM25_TOPK_DOCS_SQL = _bm25_oracle()
 _Z_BUCKET_BITS = 6
 
 
+def _zorder_bounds(ev: DataFrame):
+    """One row: the (user_id, value) normalization bounds xlo/xhi/ylo/yhi."""
+    return ev.select(
+        F.min("user_id").alias("xlo"),
+        F.max("user_id").alias("xhi"),
+        F.min("value").alias("ylo"),
+        F.max("value").alias("yhi"),
+    ).first()
+
+
 def zorder_layout_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-bucket min/max envelopes of a Z-ordered (user_id, value) layout
     of events — the file-skipping index an OPTIMIZE ZORDER writer emits.
     Normalization bounds are the table's min/max (4-value driver metadata,
     like tfidf's N literal)."""
     ev = load_table(spark, sf_dir, "events")
-    r = ev.select(
-        F.min("user_id").alias("xlo"),
-        F.max("user_id").alias("xhi"),
-        F.min("value").alias("ylo"),
-        F.max("value").alias("yhi"),
-    ).first()
+    r = _zorder_bounds(ev)
     return layout.zorder_bucket_stats(
         ev,
         "user_id",
@@ -168,12 +183,7 @@ def zorder_prune_demo_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import stores
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
-    r = ev.select(
-        F.min("user_id").alias("xlo"),
-        F.max("user_id").alias("xhi"),
-        F.min("value").alias("ylo"),
-        F.max("value").alias("yhi"),
-    ).first()
+    r = _zorder_bounds(ev)
     xlo, xhi = float(r["xlo"]), float(r["xhi"])
     ylo, yhi = float(r["ylo"]), float(r["yhi"])
     # middle ~2%-span predicate per dimension (same op order as the oracle
@@ -596,30 +606,13 @@ def llm_data_pipeline_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _llm_pipeline_oracle() -> str:
     toks = _SQL_TOKENS.format(c="text")
-    sw = ", ".join(f"'{w}'" for w in text.ALL_STOPWORDS)
-    keep = (
-        f"(n BETWEEN {text.QUALITY_MIN_TOKENS} AND {text.QUALITY_MAX_TOKENS})"
-        f" AND (sum_len >= {text.QUALITY_MIN_MEAN_WORD_LEN} * n"
-        f"      AND sum_len <= {text.QUALITY_MAX_MEAN_WORD_LEN} * n)"
-        f" AND hits >= {text.QUALITY_MIN_STOPWORD_HITS}"
-        f" AND n_sym * 10 <= {text.QUALITY_MAX_SYMBOL_PER_10_CHARS} * n_chars"
-        f" AND (n - nd) * {text.QUALITY_MAX_DUP_FRAC_DEN}"
-        f"     <= {text.QUALITY_MAX_DUP_FRAC_NUM} * n"
-    )
     return f"""
 WITH m AS (
   SELECT doc_id,
-         CAST(len(toks) AS INTEGER) AS n,
-         CAST(len(list_distinct(toks)) AS INTEGER) AS nd,
-         CAST(coalesce(list_sum(list_transform(toks, t -> length(t))), 0)
-              AS BIGINT) AS sum_len,
-         length(text) AS n_chars,
-         length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g'))
-             AS n_sym,
-         CAST(len(list_filter(toks, x -> x IN ({sw}))) AS INTEGER) AS hits
+         {_SQL_QUALITY_STATS}
   FROM (SELECT doc_id, text, {toks} AS toks FROM documents)
 ), keepers AS (
-  SELECT doc_id FROM m WHERE {keep}
+  SELECT doc_id FROM m WHERE {_SQL_QUALITY_KEEP}
 ), d1 AS (
   SELECT d.doc_id, d.text, d.source FROM documents d
   JOIN keepers USING (doc_id)
@@ -861,16 +854,6 @@ def corpus_datasheet_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _datasheet_oracle() -> str:
     toks = _SQL_TOKENS.format(c="text")
-    sw = ", ".join(f"'{w}'" for w in text.ALL_STOPWORDS)
-    keep = (
-        f"(n BETWEEN {text.QUALITY_MIN_TOKENS} AND {text.QUALITY_MAX_TOKENS})"
-        f" AND (sum_len >= {text.QUALITY_MIN_MEAN_WORD_LEN} * n"
-        f"      AND sum_len <= {text.QUALITY_MAX_MEAN_WORD_LEN} * n)"
-        f" AND hits >= {text.QUALITY_MIN_STOPWORD_HITS}"
-        f" AND n_sym * 10 <= {text.QUALITY_MAX_SYMBOL_PER_10_CHARS} * n_chars"
-        f" AND (n - nd) * {text.QUALITY_MAX_DUP_FRAC_DEN}"
-        f"     <= {text.QUALITY_MAX_DUP_FRAC_NUM} * n"
-    )
     return f"""
 WITH vol AS (
   SELECT count(*)::BIGINT AS n_docs,
@@ -890,17 +873,10 @@ WITH vol AS (
                / count(*) + 0.5)::BIGINT AS dup_bp
   FROM documents
 ), m AS (
-  SELECT CAST(len(toks) AS INTEGER) AS n,
-         CAST(len(list_distinct(toks)) AS INTEGER) AS nd,
-         CAST(coalesce(list_sum(list_transform(toks, t -> length(t))), 0)
-              AS BIGINT) AS sum_len,
-         length(text) AS n_chars,
-         length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g'))
-             AS n_sym,
-         CAST(len(list_filter(toks, x -> x IN ({sw}))) AS INTEGER) AS hits
+  SELECT {_SQL_QUALITY_STATS}
   FROM (SELECT text, {toks} AS toks FROM documents)
 ), gate AS (
-  SELECT floor(sum(CASE WHEN {keep} THEN 1 ELSE 0 END) * 10000.0
+  SELECT floor(sum(CASE WHEN {_SQL_QUALITY_KEEP} THEN 1 ELSE 0 END) * 10000.0
                / count(*) + 0.5)::BIGINT AS quality_pass_bp
   FROM m
 ), sc AS (
@@ -1255,17 +1231,8 @@ def _pca_oracle(rounds: int) -> str:
     # covariance in micro units (the covariance_embeddings oracle), then the
     # exact integer recurrence: w = C·v (BIGINT), v = floor((w/max|w|)·1e6+.5)
     ctes = [
-        """cov AS MATERIALIZED (
-  WITH ex AS (
-    SELECT vec_id, g.i - 1 AS i, embedding[g.i]::DOUBLE AS x
-    FROM embeddings, generate_series(1, 64) AS g(i)
-  ), means AS (
-    SELECT i, avg(x) AS m FROM ex GROUP BY i
-  ), prods AS (
-    SELECT a.i AS i, b.i AS j, avg(a.x * b.x) AS pij
-    FROM ex a JOIN ex b ON a.vec_id = b.vec_id AND b.i >= a.i
-    GROUP BY a.i, b.i
-  )
+        f"""cov AS MATERIALIZED (
+  WITH {_SQL_COV_CTES}
   SELECT p.i, p.j, floor((p.pij - ma.m * mb.m) * 1e6 + 0.5)::BIGINT AS c
   FROM prods p JOIN means ma ON ma.i = p.i JOIN means mb ON mb.i = p.j
 )""",
@@ -1745,6 +1712,18 @@ _SHARD_N = 8
 _SHARD_BUCKET = 100
 
 
+def _shard_totals(dealt: DataFrame) -> DataFrame:
+    """Per-shard doc count and char total of a shard assignment."""
+    return (
+        dealt.groupBy("shard")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_chars").alias("total_chars"),
+        )
+        .orderBy("shard")
+    )
+
+
 def shard_balance_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deal documents into 8 near-equal-weight trainer shards
     (sampling.balanced_shards: bucket-by-length → in-bucket rank →
@@ -1752,14 +1731,8 @@ def shard_balance_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     char totals; the oracle replays the exact window, and the balance
     property itself is pinned in tests."""
     docs = load_table(spark, sf_dir, "documents")
-    return (
+    return _shard_totals(
         sampling.balanced_shards(docs, "doc_id", "n_chars", _SHARD_N, _SHARD_BUCKET)
-        .groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").alias("total_chars"),
-        )
-        .orderBy("shard")
     )
 
 
@@ -2016,21 +1989,26 @@ QUERIES["char_entropy_docs"] = (char_entropy_docs, CHAR_ENTROPY_DOCS_SQL)
 # --------------------------------------------------------------------------
 # Vocabulary coverage / OOV rate (tokenizer QA)
 # --------------------------------------------------------------------------
-def vocab_coverage_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc OOV rate against the corpus's own exact top-50 tokens
-    (text.vocab_coverage, literal tier): the vocab derives
-    deterministically (freq desc, token asc) so the oracle replays BOTH
-    the vocab selection and the coverage math."""
-    docs = load_table(spark, sf_dir, "documents")
+def _top_tokens(df: DataFrame, text_col: str) -> list[str]:
+    """The corpus's 50 most frequent tokens (freq desc, token asc)."""
     top = (
-        docs.select(F.explode(text.tokens(F.col("text"))).alias("token"))
+        df.select(F.explode(text.tokens(F.col(text_col))).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("freq"))
         .orderBy(F.col("freq").desc(), F.col("token").asc())
         .limit(50)
         .collect()
     )
-    vocab = [r["token"] for r in top]
+    return [r["token"] for r in top]
+
+
+def vocab_coverage_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-doc OOV rate against the corpus's own exact top-50 tokens
+    (text.vocab_coverage, literal tier): the vocab derives
+    deterministically (freq desc, token asc) so the oracle replays BOTH
+    the vocab selection and the coverage math."""
+    docs = load_table(spark, sf_dir, "documents")
+    vocab = _top_tokens(docs, "text")
     return (
         text.vocab_coverage(docs, "doc_id", "text", vocab)
         .withColumnRenamed("id", "doc_id")
@@ -2096,28 +2074,14 @@ def corpus_build_pipeline_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     kept = norm.join(win, "id", "left_semi")
 
-    top = (
-        kept.select(F.explode(text.tokens(F.col("text_nfc"))).alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .orderBy(F.col("freq").desc(), F.col("token").asc())
-        .limit(50)
-        .collect()
-    )
-    vocab = [r["token"] for r in top]
+    vocab = _top_tokens(kept, "text_nfc")
     cov = text.vocab_coverage(kept, "id", "text_nfc", vocab)
     gated = kept.join(
         cov.filter(F.col("oov_bp") <= _CB_OOV_BP).select("id"), "id", "left_semi"
     ).select("id", F.length("text_nfc").alias("n_chars"))
 
-    return (
+    return _shard_totals(
         sampling.balanced_shards(gated, "id", "n_chars", _CB_SHARDS, _CB_BUCKET)
-        .groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").alias("total_chars"),
-        )
-        .orderBy("shard")
     )
 
 
@@ -2295,17 +2259,23 @@ QUERIES["knn_two_stage_topk"] = (knn_two_stage_topk, KNN_TWO_STAGE_TOPK_SQL)
 # --------------------------------------------------------------------------
 # Join-cardinality pre-flight
 # --------------------------------------------------------------------------
-def join_cardinality_orders_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join-explosion guardrail (stats.join_cardinality): predict
-    |orders ⋈ customer| on custkey from the two per-key counts, plus the
-    ACTUAL join count in the same row — the oracle independently computes
-    both, so the prediction must equal reality."""
+def _orders_customer_on_custkey(spark: SparkSession, sf_dir: str):
+    """``orders`` and ``customer`` with their join key renamed ``custkey``."""
     ords = load_table(spark, sf_dir, "orders").withColumnRenamed(
         "o_custkey", "custkey"
     )
     cust = load_table(spark, sf_dir, "customer").withColumnRenamed(
         "c_custkey", "custkey"
     )
+    return ords, cust
+
+
+def join_cardinality_orders_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Join-explosion guardrail (stats.join_cardinality): predict
+    |orders ⋈ customer| on custkey from the two per-key counts, plus the
+    ACTUAL join count in the same row — the oracle independently computes
+    both, so the prediction must equal reality."""
+    ords, cust = _orders_customer_on_custkey(spark, sf_dir)
     # r14 (guide §1.2): prediction collect + actual join count were two
     # driver actions; one crossJoined single-row plan runs both subtrees
     # in the caller's single job. Same row, same schema.
@@ -2942,77 +2912,11 @@ def pq_adc_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("qid", "rk")
 
 
-def _pq_dist(d_sub: int, vec: str) -> str:
-    """DuckDB fragment: squared L2 between a subvector of ``vec`` and the
-    codeword list ``b.cv`` (b = alias of a b{i}l books table)."""
-    return (
-        f"list_sum(list_transform(generate_series(1, {d_sub}), j -> "
-        f"({vec}[b.m * {d_sub} + j]::DOUBLE - b.cv[j])"
-        f" * ({vec}[b.m * {d_sub} + j]::DOUBLE - b.cv[j])))"
-    )
-
-
-def _pq_training_ctes(m: int, k: int, d_sub: int) -> str:
-    """The shared PQ-training WITH-body: seeds -> b0/b0l -> two Lloyd
-    rounds (assign, re-mean, empty-cluster coalesce) -> b2l."""
-    def dist(vec: str, books: str) -> str:
-        return _pq_dist(d_sub, vec)
-
-    # each round coalesces empty clusters against the PREVIOUS round's
-    # table, so the rounds are generated with explicit prev references
-    rounds = []
-    for i in (1, 2):
-        prev = f"b{i-1}"
-        rounds.append(f"""a{i} AS (
-  SELECT vec_id, m, code FROM (
-    SELECT d.vec_id, d.m, d.code,
-           row_number() OVER (PARTITION BY d.vec_id, d.m
-                              ORDER BY d.dist ASC, d.code ASC) AS rk
-    FROM (SELECT e.vec_id, b.m, b.code, {dist('e.embedding', prev + 'l')} AS dist
-          FROM embeddings e, {prev}l b) d
-  ) WHERE rk = 1
-), n{i} AS (
-  SELECT a.m, a.code, t.j - 1 AS dim,
-         round(avg(e.embedding[a.m * {d_sub} + t.j]::DOUBLE), 6) AS c
-  FROM a{i} a JOIN embeddings e USING (vec_id),
-       generate_series(1, {d_sub}) t(j)
-  GROUP BY 1, 2, 3
-), b{i} AS (
-  SELECT p.m, p.code, p.dim, coalesce(n{i}.c, p.c) AS c
-  FROM {prev} p LEFT JOIN n{i}
-    ON n{i}.m = p.m AND n{i}.code = p.code AND n{i}.dim = p.dim
-), b{i}l AS (
-  SELECT m, code, list(c ORDER BY dim) AS cv FROM b{i} GROUP BY m, code
-)""")
-    rounds_sql = ",\n".join(rounds)
-    return f"""seeds AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS code, embedding
-  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT {k})
-), b0 AS (
-  SELECT s.m, seeds.code, t.j - 1 AS dim,
-         seeds.embedding[s.m * {d_sub} + t.j]::DOUBLE AS c
-  FROM seeds, (SELECT range::INT AS m FROM range(0, {m})) s,
-       generate_series(1, {d_sub}) t(j)
-), b0l AS (
-  SELECT m, code, list(c ORDER BY dim) AS cv FROM b0 GROUP BY m, code
-),
-{rounds_sql},
-enc AS (
-  SELECT vec_id, m, code FROM (
-    SELECT d.vec_id, d.m, d.code,
-           row_number() OVER (PARTITION BY d.vec_id, d.m
-                              ORDER BY d.dist ASC, d.code ASC) AS rk
-    FROM (SELECT e.vec_id, b.m, b.code, {dist('e.embedding', 'b2l')} AS dist
-          FROM embeddings e, b2l b) d
-  ) WHERE rk = 1
-)"""
-
-
 def _pq_oracle(m: int = 4, k: int = 8, d_sub: int = 16, n_q: int = 3,
                topk: int = 5) -> str:
-    dist = _pq_dist(d_sub, 'q.embedding')
+    dist = _sql_pq_dist(d_sub, 'q.embedding')
     return f"""
-WITH {_pq_training_ctes(m, k, d_sub)}, q AS (
+WITH {_sql_pq_training_ctes(m, k, d_sub)}, q AS (
   SELECT vec_id AS qid, embedding FROM embeddings ORDER BY vec_id LIMIT {n_q}
 ), lut AS (
   SELECT q.qid, b.m, b.code,
@@ -3023,12 +2927,7 @@ WITH {_pq_training_ctes(m, k, d_sub)}, q AS (
   FROM enc f JOIN lut l ON l.m = f.m AND l.code = f.code
   GROUP BY 1, 2
 )
-SELECT qid, vec_id, adc_micro, rk FROM (
-  SELECT qid, vec_id, adc_micro,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY adc_micro ASC, vec_id ASC)::INT AS rk
-  FROM sc
-) WHERE rk <= {topk} ORDER BY qid, rk
+{_sql_adc_topk(topk)}
 """
 
 
@@ -3107,24 +3006,11 @@ def pq_ivf_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _pq_ivf_oracle(m: int = 4, k: int = 8, d_sub: int = 16, n_q: int = 3,
                    n_lists: int = 4, n_probe: int = 2, topk: int = 5) -> str:
-    dist = _pq_dist(d_sub, 'q.embedding')
+    dist = _sql_pq_dist(d_sub, 'q.embedding')
     return f"""
-WITH {_pq_training_ctes(m, k, d_sub)}, q AS (
+WITH {_sql_pq_training_ctes(m, k, d_sub)}, q AS (
   SELECT vec_id AS qid, embedding FROM embeddings ORDER BY vec_id LIMIT {n_q}
-), cents AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, embedding AS cv
-  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id
-        LIMIT {n_lists})
-), asg AS (
-  SELECT vec_id, cid AS list_id FROM (
-    SELECT e.vec_id, c.cid,
-           row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY list_inner_product(e.embedding::DOUBLE[],
-                                         c.cv::DOUBLE[]) DESC,
-                      c.cid ASC) AS rk
-    FROM embeddings e, cents c
-  ) WHERE rk = 1
-), probe AS (
+), {_sql_ivf_lists(n_lists)}, probe AS (
   SELECT qid, cid AS list_id FROM (
     SELECT q.qid, c.cid,
            row_number() OVER (PARTITION BY q.qid
@@ -3146,12 +3032,7 @@ WITH {_pq_training_ctes(m, k, d_sub)}, q AS (
   JOIN lut l ON l.qid = cd.qid AND l.m = f.m AND l.code = f.code
   GROUP BY 1, 2
 )
-SELECT qid, vec_id, adc_micro, rk FROM (
-  SELECT qid, vec_id, adc_micro,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY adc_micro ASC, vec_id ASC)::INT AS rk
-  FROM sc
-) WHERE rk <= {topk} ORDER BY qid, rk
+{_sql_adc_topk(topk)}
 """
 
 
@@ -3649,8 +3530,9 @@ def ks_drift_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stats.ks_by_group(docs, "source", "n_chars").orderBy("source")
 
 
-KS_DRIFT_DOCS_SQL = """
-WITH gv AS (
+# Per-source and whole-corpus ECDFs of n_chars on one value grid (cum_g,
+# cum_all), shared by both KS oracles.
+_SQL_KS_ECDF = """gv AS (
   SELECT source AS grp, n_chars AS v, count(*)::BIGINT AS c
   FROM documents GROUP BY 1, 2
 ), vals AS (
@@ -3668,7 +3550,9 @@ WITH gv AS (
          sum(c) OVER (PARTITION BY grp ORDER BY v ASC) AS cum_g,
          sum(c_all) OVER (PARTITION BY grp ORDER BY v ASC) AS cum_all
   FROM grid
-)
+)"""
+KS_DRIFT_DOCS_SQL = f"""
+WITH {_SQL_KS_ECDF}
 SELECT grp AS source, n_g AS n_rows,
        floor(max(abs(cum_g * na.n_all - cum_all * n_g))
              / (n_g * na.n_all)::DOUBLE * 1e6 + 0.5)::BIGINT AS ks_micro
@@ -3931,25 +3815,7 @@ def ks_critical_drift_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 KS_CRITICAL_DRIFT_DOCS_SQL = f"""
-WITH gv AS (
-  SELECT source AS grp, n_chars AS v, count(*)::BIGINT AS c
-  FROM documents GROUP BY 1, 2
-), vals AS (
-  SELECT v, sum(c)::BIGINT AS c_all FROM gv GROUP BY v
-), groups AS (
-  SELECT grp, sum(c)::BIGINT AS n_g FROM gv GROUP BY grp
-), na AS (
-  SELECT sum(c_all)::BIGINT AS n_all FROM vals
-), grid AS (
-  SELECT g.grp, g.n_g, va.v, coalesce(gv.c, 0)::BIGINT AS c, va.c_all
-  FROM groups g CROSS JOIN vals va
-  LEFT JOIN gv ON gv.grp = g.grp AND gv.v = va.v
-), cum AS (
-  SELECT grp, n_g,
-         sum(c) OVER (PARTITION BY grp ORDER BY v ASC) AS cum_g,
-         sum(c_all) OVER (PARTITION BY grp ORDER BY v ASC) AS cum_all
-  FROM grid
-), ks AS (
+WITH {_SQL_KS_ECDF}, ks AS (
   SELECT grp AS source, n_g AS n_rows,
          floor(max(abs(cum_g * na.n_all - cum_all * n_g))
                / (n_g * na.n_all)::DOUBLE * 1e6 + 0.5)::BIGINT AS ks_micro,
@@ -4165,30 +4031,13 @@ QUERIES["robust_scale_events"] = (robust_scale_events, ROBUST_SCALE_EVENTS_SQL)
 # --------------------------------------------------------------------------
 # Classifier QC: exact AUC + calibration (round 7)
 # --------------------------------------------------------------------------
-_ALL_SW2 = ", ".join(f"'{w}'" for w in text.ALL_STOPWORDS)
-
-#: keep-label replay (same text.QUALITY_* constants as quality_filter_docs,
-#: so the two oracles cannot drift numerically)
+#: keep-label replay (the quality_filter_docs keep rule)
 _KEEP_SQL = f"""
   SELECT doc_id,
-         (n BETWEEN {text.QUALITY_MIN_TOKENS} AND {text.QUALITY_MAX_TOKENS})
-         AND (sum_len >= {text.QUALITY_MIN_MEAN_WORD_LEN} * n
-              AND sum_len <= {text.QUALITY_MAX_MEAN_WORD_LEN} * n)
-         AND hits >= {text.QUALITY_MIN_STOPWORD_HITS}
-         AND n_sym * 10 <= {text.QUALITY_MAX_SYMBOL_PER_10_CHARS} * n_chars
-         AND (n - nd) * {text.QUALITY_MAX_DUP_FRAC_DEN}
-             <= {text.QUALITY_MAX_DUP_FRAC_NUM} * n AS keep
+         {_SQL_QUALITY_KEEP} AS keep
   FROM (
     SELECT doc_id,
-           CAST(len(toks) AS INTEGER) AS n,
-           CAST(len(list_distinct(toks)) AS INTEGER) AS nd,
-           CAST(coalesce(list_sum(list_transform(toks, t -> length(t))), 0)
-                AS BIGINT) AS sum_len,
-           length(text) AS n_chars,
-           length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g'))
-               AS n_sym,
-           CAST(len(list_filter(toks, x -> x IN ({_ALL_SW2}))) AS INTEGER)
-               AS hits
+           {_SQL_QUALITY_STATS}
     FROM (SELECT doc_id, text, {_SQL_TOKENS.format(c='text')} AS toks
           FROM documents)
   )
@@ -4384,13 +4233,16 @@ def funnel_windowed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-FUNNEL_EVENTS_SQL = """
-WITH ev AS (
+# The view -> click -> purchase stream and each user's first view with its
+# 7-day deadline, the anchor of both greedy funnel oracles.
+_SQL_FUNNEL_ANCHOR = """ev AS (
   SELECT user_id AS u, event_type AS et, ts AS t FROM events
   WHERE event_type IN ('view', 'click', 'purchase')
 ),
 s0 AS (SELECT u, min(t) AS t0 FROM ev WHERE et = 'view' GROUP BY u),
-r0 AS (SELECT u, t0, t0 + INTERVAL 7 DAY AS deadline FROM s0),
+r0 AS (SELECT u, t0, t0 + INTERVAL 7 DAY AS deadline FROM s0)"""
+FUNNEL_EVENTS_SQL = f"""
+WITH {_SQL_FUNNEL_ANCHOR},
 s1 AS (
   SELECT e.u, min(e.t) AS t1 FROM ev e JOIN r0 ON e.u = r0.u
   WHERE e.et = 'click' AND e.t > r0.t0 AND e.t <= r0.deadline GROUP BY e.u
@@ -4522,12 +4374,7 @@ def join_size_sample_orders_customer(spark: SparkSession, sf_dir: str) -> DataFr
     bit-for-bit; the relative error is disclosed in the row (the
     estimator is unbiased over gates, not per-gate — the contract states
     what this gate saw, it does not assert a bound)."""
-    ords = load_table(spark, sf_dir, "orders").withColumnRenamed(
-        "o_custkey", "custkey"
-    )
-    cust = load_table(spark, sf_dir, "customer").withColumnRenamed(
-        "c_custkey", "custkey"
-    )
+    ords, cust = _orders_customer_on_custkey(spark, sf_dir)
     est = stats.join_size_sampled(ords, cust, ["custkey"], mod=8)
     exact = stats.join_cardinality(ords, cust, ["custkey"]).select(
         F.col("est_join_rows").alias("exact_join_rows")
@@ -4672,12 +4519,7 @@ def bucketed_join_orders_customer(spark: SparkSession, sf_dir: str) -> DataFrame
 
     from . import layout
 
-    ords = load_table(spark, sf_dir, "orders").withColumnRenamed(
-        "o_custkey", "custkey"
-    )
-    cust = load_table(spark, sf_dir, "customer").withColumnRenamed(
-        "c_custkey", "custkey"
-    )
+    ords, cust = _orders_customer_on_custkey(spark, sf_dir)
     path = stores.scratch_dir("bucketed_demo_")
     layout.write_bucketed(
         ords.repartition(8, "custkey"), "bkt_orders", "custkey", 8, path
@@ -4854,8 +4696,6 @@ def dedup_keep_best_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _keep_best_oracle() -> str:
-    from .registry import DEDUP_CLUSTERS_DOCS_SQL
-
     tail = "SELECT id AS doc_id, min(r) AS component\nFROM reach GROUP BY id"
     assert tail in DEDUP_CLUSTERS_DOCS_SQL  # guards against CTE text drift
     closure = DEDUP_CLUSTERS_DOCS_SQL.replace(
@@ -4906,8 +4746,6 @@ def dedup_clusters_twostar_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _twostar_oracle() -> str:
-    from .registry import DEDUP_CLUSTERS_DOCS_SQL
-
     return DEDUP_CLUSTERS_DOCS_SQL
 
 
@@ -4959,23 +4797,8 @@ def source_overlap_matrix_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SOURCE_OVERLAP_MATRIX_DOCS_SQL = """
-WITH hs AS (
-  SELECT doc_id,
-         list_transform(
-           range(1, len(text) - 5 + 2),
-           i -> substr(md5(substr(text, i, 5)), 1, 15)
-         ) AS hs
-  FROM documents
-  WHERE len(text) >= 5 + 4 - 1
-), fp AS (
-  SELECT doc_id,
-         unnest(list_distinct(list_transform(
-             range(1, len(hs) - 4 + 2),
-             i -> list_min(hs[i:i+3])
-         ))) AS winnow_hash
-  FROM hs
-), fs AS (
+SOURCE_OVERLAP_MATRIX_DOCS_SQL = f"""
+WITH {_sql_winnow_fp()}, fs AS (
   SELECT DISTINCT fp.winnow_hash, d.source
   FROM fp JOIN documents d USING (doc_id)
 )
@@ -4997,6 +4820,30 @@ QUERIES["source_overlap_matrix_docs"] = (
 # --------------------------------------------------------------------------
 # Right-to-be-forgotten deletion over the versioned table (round 7)
 # --------------------------------------------------------------------------
+def _rtbf_feed_counts(feed: DataFrame) -> DataFrame:
+    """One row: the change feed's delete count and its count of anything else."""
+    def n(cond):
+        return F.coalesce(F.sum(F.when(cond, 1)), F.lit(0)).cast("long")
+
+    return feed.agg(
+        n(F.col("change_type") == "delete").alias("n_delete_feed"),
+        n(F.col("change_type") != "delete").alias("_n_other_feed"),
+    )
+
+
+# The 1-in-20 md5 erase set and the version row counts it implies.
+_SQL_RTBF_COUNTS = f"""WITH g AS (
+  SELECT doc_id,
+         {_SQL_HASH60.format(c='doc_id::VARCHAR')} % 20 = 0 AS erased
+  FROM documents
+), c AS (
+  SELECT count(*)::BIGINT AS rows_v0,
+         sum(CASE WHEN NOT erased THEN 1 ELSE 0 END)::BIGINT AS rows_v1,
+         sum(CASE WHEN erased THEN 1 ELSE 0 END)::BIGINT AS n_deleted
+  FROM g
+)"""
+
+
 def rtbf_delete_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Targeted (GDPR/right-to-be-forgotten) deletion as a versioned-table
     commit: an erase-request set (deterministic md5 gate ≈5% of doc ids)
@@ -5026,22 +4873,10 @@ def rtbf_delete_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cnt = lambda df, name: df.agg(  # noqa: E731
         F.count(F.lit(1)).cast("long").alias(name)
     )
-    feed_agg = feed.agg(
-        F.coalesce(
-            F.sum(F.when(F.col("change_type") == "delete", 1)), F.lit(0)
-        )
-        .cast("long")
-        .alias("n_delete_feed"),
-        F.coalesce(
-            F.sum(F.when(F.col("change_type") != "delete", 1)), F.lit(0)
-        )
-        .cast("long")
-        .alias("_n_other_feed"),
-    )
     return (
         cnt(tableformat.read_version(spark, root, v0), "rows_v0")
         .crossJoin(cnt(tableformat.read_version(spark, root, v1), "rows_v1"))
-        .crossJoin(feed_agg)
+        .crossJoin(_rtbf_feed_counts(feed))
         .crossJoin(
             cnt(
                 tableformat.read_version(spark, root, v1).filter(erase_gate),
@@ -5063,16 +4898,7 @@ def rtbf_delete_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 RTBF_DELETE_DOCS_SQL = f"""
-WITH g AS (
-  SELECT doc_id,
-         {_SQL_HASH60.format(c='doc_id::VARCHAR')} % 20 = 0 AS erased
-  FROM documents
-), c AS (
-  SELECT count(*)::BIGINT AS rows_v0,
-         sum(CASE WHEN NOT erased THEN 1 ELSE 0 END)::BIGINT AS rows_v1,
-         sum(CASE WHEN erased THEN 1 ELSE 0 END)::BIGINT AS n_deleted
-  FROM g
-)
+{_SQL_RTBF_COUNTS}
 SELECT rows_v0, rows_v1, n_deleted,
        n_deleted AS n_delete_feed,
        true AS feed_matches,
@@ -5124,23 +4950,11 @@ def rtbf_delete_dv_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias(name)
     )
     feed = tableformat.table_changes(spark, root, v0, v1, ["doc_id"])
-    feed_agg = feed.agg(
-        F.coalesce(
-            F.sum(F.when(F.col("change_type") == "delete", 1)), F.lit(0)
-        )
-        .cast("long")
-        .alias("n_delete_feed"),
-        F.coalesce(
-            F.sum(F.when(F.col("change_type") != "delete", 1)), F.lit(0)
-        )
-        .cast("long")
-        .alias("_n_other_feed"),
-    )
     return (
         cnt(tableformat.read_version(spark, root, v0), "rows_v0")
         .crossJoin(cnt(masked, "rows_v1"))
         .crossJoin(cnt(spark.read.parquet(root + "/v1"), "mask_rows"))
-        .crossJoin(feed_agg)
+        .crossJoin(_rtbf_feed_counts(feed))
         .crossJoin(cnt(masked.filter(erase_gate), "_remaining"))
         .crossJoin(cnt(masked.exceptAll(cow), "_dv_minus_cow"))
         .crossJoin(cnt(cow.exceptAll(masked), "_cow_minus_dv"))
@@ -5163,16 +4977,7 @@ def rtbf_delete_dv_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 RTBF_DELETE_DV_DOCS_SQL = f"""
-WITH g AS (
-  SELECT doc_id,
-         {_SQL_HASH60.format(c='doc_id::VARCHAR')} % 20 = 0 AS erased
-  FROM documents
-), c AS (
-  SELECT count(*)::BIGINT AS rows_v0,
-         sum(CASE WHEN NOT erased THEN 1 ELSE 0 END)::BIGINT AS rows_v1,
-         sum(CASE WHEN erased THEN 1 ELSE 0 END)::BIGINT AS n_deleted
-  FROM g
-)
+{_SQL_RTBF_COUNTS}
 SELECT rows_v0, rows_v1, n_deleted,
        n_deleted AS mask_rows,
        n_deleted AS n_delete_feed,
@@ -5395,6 +5200,57 @@ _ASSOC_MIN_PAIR = 2
 _ASSOC_TOPK = 20
 
 
+def _basket_sets(li: DataFrame) -> DataFrame:
+    """One row per order: ``bid`` and its sorted part set ``ss`` (the
+    keyed agg dedups (bid, item) in the same exchange)."""
+    return (
+        li.select(F.col("l_orderkey").alias("bid"), F.col("l_partkey").alias("item"))
+        .groupBy("bid")
+        .agg(F.sort_array(F.collect_set("item")).alias("ss"))
+    )
+
+
+def _basket_counts(baskets: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The one-row basket total ``n_baskets`` and per-item ``n_item``."""
+    nb = baskets.agg(F.count(F.lit(1)).cast("long").alias("n_baskets"))
+    supp = (
+        baskets.select(F.explode("ss").alias("item"))
+        .groupBy("item")
+        .agg(F.count(F.lit(1)).alias("n_item"))
+    )
+    return nb, supp
+
+
+def _frequent_sets(baskets: DataFrame, items: DataFrame) -> DataFrame:
+    """Each basket's sorted set ``fs`` of the ``items`` it holds (explode →
+    broadcast-join → regroup rides the bid partitioning: no new exchange)."""
+    return (
+        baskets.select("bid", F.explode("ss").alias("item"))
+        .join(F.broadcast(items), "item")
+        .groupBy("bid")
+        .agg(F.sort_array(F.collect_set("item")).alias("fs"))
+    )
+
+
+def _pair_counts(fs: DataFrame, a: str, b: str) -> DataFrame:
+    """Baskets per item pair (``a`` < ``b``, ``n_ab``), expanded JVM-side
+    from the sorted per-basket sets after the shuffle."""
+    return (
+        fs.filter(F.size("fs") >= 2)
+        .select(
+            F.explode(
+                F.expr(
+                    "flatten(transform(fs, (x, i) ->"
+                    " transform(slice(fs, i + 2, size(fs)),"
+                    " y -> struct(x AS a, y AS b))))"
+                )
+            ).alias("p")
+        )
+        .groupBy(F.col("p.a").alias(a), F.col("p.b").alias(b))
+        .agg(F.count(F.lit(1)).alias("n_ab"))
+    )
+
+
 def assoc_rules_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise association rules over order baskets (the Apriori pair
     stage, Agrawal & Srikant VLDB'94): support / confidence / lift for
@@ -5415,46 +5271,19 @@ def assoc_rules_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     # basket-scale rows. Eager cut: three consumers (nb, supp, pairs)
     # would otherwise each replay the basket agg (per-branch pruning
     # defeats ReuseExchange — the covariance_embeddings r14 lesson).
-    baskets = cut(
-        li.select(F.col("l_orderkey").alias("bid"), F.col("l_partkey").alias("item"))
-        .groupBy("bid")
-        .agg(F.sort_array(F.collect_set("item")).alias("ss"))
-    )
+    baskets = cut(_basket_sets(li))
     # scalar-subquery crossJoin (not .count()): the basket total rides the
     # same job instead of costing an extra driver round-trip
-    nb = baskets.agg(F.count(F.lit(1)).cast("long").alias("n_baskets"))
-    supp = (
-        baskets.select(F.explode("ss").alias("item"))
-        .groupBy("item")
-        .agg(F.count(F.lit(1)).alias("n_item"))
-    )
+    nb, supp = _basket_counts(baskets)
     freq = supp.filter(F.col("n_item") >= _ASSOC_MIN_ITEM)
     # Apriori prune BEFORE pair expansion: drop infrequent items from each
     # basket set (explode → broadcast-join → regroup stays on the bid
     # partitioning, so no new exchange), then expand a<b pairs from the
     # sorted frequent set — Σ C(f,2) fan-out, same volume the self-join
     # paid, generated post-shuffle.
-    fs = (
-        baskets.select("bid", F.explode("ss").alias("item"))
-        .join(F.broadcast(freq.select("item")), "item")
-        .groupBy("bid")
-        .agg(F.sort_array(F.collect_set("item")).alias("fs"))
-    )
+    fs = _frequent_sets(baskets, freq.select("item"))
     pairs = (
-        fs.filter(F.size("fs") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(fs, (x, i) ->"
-                    " transform(slice(fs, i + 2, size(fs)),"
-                    " y -> struct(x AS a, y AS b))))"
-                )
-            ).alias("p")
-        )
-        .groupBy(
-            F.col("p.a").alias("item_a"), F.col("p.b").alias("item_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_ab"))
+        _pair_counts(fs, "item_a", "item_b")
         .filter(F.col("n_ab") >= _ASSOC_MIN_PAIR)
     )
     scored = (
@@ -7026,13 +6855,8 @@ def funnel_time_to_convert_events(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-FUNNEL_TIME_TO_CONVERT_SQL = """
-WITH ev AS (
-  SELECT user_id AS u, event_type AS et, ts AS t FROM events
-  WHERE event_type IN ('view', 'click', 'purchase')
-),
-s0 AS (SELECT u, min(t) AS t0 FROM ev WHERE et = 'view' GROUP BY u),
-r0 AS (SELECT u, t0, t0 + INTERVAL 7 DAY AS deadline FROM s0),
+FUNNEL_TIME_TO_CONVERT_SQL = f"""
+WITH {_SQL_FUNNEL_ANCHOR},
 s1 AS (
   SELECT e.u, r0.t0, r0.deadline, min(e.t) AS t1
   FROM ev e JOIN r0 ON e.u = r0.u

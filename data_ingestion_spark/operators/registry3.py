@@ -20,6 +20,27 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import cut, load_table
+from .registry import (
+    DEDUP_SIMHASH_DOCS_SQL,
+    KMEANS_CENTROIDS_EMBEDDINGS_SQL,
+    _SQL_BLOCKED_PAIRS,
+    _SQL_HASH60,
+    _SQL_SHINGLE_BLOCKS,
+    _SQL_TOKENS,
+    _sql_adc_topk,
+    _sql_ivf_lists,
+    _sql_jaccard,
+    _sql_pq_training_ctes,
+    _sql_winnow_fp,
+    _trade_pairs,
+)
+from .registry2 import (
+    _basket_counts,
+    _basket_sets,
+    _frequent_sets,
+    _pair_counts,
+    _pq_ivf_oracle,
+)
 
 QUERIES: dict = {}
 
@@ -260,8 +281,6 @@ def simhash_multiprobe_pairs_docs(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 def _simhash_multiprobe_oracle() -> str:
-    from .registry import DEDUP_SIMHASH_DOCS_SQL
-
     return f"""
 SELECT a.doc_id AS id_a, b.doc_id AS id_b,
        CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
@@ -439,8 +458,6 @@ def pq_ivf_stored_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pq_ivf_stored_oracle() -> str:
-    from .registry2 import _pq_ivf_oracle
-
     return _pq_ivf_oracle(n_q=2)
 
 
@@ -520,23 +537,8 @@ def _pq_ivf_index_build_oracle(
     centroid/assignment CTEs of _pq_ivf_oracle — and certifies the same
     per-member summaries pq_ivf_index_build_embeddings reads back from
     the committed snapshot."""
-    from .registry2 import _pq_training_ctes
-
     return f"""
-WITH {_pq_training_ctes(m, k, d_sub)}, cents AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, embedding AS cv
-  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id
-        LIMIT {n_lists})
-), asg AS (
-  SELECT vec_id, cid AS list_id FROM (
-    SELECT e.vec_id, c.cid,
-           row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY list_inner_product(e.embedding::DOUBLE[],
-                                         c.cv::DOUBLE[]) DESC,
-                      c.cid ASC) AS rk
-    FROM embeddings e, cents c
-  ) WHERE rk = 1
-)
+WITH {_sql_pq_training_ctes(m, k, d_sub)}, {_sql_ivf_lists(n_lists)}
 SELECT * FROM (
   SELECT 'codes' AS member, a.list_id::BIGINT AS grp,
          count(*)::BIGINT AS n_rows,
@@ -1395,8 +1397,6 @@ def silhouette_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _silhouette_oracle() -> str:
-    from .registry import KMEANS_CENTROIDS_EMBEDDINGS_SQL
-
     return f"""
 WITH cents AS (
   SELECT grp, list(centroid_val ORDER BY dim) AS cv
@@ -1443,68 +1443,6 @@ QUERIES["silhouette_kmeans_embeddings"] = (
 # --------------------------------------------------------------------------
 # Residual IVF-PQ (FAISS by_residual=True — the production encoding)
 # --------------------------------------------------------------------------
-def _pq_training_ctes_over(
-    table: str, vec: str, m: int, k: int, d_sub: int
-) -> str:
-    """registry2._pq_training_ctes generalized over (table, vec column) so
-    the same two-Lloyd-round PQ training replays over the RESIDUAL table
-    (whose vectors are already DOUBLE lists). Structure kept line-for-line
-    parallel to the original so the two stay auditable together."""
-    dist = (
-        f"list_sum(list_transform(generate_series(1, {d_sub}), j -> "
-        f"(e.{vec}[b.m * {d_sub} + j]::DOUBLE - b.cv[j])"
-        f" * (e.{vec}[b.m * {d_sub} + j]::DOUBLE - b.cv[j])))"
-    )
-    rounds = []
-    for i in (1, 2):
-        prev = f"b{i-1}"
-        rounds.append(f"""a{i} AS (
-  SELECT vec_id, m, code FROM (
-    SELECT d.vec_id, d.m, d.code,
-           row_number() OVER (PARTITION BY d.vec_id, d.m
-                              ORDER BY d.dist ASC, d.code ASC) AS rk
-    FROM (SELECT e.vec_id, b.m, b.code,
-                 {dist.replace('b.cv', 'b.cv').replace('b2l', prev + 'l')} AS dist
-          FROM {table} e, {prev}l b) d
-  ) WHERE rk = 1
-), n{i} AS (
-  SELECT a.m, a.code, t.j - 1 AS dim,
-         round(avg(e.{vec}[a.m * {d_sub} + t.j]::DOUBLE), 6) AS c
-  FROM a{i} a JOIN {table} e USING (vec_id),
-       generate_series(1, {d_sub}) t(j)
-  GROUP BY 1, 2, 3
-), b{i} AS (
-  SELECT p.m, p.code, p.dim, coalesce(n{i}.c, p.c) AS c
-  FROM {prev} p LEFT JOIN n{i}
-    ON n{i}.m = p.m AND n{i}.code = p.code AND n{i}.dim = p.dim
-), b{i}l AS (
-  SELECT m, code, list(c ORDER BY dim) AS cv FROM b{i} GROUP BY m, code
-)""")
-    rounds_sql = ",\n".join(rounds)
-    return f"""seeds AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS code, {vec} AS sv
-  FROM (SELECT vec_id, {vec} FROM {table} ORDER BY vec_id LIMIT {k})
-), b0 AS (
-  SELECT s.m, seeds.code, t.j - 1 AS dim,
-         seeds.sv[s.m * {d_sub} + t.j]::DOUBLE AS c
-  FROM seeds, (SELECT range::INT AS m FROM range(0, {m})) s,
-       generate_series(1, {d_sub}) t(j)
-), b0l AS (
-  SELECT m, code, list(c ORDER BY dim) AS cv FROM b0 GROUP BY m, code
-),
-{rounds_sql},
-enc AS (
-  SELECT vec_id, m, code FROM (
-    SELECT d.vec_id, d.m, d.code,
-           row_number() OVER (PARTITION BY d.vec_id, d.m
-                              ORDER BY d.dist ASC, d.code ASC) AS rk
-    FROM (SELECT e.vec_id, b.m, b.code,
-                 {dist.replace(prev + 'l', 'b2l')} AS dist
-          FROM {table} e, b2l b) d
-  ) WHERE rk = 1
-)"""
-
-
 def pq_ivf_residual_topk_embeddings(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1622,26 +1560,13 @@ def _pq_ivf_residual_oracle(
 ) -> str:
     dim = m * d_sub
     return f"""
-WITH cents AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, embedding AS cv
-  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id
-        LIMIT {n_lists})
-), asg AS (
-  SELECT vec_id, cid AS list_id FROM (
-    SELECT e.vec_id, c.cid,
-           row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY list_inner_product(e.embedding::DOUBLE[],
-                                         c.cv::DOUBLE[]) DESC,
-                      c.cid ASC) AS rk
-    FROM embeddings e, cents c
-  ) WHERE rk = 1
-), res AS (
+WITH {_sql_ivf_lists(n_lists)}, res AS (
   SELECT e.vec_id, a.list_id,
          list_transform(generate_series(1, {dim}),
            i -> e.embedding[i]::DOUBLE - c.cv[i]::DOUBLE) AS rv
   FROM embeddings e JOIN asg a USING (vec_id)
   JOIN cents c ON c.cid = a.list_id
-), {_pq_training_ctes_over('res', 'rv', m, k, d_sub)}, q AS (
+), {_sql_pq_training_ctes(m, k, d_sub, 'res', 'rv')}, q AS (
   SELECT vec_id AS qid, embedding FROM embeddings ORDER BY vec_id
   LIMIT {n_q}
 ), probe AS (
@@ -1671,12 +1596,7 @@ WITH cents AS (
             AND l.m = f.m AND l.code = f.code
   GROUP BY 1, 2
 )
-SELECT qid, vec_id, adc_micro, rk FROM (
-  SELECT qid, vec_id, adc_micro,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY adc_micro ASC, vec_id ASC)::INT AS rk
-  FROM sc
-) WHERE rk <= {topk} ORDER BY qid, rk
+{_sql_adc_topk(topk)}
 """
 
 
@@ -1714,14 +1634,7 @@ def label_propagation_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_quantity") > 45
     ).select("l_orderkey", "l_suppkey")
-    pairs = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("c"),
-            (F.col("l_suppkey") * 2 + 1).alias("s"),
-        )
-        .distinct()
-    )
+    pairs = _trade_pairs(o, li)
     # directed edges dst <- src mode; suppliers odd, customers even.
     # Edges are checkpointed ONCE (the pagerank lineage-truncation
     # discipline: without it every later half-round re-executes the
@@ -2517,6 +2430,43 @@ QUERIES["negative_sampling_pairs"] = (
 # --------------------------------------------------------------------------
 # Late-interaction retrieval: ColBERT-style MaxSim over token vectors
 # --------------------------------------------------------------------------
+def _maxsim_scores(emb: DataFrame, n_q: int, m: int, d_sub: int,
+                   col: str) -> DataFrame:
+    """ColBERT MaxSim micros ``col`` of every (doc_id, qid): the ``n_q``
+    lowest-id vectors are the queries, token t of a vector is its t-th
+    ``d_sub``-dim slice, and the queries' ``m`` token vectors ride as
+    literals (16 literal dots + 4 maxes + 1 sum per row, no join). Each
+    (q-token, d-token) max freezes to micros before the sum."""
+    from .similarity import _sql_double_array
+
+    qrows = (
+        emb.orderBy("vec_id").limit(n_q).select("vec_id", "embedding").collect()
+    )
+    score_exprs = []
+    for r in qrows:
+        qid, qv = r["vec_id"], [float(x) for x in r["embedding"]]
+        per_qtok = []
+        for s in range(m):
+            qt = qv[s * d_sub : (s + 1) * d_sub]
+            dots = ", ".join(
+                f"aggregate(zip_with(slice(embedding, {t * d_sub + 1}, {d_sub}),"
+                f" {_sql_double_array(qt)},"
+                f" (x, y) -> CAST(x AS DOUBLE) * y), 0.0D, (acc, v) -> acc + v)"
+                for t in range(m)
+            )
+            per_qtok.append(
+                f"CAST(floor(greatest({dots}) * 1e6 + 0.5D) AS BIGINT)"
+            )
+        score_exprs.append(
+            f"struct(CAST({qid} AS BIGINT) AS qid,"
+            f" CAST({' + '.join(per_qtok)} AS BIGINT) AS {col})"
+        )
+    return emb.select(
+        F.col("vec_id").alias("doc_id"),
+        F.expr(f"explode(array({', '.join(score_exprs)}))").alias("sc"),
+    ).select("doc_id", "sc.qid", f"sc.{col}")
+
+
 def colbert_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Late-interaction retrieval (ColBERT, Khattab & Zaharia SIGIR'20):
     score(q, d) = Σ over query tokens of max over doc tokens of the
@@ -2536,37 +2486,9 @@ def colbert_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-exact."""
     from pyspark.sql import Window as W
 
-    from . import similarity
-
     emb = load_table(spark, sf_dir, "embeddings")
     n_q, m, d_sub, topk = 2, 4, 16, 5
-    qrows = (
-        emb.orderBy("vec_id").limit(n_q).select("vec_id", "embedding").collect()
-    )
-    score_exprs = []
-    for qid, qv in [(r["vec_id"], [float(x) for x in r["embedding"]]) for r in qrows]:
-        per_qtok = []
-        for s in range(m):
-            qt = qv[s * d_sub : (s + 1) * d_sub]
-            dots = ", ".join(
-                # doc token t = slice(embedding, t*16+1, 16); dot vs the
-                # literal query token via the shared left-fold kernel
-                f"aggregate(zip_with(slice(embedding, {t * d_sub + 1}, {d_sub}),"
-                f" {similarity._sql_double_array(qt)},"
-                f" (x, y) -> CAST(x AS DOUBLE) * y), 0.0D, (acc, v) -> acc + v)"
-                for t in range(m)
-            )
-            per_qtok.append(
-                f"CAST(floor(greatest({dots}) * 1e6 + 0.5D) AS BIGINT)"
-            )
-        score_exprs.append(
-            f"struct(CAST({qid} AS BIGINT) AS qid,"
-            f" CAST({' + '.join(per_qtok)} AS BIGINT) AS maxsim_micro)"
-        )
-    scored = emb.select(
-        F.col("vec_id").alias("doc_id"),
-        F.expr(f"explode(array({', '.join(score_exprs)}))").alias("sc"),
-    ).select("doc_id", "sc.qid", "sc.maxsim_micro")
+    scored = _maxsim_scores(emb, n_q, m, d_sub, "maxsim_micro")
     w = W.partitionBy("qid").orderBy(
         F.col("maxsim_micro").desc(), F.col("doc_id").asc()
     )
@@ -2579,11 +2501,8 @@ def colbert_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-COLBERT_MAXSIM_TOPK_SQL = """
-WITH q AS (
-  SELECT vec_id AS qid, embedding AS qv FROM embeddings
-  ORDER BY vec_id LIMIT 2
-), pairs AS (
+# Per (query, doc, query token) best token dot of the MaxSim kernel.
+_SQL_MAXSIM_PAIRS = """pairs AS (
   SELECT q.qid, d.vec_id AS doc_id, s.st AS s_tok,
          max(list_inner_product(
            list_transform(generate_series(1, 16),
@@ -2595,7 +2514,12 @@ WITH q AS (
        (SELECT range::INT AS dt FROM range(0, 4)) t
   WHERE d.vec_id <> q.qid
   GROUP BY q.qid, d.vec_id, s.st
-), scored AS (
+)"""
+COLBERT_MAXSIM_TOPK_SQL = f"""
+WITH q AS (
+  SELECT vec_id AS qid, embedding AS qv FROM embeddings
+  ORDER BY vec_id LIMIT 2
+), {_SQL_MAXSIM_PAIRS}, scored AS (
   SELECT qid, doc_id,
          sum(floor(best * 1e6 + 0.5)::BIGINT)::BIGINT AS maxsim_micro
   FROM pairs GROUP BY qid, doc_id
@@ -3848,23 +3772,8 @@ def winnow_fingerprint_build_docs(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-WINNOW_FINGERPRINT_BUILD_DOCS_SQL = """
-WITH hs AS (
-  SELECT doc_id, source,
-         list_transform(
-           range(1, len(text) - 5 + 2),
-           i -> substr(md5(substr(text, i, 5)), 1, 15)
-         ) AS hs
-  FROM documents
-  WHERE len(text) >= 5 + 4 - 1
-), fp AS (
-  SELECT doc_id, source,
-         unnest(list_distinct(list_transform(
-             range(1, len(hs) - 4 + 2),
-             i -> list_min(hs[i:i+3])
-         ))) AS winnow_hash
-  FROM hs
-)
+WINNOW_FINGERPRINT_BUILD_DOCS_SQL = f"""
+WITH {_sql_winnow_fp("doc_id, source")}
 SELECT source,
        count(DISTINCT doc_id)::BIGINT AS n_docs,
        count(*)::BIGINT AS n_fps,
@@ -3954,23 +3863,8 @@ def plagiarism_pairs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PLAGIARISM_PAIRS_DOCS_SQL = """
-WITH hs AS (
-  SELECT doc_id,
-         list_transform(
-           range(1, len(text) - 5 + 2),
-           i -> substr(md5(substr(text, i, 5)), 1, 15)
-         ) AS hs
-  FROM documents
-  WHERE len(text) >= 5 + 4 - 1
-), fp AS (
-  SELECT doc_id,
-         unnest(list_distinct(list_transform(
-             range(1, len(hs) - 4 + 2),
-             i -> list_min(hs[i:i+3])
-         ))) AS winnow_hash
-  FROM hs
-), common AS (
+PLAGIARISM_PAIRS_DOCS_SQL = f"""
+WITH {_sql_winnow_fp()}, common AS (
   SELECT winnow_hash FROM fp GROUP BY winnow_hash HAVING count(*) > 10
 ), fpf AS (
   SELECT f.* FROM fp f LEFT JOIN common c USING (winnow_hash)
@@ -4023,7 +3917,6 @@ def rbo_rankings_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     from . import similarity
-    from .similarity import _sql_double_array
 
     emb = load_table(spark, sf_dir, "embeddings")
     n_q, m, d_sub = 2, 4, 16
@@ -4035,34 +3928,7 @@ def rbo_rankings_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rank").cast("long").alias("r1"),
     )
     # ranking 2: MaxSim top-10 (colbert_maxsim_topk's kernel at k=10)
-    qrows = (
-        emb.orderBy("vec_id").limit(n_q).select("vec_id", "embedding").collect()
-    )
-    score_exprs = []
-    for qid, qv in [
-        (r["vec_id"], [float(x) for x in r["embedding"]]) for r in qrows
-    ]:
-        per_qtok = []
-        for s in range(m):
-            qt = qv[s * d_sub : (s + 1) * d_sub]
-            dots = ", ".join(
-                f"aggregate(zip_with(slice(embedding, {t * d_sub + 1},"
-                f" {d_sub}), {_sql_double_array(qt)},"
-                f" (x, y) -> CAST(x AS DOUBLE) * y), 0.0D,"
-                f" (acc, v) -> acc + v)"
-                for t in range(m)
-            )
-            per_qtok.append(
-                f"CAST(floor(greatest({dots}) * 1e6 + 0.5D) AS BIGINT)"
-            )
-        score_exprs.append(
-            f"struct(CAST({qid} AS BIGINT) AS qid,"
-            f" CAST({' + '.join(per_qtok)} AS BIGINT) AS ms)"
-        )
-    ms = emb.select(
-        F.col("vec_id").alias("doc_id"),
-        F.expr(f"explode(array({', '.join(score_exprs)}))").alias("sc"),
-    ).select("doc_id", "sc.qid", "sc.ms").filter(
+    ms = _maxsim_scores(emb, n_q, m, d_sub, "ms").filter(
         F.col("doc_id") != F.col("qid")
     )
     w2 = W.partitionBy("qid").orderBy(F.col("ms").desc(), F.col("doc_id").asc())
@@ -4109,19 +3975,7 @@ WITH q AS (
                       c.vec_id ASC) AS rank
     FROM q JOIN embeddings c ON c.vec_id <> q.qid
   ) WHERE rank <= 10
-), pairs AS (
-  SELECT q.qid, d.vec_id AS doc_id, s.st AS s_tok,
-         max(list_inner_product(
-           list_transform(generate_series(1, 16),
-                          i -> q.qv[s.st * 16 + i]::DOUBLE),
-           list_transform(generate_series(1, 16),
-                          i -> d.embedding[t.dt * 16 + i]::DOUBLE))) AS best
-  FROM q, embeddings d,
-       (SELECT range::INT AS st FROM range(0, 4)) s,
-       (SELECT range::INT AS dt FROM range(0, 4)) t
-  WHERE d.vec_id <> q.qid
-  GROUP BY q.qid, d.vec_id, s.st
-), msc AS (
+), {_SQL_MAXSIM_PAIRS}, msc AS (
   SELECT qid, doc_id,
          sum(floor(best * 1e6 + 0.5)::BIGINT)::BIGINT AS ms
   FROM pairs GROUP BY qid, doc_id
@@ -4672,33 +4526,12 @@ def dedup_review_queue_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DEDUP_REVIEW_QUEUE_DOCS_SQL = """
-WITH base AS (
-  SELECT doc_id, lang, n_chars // 200 AS bucket,
-         list_transform(
-           generate_series(1, greatest(len(toks) - 2, 0)),
-           i -> array_to_string(list_slice(toks, i, i + 2), ' ')
-         ) AS shingles
-  FROM (SELECT doc_id, lang, n_chars,
-               list_filter(string_split_regex(lower(text), '\\s+'),
-                           x -> x <> '') AS toks
-        FROM documents)
-), nonempty AS (
-  SELECT * FROM base WHERE len(shingles) > 0
-)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       round(len(list_intersect(a.shingles, b.shingles))::DOUBLE
-             / len(list_distinct(list_concat(a.shingles, b.shingles))), 4)
-         AS jaccard
-FROM nonempty a
-JOIN nonempty b
-  ON a.lang IS NOT DISTINCT FROM b.lang AND a.bucket IS NOT DISTINCT FROM b.bucket AND a.doc_id < b.doc_id
-WHERE round(len(list_intersect(a.shingles, b.shingles))::DOUBLE
-            / len(list_distinct(list_concat(a.shingles, b.shingles))), 4)
-      >= 0.02
-  AND round(len(list_intersect(a.shingles, b.shingles))::DOUBLE
-            / len(list_distinct(list_concat(a.shingles, b.shingles))), 4)
-      < 0.3
+DEDUP_REVIEW_QUEUE_DOCS_SQL = f"""
+WITH {_SQL_SHINGLE_BLOCKS}
+SELECT a.doc_id AS id_a, b.doc_id AS id_b, {_sql_jaccard()} AS jaccard
+{_SQL_BLOCKED_PAIRS}
+WHERE {_sql_jaccard()} >= 0.02
+  AND {_sql_jaccard()} < 0.3
 ORDER BY jaccard DESC, id_a ASC, id_b ASC
 LIMIT 50
 """
@@ -4734,43 +4567,17 @@ def assoc_triples_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     # generated JVM-side from the sorted per-basket frequent-item set
     # after the shuffle. Eager cut: nb / supp / pairs / triples would each
     # replay the basket agg otherwise.
-    baskets = cut(
-        li.select(F.col("l_orderkey").alias("bid"), F.col("l_partkey").alias("item"))
-        .groupBy("bid")
-        .agg(F.sort_array(F.collect_set("item")).alias("ss"))
-    )
-    nb = baskets.agg(F.count(F.lit(1)).cast("long").alias("n_baskets"))
-    supp = (
-        baskets.select(F.explode("ss").alias("item"))
-        .groupBy("item")
-        .agg(F.count(F.lit(1)).alias("n_item"))
-    )
+    baskets = cut(_basket_sets(li))
+    nb, supp = _basket_counts(baskets)
     freq_items = (
         supp.crossJoin(F.broadcast(nb))
         .filter(F.col("n_item") >= F.expr("greatest(2, n_baskets div 10000)"))
         .select("item")
     )
-    # per-basket sorted FREQUENT-item set (explode → broadcast-join →
-    # regroup rides the existing bid partitioning: no new exchange)
-    fs = cut(  # reused by pairs AND triple counting
-        baskets.select("bid", F.explode("ss").alias("item"))
-        .join(F.broadcast(freq_items), "item")
-        .groupBy("bid")
-        .agg(F.sort_array(F.collect_set("item")).alias("fs"))
-    )
+    # per-basket sorted FREQUENT-item set, reused by pairs AND triples
+    fs = cut(_frequent_sets(baskets, freq_items))
     pairs = (
-        fs.filter(F.size("fs") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(fs, (x, i) ->"
-                    " transform(slice(fs, i + 2, size(fs)),"
-                    " y -> struct(x AS a, y AS b))))"
-                )
-            ).alias("p")
-        )
-        .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        .agg(F.count(F.lit(1)).alias("n_ab"))
+        _pair_counts(fs, "a", "b")
         .crossJoin(F.broadcast(nb))
         .filter(F.col("n_ab") >= F.expr("greatest(2, n_baskets div 10000)"))
         .select("a", "b")
@@ -5294,7 +5101,6 @@ def kcenter_coreset_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one row to the driver per round — the kmeans centroid discipline);
     the oracle unrolls all three rounds in SQL. d² expands via the
     shared left-fold kernels."""
-    from . import similarity
     from .similarity import _sql_dot, _sql_double_array
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -5496,8 +5302,6 @@ def cluster_keywords_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cluster_keywords_oracle() -> str:
-    from .registry import KMEANS_CENTROIDS_EMBEDDINGS_SQL
-
     return f"""
 WITH cents AS (
   SELECT grp, list(centroid_val ORDER BY dim) AS cv
@@ -5624,8 +5428,6 @@ ORDER BY lang, bucket
 
 
 def _shingle_base_build_oracle() -> str:
-    from .registry import _SQL_HASH60, _SQL_TOKENS
-
     return SHINGLE_BASE_BUILD_DOCS_SQL.format(
         _SQL_TOKENS_C=_SQL_TOKENS.format(c="text"),
         _SQL_HASH60_S=_SQL_HASH60.format(c="s"),

@@ -26,6 +26,19 @@ from ..functions.vector_functions import cosine_similarity
 from ..session import cut
 
 
+def _top_cosine(scored: DataFrame, k: int) -> DataFrame:
+    """Each query's ``k`` highest-``cosine`` rows, ranked (neighbor_id
+    breaks ties)."""
+    w = W.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cosine", "rank")
+    )
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -49,14 +62,7 @@ def cosine_topk(
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", sim.alias("cosine"))
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_cosine(scored, k)
 
 
 def _deterministic_hyperplanes(dim: int, bits: int, seed: int = 42) -> list[list[float]]:
@@ -216,14 +222,7 @@ def ivf_topk(
         .select("query_id", "neighbor_id", sim.alias("cosine"))
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_cosine(scored, k)
 
 
 def hyperplane_lsh_pairs(
@@ -1137,8 +1136,15 @@ def pq_adc_topk(
 
     Output: (qid, vec_id, adc_micro, rk) — ``topk`` rows per query.
     """
-    from pyspark.sql import Window as W
+    books, flat = _pq_code_rows(corpus, id_col, vec_col, m, k, n_iter)
+    lut = _pq_lut(queries, books, qid_col, vec_col)
+    return _adc_topk(flat.join(F.broadcast(lut), ["m", "code"]), qid_col, id_col, topk)
 
+
+def _pq_code_rows(corpus: DataFrame, id_col: str, vec_col: str, m: int,
+                  k: int, n_iter: int) -> tuple[list, DataFrame]:
+    """Train the codebooks and encode ``corpus``: the books and one
+    (id, m, code) row per vector and subspace."""
     books = pq_train(corpus, id_col, vec_col, m=m, k=k, n_iter=n_iter)
     codes = pq_encode(corpus, id_col, vec_col, books)
     code_struct = ", ".join(
@@ -1147,10 +1153,14 @@ def pq_adc_topk(
     flat = codes.select(
         F.col(id_col), F.expr(f"explode(array({code_struct}))").alias("mc")
     ).select(id_col, "mc.m", "mc.code")
-    lut = _pq_lut(queries, books, qid_col, vec_col)
+    return books, flat
+
+
+def _adc_topk(hits: DataFrame, qid_col: str, id_col: str, topk: int) -> DataFrame:
+    """Sum each (query, vector)'s LUT ``d_micro`` hits into ``adc_micro``
+    and keep the ``topk`` smallest per query (id breaks ties)."""
     scored = (
-        flat.join(F.broadcast(lut), ["m", "code"])
-        .groupBy(qid_col, id_col)
+        hits        .groupBy(qid_col, id_col)
         .agg(F.sum("d_micro").alias("adc_micro"))
     )
     w = W.partitionBy(qid_col).orderBy(
@@ -1231,26 +1241,9 @@ def pq_ivf_topk(
     cand = assigned.join(F.broadcast(probes), "list_id").select(
         qid_col, id_col
     )
-    books = pq_train(corpus, id_col, vec_col, m=m, k=k, n_iter=n_iter)
-    codes = pq_encode(corpus, id_col, vec_col, books)
-    code_struct = ", ".join(
-        f"struct({s} AS m, code_{s} AS code)" for s in range(m)
-    )
-    flat = codes.select(
-        F.col(id_col), F.expr(f"explode(array({code_struct}))").alias("mc")
-    ).select(id_col, "mc.m", "mc.code")
+    books, flat = _pq_code_rows(corpus, id_col, vec_col, m, k, n_iter)
     lut = _pq_lut(queries, books, qid_col, vec_col)
-    scored = (
-        flat.join(cand, id_col)
-        .join(F.broadcast(lut), [qid_col, "m", "code"])
-        .groupBy(qid_col, id_col)
-        .agg(F.sum("d_micro").alias("adc_micro"))
-    )
-    w = W.partitionBy(qid_col).orderBy(
-        F.col("adc_micro").asc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= topk)
-        .select(qid_col, id_col, "adc_micro", "rk")
+    return _adc_topk(
+        flat.join(cand, id_col).join(F.broadcast(lut), [qid_col, "m", "code"]),
+        qid_col, id_col, topk,
     )

@@ -321,6 +321,18 @@ def ewma_by_key(
     )
 
 
+def _funnel_stream(events: DataFrame, user_col: str, type_col: str,
+                   ts_col: str, steps: Sequence[str]) -> DataFrame:
+    """The funnel's ``(u, et, t)`` stream of step events, cut eagerly: every
+    stage's right side re-scanned the event source otherwise (the combo
+    query funnel_windowfunnel_exact_events held 13 event scans in one plan)."""
+    return cut(events.select(
+        F.col(user_col).alias("u"),
+        F.col(type_col).alias("et"),
+        F.col(ts_col).alias("t"),
+    ).filter(F.col(type_col).isin(list(steps))))
+
+
 def funnel_steps(
     events: DataFrame,
     user_col: str,
@@ -357,15 +369,7 @@ def funnel_steps(
     (hence oracle-replayable): min() over a fixed predicate has no tie
     ambiguity, and one anchor per user keeps every stage |users|-rows.
     """
-    # r14: eager cut of the 3-column step-filtered stream — each stage's
-    # right side re-scanned the event source otherwise (see
-    # window_funnel_exact; same rationale).
-    ev = events.select(
-        F.col(user_col).alias("u"),
-        F.col(type_col).alias("et"),
-        F.col(ts_col).alias("t"),
-    ).filter(F.col(type_col).isin(list(steps)))
-    ev = cut(ev)
+    ev = _funnel_stream(events, user_col, type_col, ts_col, steps)
     reached = (
         ev.filter(F.col("et") == steps[0])
         .groupBy("u")
@@ -446,15 +450,7 @@ def window_funnel_exact(
     where n_users counts DISTINCT users reaching the stage from any
     anchor.
     """
-    # r14: eager cut of the 3-column step-filtered stream — every stage's
-    # right side re-scanned the event source otherwise (the combo query
-    # funnel_windowfunnel_exact_events held 13 event scans in one plan).
-    ev = events.select(
-        F.col(user_col).alias("u"),
-        F.col(type_col).alias("et"),
-        F.col(ts_col).alias("t"),
-    ).filter(F.col(type_col).isin(list(steps)))
-    ev = cut(ev)
+    ev = _funnel_stream(events, user_col, type_col, ts_col, steps)
     reached = (
         ev.filter(F.col("et") == steps[0])
         .select("u", F.col("t").alias("t0"))

@@ -39,8 +39,24 @@ TABLES = (
 )
 
 
+# The directory that holds the package: Python workers import it from there.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else half the host's physical RAM in
+    whole GiB (at least 1g, at most 48g)."""
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if mem:
+        return mem
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48, max(1, ram // 2 // 2**30))}g"
+
+
 def get_spark(app_name: str = "data_ingestion_spark", cpus: int | None = None) -> SparkSession:
-    """Build (or reuse) a local SparkSession with scale-appropriate defaults."""
+    """Build (or reuse) a local SparkSession with scale-appropriate defaults.
+    Its Python workers find the package whatever the working directory and
+    ``PYTHONPATH`` of the caller."""
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
     builder = (
@@ -52,7 +68,8 @@ def get_spark(app_name: str = "data_ingestion_spark", cpus: int | None = None) -
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _driver_memory())
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -14,8 +14,9 @@ They differ only in their source and in how they decode one receive into
 3. skip files that already finalized Success, so a replayed micro-batch
    or a redelivered message does not re-ingest them;
 4. run ``IngestionPipeline.process_file`` on every other file, a failure
-   isolated to its file (upgrade over ecs_service.rs:205, where the first
-   failing record aborts the rest of its message);
+   (raised, or a Failed result from the sink write) isolated to its file
+   (upgrade over ecs_service.rs:205, where the first failing record aborts
+   the rest of its message);
 5. return the outcome per record, so the SQS door can ack per message.
 """
 
@@ -68,8 +69,9 @@ class FrontDoor:
 
     def ingest(self, records: list[Record]) -> list[bool]:
         """Ingest one receive's records in order. Returns, per record,
-        whether it is settled: False only where ``process_file`` raised,
-        so a redelivery could still succeed."""
+        whether it is settled: False where ``process_file`` raised or
+        returned a non-Success result (a failed sink write), so a
+        redelivery could still succeed."""
         log = self.pipeline.log
         done = log.successful_files()
         settled = []
@@ -85,9 +87,14 @@ class FrontDoor:
                 self.skipped.append(rec.file.file_name)
             else:
                 try:
-                    self.results.append(self.pipeline.process_file(rec.file))
+                    result = self.pipeline.process_file(rec.file)
                 except IngestionError as ex:
                     self.failures.append((rec.file.file_name, str(ex)))
                     ok = False
+                else:
+                    self.results.append(result)
+                    if result.status != "Success":
+                        self.failures.append((rec.file.file_name, result.message))
+                        ok = False
             settled.append(ok)
         return settled

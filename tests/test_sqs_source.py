@@ -126,6 +126,31 @@ def test_failed_file_keeps_message_for_redelivery(spark, tmp_path, landing):
     assert [f for f, _ in loop.failures] == ["qbucket/uploads/missing.csv"]
 
 
+def test_failed_sink_write_keeps_message_for_redelivery(spark, tmp_path, landing, monkeypatch):
+    # the parse succeeds but the sink write fails on a later partition, so
+    # process_file returns a Failed result instead of raising
+    from pyspark.sql import functions as F
+
+    from data_ingestion_spark import pipeline as pipeline_mod
+
+    def poisoned_parse(spark, path, ftype, parser_config):
+        ids = spark.range(0, 100, numPartitions=4)
+        bad = F.raise_error(F.lit("row 90 is poisoned"))
+        return ids.select(F.when(F.col("id") == 90, bad).otherwise(F.col("id")).alias("id"))
+
+    monkeypatch.setattr(pipeline_mod, "parse_file", poisoned_parse)
+    pipe = make_pipe(spark, tmp_path, landing)
+    client = FakeSqsClient([s3_event(("qbucket", "uploads/a.csv"))])
+    loop = SqsIngestLoop(pipe, "https://sqs/q", client=client)
+    loop.run(max_polls=1)
+
+    assert loop.redelivered == 1 and loop.deleted == 0
+    assert client.deleted_handles == []
+    assert [m["MessageId"] for m in client.messages] == ["m0"]
+    assert [f for f, _ in loop.failures] == ["qbucket/uploads/a.csv"]
+    assert "row 90 is poisoned" in loop.failures[0][1]
+
+
 def test_redelivery_retry_is_idempotent(spark, tmp_path, landing):
     pipe = make_pipe(spark, tmp_path, landing)
     # ONE message carrying a good file and a bad file: first pass ingests
