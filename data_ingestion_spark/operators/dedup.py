@@ -343,34 +343,10 @@ def shingle_base_store(spark, sf_dir: str, k: int = 3, force: bool = False) -> s
     refuted: candidates are pair-mass (quadratic in cluster size) and
     threshold-specific; fpos is corpus-mass and threshold-free.
 
-    Root discipline: deterministic ``stores.store_root`` path keyed on
-    (sf_dir, k) + documents mtime — cross-process reuse, stale-sibling
-    sweep, force=True rebuilds as a new version in the same root (see
-    stores.py). The registered build query passes force=True so the
-    bench bills the corpus-scale build honestly."""
-    import os
-
+    Root discipline: ``stores.open_store`` keyed on k (see stores.py).
+    The registered build query passes force=True so the bench bills the
+    corpus-scale build honestly."""
     from . import stores, tableformat
-
-    doc_path = os.path.join(sf_dir, "documents.parquet")
-    # freshness = mtime + size + part names (stores.corpus_token): a
-    # timestamp-preserving corpus replace must not serve a stale snapshot
-    fresh = stores.corpus_token(doc_path)
-    # the derivation token invalidates committed snapshots when any part
-    # of the tokenize→shingle→frequency-order derivation changes (see
-    # stores.derivation_token)
-    root = stores.store_root(
-        "shinglebase",
-        (os.path.abspath(sf_dir), k),
-        fresh,
-        # hashing shingle_base_store ITSELF captures the _build closure
-        # (bucket expression, group_cols, member bucketing) — hashing
-        # only the helpers missed exactly those (second-review finding)
-        derivation=stores.derivation_token(
-            shingle_base_store, build_shingle_base,
-            frequency_ordered_prefix, tokens, word_shingles,
-        ),
-    )
 
     def _build(r):
         from ..session import load_table
@@ -403,8 +379,8 @@ def shingle_base_store(spark, sf_dir: str, k: int = 3, force: bool = False) -> s
             },
         )
 
-    return stores.ensure_store(
-        spark, root, _build, force=force, origin=doc_path
+    return stores.open_store(
+        spark, "shinglebase", sf_dir, "documents", (k,), _build, force=force
     )
 
 
@@ -865,23 +841,10 @@ def simhash_base_store(spark, sf_dir: str, force: bool = False) -> str:
     one-artifact-serves-every-parameter property as the shingle base's
     threshold-generic frequency order).
 
-    Root discipline: deterministic ``stores.store_root`` keyed on
-    (sf_dir, SIMHASH_BITS) + the corpus freshness token; cross-process
-    reuse, grace-gated stale-sibling sweep, force=True rebuilds as a new
-    version (see stores.py). The registered build query passes
-    force=True so the bench bills the corpus-scale build honestly."""
-    import os
-
+    Root discipline: ``stores.open_store`` keyed on SIMHASH_BITS (see
+    stores.py). The registered build query passes force=True so the
+    bench bills the corpus-scale build honestly."""
     from . import stores, tableformat
-
-    doc_path = os.path.join(sf_dir, "documents.parquet")
-    fresh = stores.corpus_token(doc_path)
-    root = stores.store_root(
-        "simsig",
-        (os.path.abspath(sf_dir), SIMHASH_BITS),
-        fresh,
-        derivation=stores.derivation_token(simhash_base_store, simhash),
-    )
 
     def _build(r):
         from ..session import load_table
@@ -890,8 +853,9 @@ def simhash_base_store(spark, sf_dir: str, force: bool = False) -> str:
         sig = simhash(docs, "doc_id", "text")
         tableformat.commit_atomic(r, {"sig": ("bucketed", sig, "id", 8)})
 
-    return stores.ensure_store(
-        spark, root, _build, force=force, origin=doc_path
+    return stores.open_store(
+        spark, "simsig", sf_dir, "documents", (SIMHASH_BITS,), _build,
+        force=force,
     )
 
 

@@ -315,31 +315,12 @@ def pq_ivf_index_store(
     pq_ivf_stored_probe re-trained, re-encoded, and re-committed all
     three into per-call scratch on EVERY invocation — so each bench rep
     billed the whole build to the 'probe'. The index now lives at a
-    deterministic store root keyed on corpus + (n_lists, m, k, n_iter)
-    — probe-time knobs (n_probe, topk) deliberately NOT in the key, one
-    index serves them all — and is invalidated by the corpus freshness
-    token or a derivation change, exactly like the shingle/signature
-    bases. The registered build query passes force=True so the bench
-    bills the corpus-scale train/encode/commit honestly; the probe pays
-    stored reads only."""
-    import os
-
+    ``stores.open_store`` root keyed on (n_lists, m, k, n_iter) —
+    probe-time knobs (n_probe, topk) deliberately NOT in the key, one
+    index serves them all (see stores.py). The registered build query
+    passes force=True so the bench bills the corpus-scale
+    train/encode/commit honestly; the probe pays stored reads only."""
     from . import similarity, stores, tableformat
-
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    fresh = stores.corpus_token(emb_path)
-    root = stores.store_root(
-        "pqivf",
-        (os.path.abspath(sf_dir), n_lists, m, k, n_iter),
-        fresh,
-        derivation=stores.derivation_token(
-            pq_ivf_index_store,
-            similarity.pq_train,
-            similarity.pq_encode,
-            similarity.ivf_assign,
-            similarity.ivf_centroids_from_sample,
-        ),
-    )
 
     def _build(r):
         emb = load_table(spark, sf_dir, "embeddings")
@@ -385,7 +366,10 @@ def pq_ivf_index_store(
             },
         )
 
-    return stores.ensure_store(spark, root, _build, force=force, origin=emb_path)
+    return stores.open_store(
+        spark, "pqivf", sf_dir, "embeddings", (n_lists, m, k, n_iter),
+        _build, force=force,
+    )
 
 
 def pq_ivf_stored_probe(spark: SparkSession, sf_dir: str) -> DataFrame:

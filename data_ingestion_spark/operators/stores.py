@@ -7,11 +7,23 @@ snapshot. Before r11 those roots lived in ``tempfile.mkdtemp()`` — each
 fresh process (every bench rep, test run, driver invocation) rebuilt AND
 leaked one committed snapshot plus its catalog-backed parquet in /tmp
 (r10 ADVICE). A store root is now a PURE FUNCTION of its inputs: corpus
-path + parameters pick a stable prefix, and the corpus file's mtime picks
-the suffix — so every process computes the SAME path, the first builder
-commits, and later processes (or sessions) reuse the snapshot straight
-from disk (``read_version`` re-registers bucketed catalog entries on a
-fresh session — see the catalog-durability note in tableformat.py).
+path + parameters pick a stable prefix, and the package source plus the
+corpus freshness pick the suffix — so every process computes the SAME
+path, the first builder commits, and later processes (or sessions)
+reuse the snapshot straight from disk (``read_version`` re-registers
+bucketed catalog entries on a fresh session — see the
+catalog-durability note in tableformat.py).
+
+Every builder opens its store through ``open_store``, the only caller of
+``store_root``/``corpus_token``/``ensure_store`` in the package
+(``tests/test_stores.py`` pins that). The code half of a root's
+freshness is ``source_token``: one sha1 over the relative paths and
+bytes of every ``*.py`` file in the package, computed once per process.
+It is a superset of any per-function walk — a derivation function, a
+helper, a loader or a module constant can only change by changing a
+file — so a store never outlives the code that built it. Its cost is
+coarseness: an edit ANYWHERE in the package (a comment included)
+rebuilds each store once, on its next use.
 
 Staleness and bounded storage: a regenerated corpus changes the
 freshness token (mtime + size + part-file names, ``corpus_token``) → a
@@ -38,6 +50,7 @@ trust nor read ours.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import os
 import shutil
@@ -120,176 +133,69 @@ def corpus_token(path: str) -> tuple:
     return (st.st_mtime, total, tuple(names))
 
 
-def _parse_local_imports(src: str, module: str):
-    """Yield (module_name, [attr, ...]) for every import statement in a
-    function body, with relative imports resolved against the function's
-    defining module. Function-local imports bind LOCALS, so the
-    co_names/globals walk in ``_derivation_closure`` cannot see them
-    (the r11 second review caught exactly one such omission by hand;
-    this mechanizes it). Parsed with ``ast`` over the dedented source
-    (r12 ADVICE: the former regex missed ``import x as y`` /
-    ``from x import y as z`` aliases, trailing comments, and backslash
-    continuations — helpers reachable only through those forms were
-    silently dropped from the derivation closure). For an aliased
-    ``from x import y as z`` the SOURCE attribute name ``y`` is yielded
-    — that is the name the defining module exports."""
-    import ast
-    import textwrap
-
-    pkg_parts = module.split(".")
-    try:
-        tree = ast.parse(textwrap.dedent(src))
-    except SyntaxError:
-        return
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Import):
-            for alias in node.names:
-                yield alias.name, []
-        elif isinstance(node, ast.ImportFrom):
-            mod = node.module or ""
-            if node.level:
-                # resolve `from ..session import x` against the module
-                base = ".".join(pkg_parts[: len(pkg_parts) - node.level])
-                mod = f"{base}.{mod}" if mod else base
-            yield mod, [alias.name for alias in node.names]
+@functools.cache
+def source_token() -> str:
+    """The code half of every store's freshness: a sha1 over the sorted
+    relative paths and bytes of every ``*.py`` file in this package,
+    computed once per process. Any edit to a derivation function, a
+    helper, a loader or a module constant changes it, so no store can
+    outlive the code that built it; the cost is that an edit anywhere in
+    the package rebuilds each store once, on its next use. Relative
+    paths keep the token independent of where the package is
+    installed."""
+    pkg = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    rels = []
+    for d, _dirs, files in os.walk(pkg):
+        rels += [
+            os.path.relpath(os.path.join(d, f), pkg)
+            for f in files
+            if f.endswith(".py")
+        ]
+    h = hashlib.sha1()
+    for rel in sorted(rels):
+        with open(os.path.join(pkg, rel), "rb") as f:
+            body = f.read()
+        h.update(f"{rel.replace(os.sep, '/')}\0{len(body)}\0".encode())
+        h.update(body)
+    return h.hexdigest()
 
 
-def _derivation_closure(funcs) -> dict:
-    """Mechanically expand a set of root functions to every function in
-    THIS package they transitively reference — through module globals
-    (co_names), nested code objects (closures like ``_build``), closure
-    cells, module-attribute access (``tableformat.commit_atomic``), and
-    function-local import statements. Returns {qualified_name: fn}.
-
-    This replaces the hand-enumerated dependency list the r11 ADVICE
-    called fragile: a helper added to the derivation is picked up by the
-    walk instead of relying on a human to remember the list. Explicit
-    roots are still accepted (and still sufficient) — the walk only ever
-    ADDS, which is the safe direction for a cache key."""
-    import importlib
-    import inspect
-    import types
-
-    pkg = __name__.split(".")[0]
-
-    def in_pkg(obj) -> bool:
-        import types
-
-        if isinstance(obj, types.ModuleType):
-            return (obj.__name__ or "").startswith(pkg)
-        return (getattr(obj, "__module__", "") or "").startswith(pkg)
-
-    seen: dict = {}
-    stack = [f for f in funcs]
-    while stack:
-        f = stack.pop()
-        try:
-            f = inspect.unwrap(f)
-        except Exception:
-            continue
-        if not isinstance(f, types.FunctionType) or not in_pkg(f):
-            continue
-        qual = f"{f.__module__}.{f.__qualname__}"
-        if qual in seen:
-            continue
-        seen[qual] = f
-        g = f.__globals__
-        # modules whose attributes this function touches: globals plus
-        # function-local imports (which bind locals, invisible to g)
-        modules = []
-        try:
-            src = inspect.getsource(f)
-        except (OSError, TypeError):
-            src = ""
-        for mod_name, attrs in _parse_local_imports(src, f.__module__):
-            if not mod_name.startswith(pkg):
-                continue
-            try:
-                mod = importlib.import_module(mod_name)
-            except ImportError:
-                continue
-            modules.append(mod)
-            for a in attrs:
-                obj = getattr(mod, a, None)
-                if isinstance(obj, types.FunctionType):
-                    stack.append(obj)
-                elif isinstance(obj, types.ModuleType):
-                    modules.append(obj)
-        codes = [f.__code__]
-        names: set = set()
-        while codes:
-            code = codes.pop()
-            names.update(code.co_names)
-            for const in code.co_consts:
-                if isinstance(const, types.CodeType):
-                    codes.append(const)
-        for name in names:
-            obj = g.get(name)
-            if isinstance(obj, types.FunctionType):
-                stack.append(obj)
-            elif isinstance(obj, types.ModuleType) and in_pkg(obj):
-                modules.append(obj)
-        for mod in modules:
-            if not in_pkg(mod):
-                continue
-            for name in names:
-                attr = getattr(mod, name, None)
-                if isinstance(attr, types.FunctionType):
-                    stack.append(attr)
-        for cell in f.__closure__ or ():
-            try:
-                v = cell.cell_contents
-            except ValueError:
-                continue
-            if isinstance(v, types.FunctionType):
-                stack.append(v)
-    return seen
-
-
-def derivation_token(*funcs) -> str:
-    """A hash of the SOURCE of the functions that define a store's
-    derivation — the listed roots plus their MECHANICALLY-derived
-    transitive in-package closure (``_derivation_closure``). Included in
-    the store identity so a code change to the derivation, or to any
-    helper it calls (tokenizer regex, bucketed write path, loader),
-    AUTOMATICALLY invalidates committed snapshots (r11 review finding +
-    r11 ADVICE: a hand-enumerated list missed the _build closure once
-    already). Comment-only edits also invalidate; that is the safe
-    direction for a cache. The closure is derived from source text and
-    explicit imports — never from ambient interpreter state — so every
-    process computes the same token."""
-    import inspect
-
-    closure = _derivation_closure(funcs)
-    parts = []
-    for qual in sorted(closure):
-        try:
-            parts.append(qual + "\n" + inspect.getsource(closure[qual]))
-        except (OSError, TypeError):
-            parts.append(qual)
-    return hashlib.sha1("\n".join(parts).encode()).hexdigest()[:10]
-
-
-def store_root(
-    name: str, key_parts: tuple, mtime_token, derivation: str = ""
-) -> str:
+def store_root(name: str, key_parts: tuple, mtime_token) -> str:
     """The deterministic root for store ``name``: the IDENTITY is
     (name, key_parts) — corpus abspath + params — and the FRESHNESS is
-    the derivation-source token plus the corpus freshness token
+    the package ``source_token`` plus the corpus freshness token
     (``corpus_token``: mtime + size + part names). The path is
     ``<name>_<keyhash>_<dthash>_<mthash>`` and ``sweep_stale`` globs the
     ``<name>_<keyhash>_`` identity prefix, so BOTH a regenerated corpus
-    (new mtime) AND a changed derivation (new token) leave exactly one
-    live root per identity — the superseded sibling is swept at the next
-    build. (The token must NOT live inside key_parts: that would change
-    the identity prefix and strand the old root forever — caught in the
-    r11 second review pass.)"""
+    AND a changed package source leave exactly one live root per
+    identity — the superseded sibling is swept at the next build. (The
+    source token must NOT live inside key_parts: that would change the
+    identity prefix and strand the old root forever.)"""
     keyhash = hashlib.sha1(repr(key_parts).encode()).hexdigest()[:12]
-    dthash = hashlib.sha1(repr(derivation).encode()).hexdigest()[:6]
+    dthash = source_token()[:6]
     mthash = hashlib.sha1(repr(mtime_token).encode()).hexdigest()[:8]
     return os.path.join(
         store_base_dir(), f"{name}_{keyhash}_{dthash}_{mthash}"
     )
+
+
+def open_store(
+    spark, name: str, sf_dir: str, table: str, params: tuple, build_fn,
+    force: bool = False,
+) -> str:
+    """The one way a builder reaches the store layer: the root of store
+    ``name`` over ``{sf_dir}/{table}.parquet``, built by
+    ``build_fn(root)`` if absent (or always, with ``force=True``).
+    Identity is ``(abspath(sf_dir), *params)`` — ``params`` holds the
+    builder's call arguments only, never code constants (the package
+    ``source_token`` covers those); freshness is the corpus token plus
+    the source token; ``ensure_store`` owns the lock, origin record,
+    sweep and reap. Returns the root."""
+    corpus = os.path.join(sf_dir, f"{table}.parquet")
+    root = store_root(
+        name, (os.path.abspath(sf_dir), *params), corpus_token(corpus)
+    )
+    return ensure_store(spark, root, build_fn, force=force, origin=corpus)
 
 
 def ensure_store(
@@ -519,8 +425,8 @@ def _vacuum_members(spark, root: str, keep_last: int) -> None:
 
 def sweep_stale(spark, keep_root: str) -> None:
     """Remove sibling roots with the same ``<name>_<keyhash>_`` identity
-    prefix but a different derivation-token or freshness suffix — by
-    construction snapshots of a corpus/derivation state that no longer
+    prefix but a different source-token or freshness suffix — by
+    construction snapshots of a corpus/source state that no longer
     exists in that form. Age-gated (``_aged_out``) so a concurrent
     process still lazily reading the superseded root drains before
     deletion; the sibling is reaped by a later build instead.

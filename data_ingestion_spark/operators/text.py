@@ -290,38 +290,12 @@ def winnow_fingerprint_store(
     from the write is reused and no consumer re-shuffles the fingerprint
     mass (plan-pinned in tests/test_plans.py).
 
-    Root discipline (r11, was three r10 ADVICE findings): the root is the
-    DETERMINISTIC ``stores.store_root`` path — a pure function of
-    (sf_dir, k, w) + the documents mtime — so every process (each bench
-    rep, test run, driver invocation) reuses ONE committed snapshot
-    instead of rebuilding and leaking a fresh mkdtemp per process. A
-    regenerated corpus changes the mtime → a new root; the stale sibling
-    is swept after the new build commits. ``force=True`` (the build
-    query) always rebuilds — as a NEW VERSION in the same root, so a lazy
-    DataFrame an earlier probe returned still reads its pinned version —
-    and the bench bills the corpus-scale build to
-    winnow_fingerprint_build_docs instead of hiding it behind the reuse.
-    Returns the store root."""
-    import os
-
+    Root discipline: ``stores.open_store`` keyed on (k, w) (see
+    stores.py). ``force=True`` (the build query) rebuilds as a new
+    version in the same root, so the bench bills the corpus-scale build
+    to winnow_fingerprint_build_docs instead of hiding it behind the
+    reuse. Returns the store root."""
     from . import stores, tableformat
-
-    doc_path = os.path.join(sf_dir, "documents.parquet")
-    # freshness = mtime + size + part names (stores.corpus_token): a
-    # timestamp-preserving corpus replace must not serve a stale snapshot
-    fresh = stores.corpus_token(doc_path)
-    # the derivation token invalidates committed snapshots when the
-    # winnowing code itself changes (see stores.derivation_token)
-    root = stores.store_root(
-        "winnow",
-        (os.path.abspath(sf_dir), k, w),
-        fresh,
-        # hashing winnow_fingerprint_store ITSELF captures the _build
-        # closure (carry_cols, bucket count) — see the shingle-base note
-        derivation=stores.derivation_token(
-            winnow_fingerprint_store, winnow_fingerprints
-        ),
-    )
 
     def _build(r):
         from ..session import load_table
@@ -332,8 +306,8 @@ def winnow_fingerprint_store(
         )
         tableformat.commit_atomic(r, {"fp": ("bucketed", fp, "winnow_hash", 8)})
 
-    return stores.ensure_store(
-        spark, root, _build, force=force, origin=doc_path
+    return stores.open_store(
+        spark, "winnow", sf_dir, "documents", (k, w), _build, force=force
     )
 
 

@@ -71,7 +71,6 @@ def write_partitioned(
     partition_cols: list[str],
     mode: str = "overwrite",
     dynamic: bool = True,
-    max_records_per_file: int = 0,
     sort_within: list[str] | None = None,
 ) -> None:
     """Hive-style partitioned parquet layout — the 100 TB table pattern:
@@ -84,8 +83,6 @@ def write_partitioned(
       incremental-backfill semantics), never the whole table.
     - ``sort_within`` sorts within partitions before writing (clustered
       files -> better min/max page skipping for those columns).
-    - ``max_records_per_file`` caps file size so a skewed partition doesn't
-      produce one giant file.
     """
     spark = df.sparkSession
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
@@ -94,10 +91,7 @@ def write_partitioned(
     try:
         if sort_within:
             df = df.sortWithinPartitions(*sort_within)
-        writer = df.write.mode(mode).partitionBy(*partition_cols)
-        if max_records_per_file:
-            writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
-        writer.parquet(path)
+        df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
@@ -106,7 +100,6 @@ def compact_table(
     spark: SparkSession,
     path: str,
     target_file_mb: int = 128,
-    fmt: str = "parquet",
     cluster_by: list[str] | None = None,
     n_files: int | None = None,
 ) -> dict:
@@ -148,7 +141,7 @@ def compact_table(
     if n_files is None:
         # footer-free planning: output count from on-disk bytes alone
         n_files = max(1, math.ceil(total_bytes / (target_file_mb * 1024 * 1024)))
-    df = spark.read.option("mergeSchema", True).format(fmt).load(path)
+    df = spark.read.option("mergeSchema", True).parquet(path)
     rows = df.count()
     tmp = path.rstrip("/") + ".compact_tmp"
     if cluster_by:
@@ -160,7 +153,7 @@ def compact_table(
     else:
         # coalesce (not repartition): narrowing to n_files needs no shuffle
         out = df.coalesce(n_files)
-    out.write.mode("overwrite").format(fmt).save(tmp)
+    out.write.mode("overwrite").parquet(tmp)
     old = path.rstrip("/") + ".compact_old"
     os.rename(path, old)
     os.rename(tmp, path)

@@ -2456,62 +2456,3 @@ def test_jaccard_pairs_stored_null_block_parity(spark, tmp_path):
         for r in con.sql(DEDUP_JACCARD_PAIRS_DOCS_SQL).fetchall()
     }
     assert oracle == inline, oracle
-
-
-def test_store_orphan_reaping_and_derivation_token(spark, tmp_path):
-    """r11 review findings: (1) a store whose source corpus was deleted
-    (every pytest tmp corpus) is reaped by the next build — the shared
-    store dir does not grow without bound across runs; (2) the store
-    identity includes a hash of the derivation functions' SOURCE, so a
-    code change invalidates committed snapshots automatically."""
-    import os
-    import shutil
-
-    from data_ingestion_spark.operators import dedup, stores
-
-    sf_a = str(tmp_path / "a")
-    os.makedirs(sf_a)
-    spark.createDataFrame(
-        [(1, "alpha beta gamma delta", "en", 22)],
-        "doc_id long, text string, lang string, n_chars long",
-    ).write.parquet(os.path.join(sf_a, "documents.parquet"))
-    root_a = dedup.shingle_base_store(spark, sf_a)
-    assert os.path.exists(os.path.join(root_a, "_origin.json"))
-    # delete the corpus, then build a DIFFERENT corpus's store: the
-    # orphaned root must be reaped by that unrelated build — once aged
-    # past the r12 sweep grace window (backdated here; a young orphan is
-    # deliberately left so in-flight readers drain first)
-    shutil.rmtree(sf_a)
-    import time as _time
-
-    _old = _time.time() - stores.SWEEP_GRACE_SECONDS - 60
-    os.utime(root_a, (_old, _old))
-    sf_b = str(tmp_path / "b")
-    os.makedirs(sf_b)
-    spark.createDataFrame(
-        [(1, "one two three four five", "en", 23)],
-        "doc_id long, text string, lang string, n_chars long",
-    ).write.parquet(os.path.join(sf_b, "documents.parquet"))
-    dedup.shingle_base_store(spark, sf_b)
-    assert not os.path.exists(root_a), "orphaned store must be reaped"
-    # derivation token: different function source -> different token,
-    # same function -> stable token
-    t1 = stores.derivation_token(dedup.build_shingle_base)
-    t2 = stores.derivation_token(dedup.frequency_ordered_prefix)
-    assert t1 != t2 and t1 == stores.derivation_token(dedup.build_shingle_base)
-    # and a CHANGED derivation sweeps the old root rather than stranding
-    # it: the token is a path segment INSIDE the swept identity prefix
-    # (second review pass), so an old-token sibling of the same
-    # (corpus, params) identity is removed at the next build
-    root_b = dedup.shingle_base_store(spark, sf_b)
-    name, keyhash, _dt, _mt = os.path.basename(root_b).split("_")
-    stale_sibling = os.path.join(
-        os.path.dirname(root_b), f"{name}_{keyhash}_oldtok_deadbeef"
-    )
-    os.makedirs(stale_sibling, exist_ok=True)
-    os.utime(stale_sibling, (_old, _old))  # past the sweep grace window
-    dedup.shingle_base_store(spark, sf_b, force=True)
-    assert not os.path.exists(stale_sibling), (
-        "old-derivation sibling must be swept"
-    )
-    assert os.path.exists(root_b)
