@@ -1099,7 +1099,8 @@ def bpe_encode(
     match consumes the shared boundary space of its successor), leaving
     every survivor isolated between merged tokens, so pass 2 catches them
     all, and replacements never split tokens so no new occurrences can
-    appear (property-tested exhaustively in tests/test_text_llm.py).
+    appear (property-tested in
+    tests/test_bpe_batching.py::test_bpe_encode_two_passes_equal_python_fixpoint).
     ``replace`` has identical semantics in Spark and every SQL engine, so
     the oracle replays encoding byte-for-byte. Sequential-pass BPE is the
     standard vectorized approximation of the per-word priority queue (one

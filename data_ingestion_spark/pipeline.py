@@ -119,18 +119,11 @@ class IngestionPipeline:
         enriched = df.withColumn("file_name", F.lit(file.file_name)).withColumn(
             "log_id", F.lit(log_id)
         )
+        rows, error = 0, None
         try:
-            try:
-                rows = self.sink.insert_documents(rule.target_table, enriched)
-            except Exception as ex:  # noqa: BLE001 — sink failures → Failed log
-                try:
-                    self.log.finalize_log(
-                        log_id, file.file_name, start, False, str(ex)
-                    )
-                except Exception:  # noqa: BLE001,S110
-                    pass  # finalize errors swallowed (ingestion_service.rs:124)
-                return IngestResult(file.file_name, rule.target_table, log_id, 0,
-                                    "Failed", str(ex))
+            rows = self.sink.insert_documents(rule.target_table, enriched)
+        except Exception as ex:  # noqa: BLE001 — sink failures → Failed log
+            error = str(ex)
         finally:
             # CSV parse caches itself so slack-column detection and the sink
             # share one file scan — release after the write either way.
@@ -138,10 +131,11 @@ class IngestionPipeline:
             if cache is not None:
                 cache.unpersist()
         try:
-            self.log.finalize_log(log_id, file.file_name, start, True, None)
+            self.log.finalize_log(log_id, file.file_name, start, error is None, error)
         except Exception:  # noqa: BLE001,S110
             pass  # finalize errors swallowed (ingestion_service.rs:124)
-        return IngestResult(file.file_name, rule.target_table, log_id, rows, "Success")
+        status = "Success" if error is None else "Failed"
+        return IngestResult(file.file_name, rule.target_table, log_id, rows, status, error)
 
     def process_key(self, bucket: str, key: str) -> IngestResult:
         return self.process_file(FileToProcess(bucket, key))

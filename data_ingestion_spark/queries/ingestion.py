@@ -378,12 +378,13 @@ def ingest_pdf_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     registration → FlateDecode + page-tree extraction → enrich → sink.
     Escapes in line 2 exercise the literal-string parser."""
     from ..rules import IngestionConfigRule, RuleSet
-    from ..sources.pdf_source import pdf_encode_simple, pdf_parser_registered
+    from ..sources.dispatch import parser_registered
+    from ..sources.pdf_source import pdf_encode_simple, read_pdf
 
     pdf_bytes = pdf_encode_simple(
         [["Q1 revenue up 12%", "Net (of tax) margin: 8%"], ["Appendix A"]]
     )
-    with pdf_parser_registered():
+    with parser_registered("pdf", read_pdf):
         pipe = _run_pipeline(
             spark,
             {
@@ -438,9 +439,10 @@ def ingest_html_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchors inside prose, and all three drop reasons (nav link-farm,
     footer, too-short block)."""
     from ..rules import IngestionConfigRule, RuleSet
-    from ..sources.html_source import html_parser_registered
+    from ..sources.dispatch import parser_registered
+    from ..sources.html_source import read_html
 
-    with html_parser_registered():
+    with parser_registered("html", read_html):
         pipe = _run_pipeline(
             spark,
             {"site/report.html": _HTML_FIXTURE},

@@ -13,11 +13,11 @@ Container File framing, https://avro.apache.org/docs/current/specification/):
 - unions, arrays, maps, enums, fixed, nested records
 - ``null`` and ``deflate`` codecs (deflate = raw zlib, stdlib)
 
-Distribution model (100 TB): files load through the splittable binaryFile
-source and decode inside Arrow-batched ``mapInPandas`` on executors — one
-task per file, horizontal across a directory of thousands of container
-files (the normal Avro landing layout). The schema comes from a single
-driver-side header peek (a few hundred bytes), like the CSV header read.
+Distribution model (100 TB): each container file decodes whole on an
+executor through ``files.decode_files`` — horizontal across a directory of
+thousands of container files (the normal Avro landing layout). The schema
+comes from a single header peek at the lexicographically first file (its
+first 64 KiB), like the CSV header read.
 Single multi-GB container files would want sync-marker splitting; that's
 documented out of scope — Avro landings are many-file by construction
 (one file per producer flush).
@@ -33,15 +33,19 @@ import json
 import os
 import struct
 import zlib
-from typing import Any, Iterator, Optional
+from typing import Any, Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..errors import ParseError
+from .files import decode_files, first_file
 
 _MAGIC = b"Obj\x01"
+
+#: Bytes of the first file the schema peek collects to the driver: the
+#: magic, the metadata map and the sync marker must fit in them.
+HEADER_PEEK_BYTES = 65536
 
 # ---------------------------------------------------------------------------
 # Binary primitives (Avro spec "Binary Encoding")
@@ -275,36 +279,29 @@ def read_avro(
 ) -> DataFrame:
     """Parse Avro container file(s) at ``path`` into a typed DataFrame.
 
-    Native types preserved (like JSON/ORC). One driver-side header peek for
-    the schema; record decode runs distributed in mapInPandas.
+    Native types preserved (like JSON/ORC). The schema comes from the
+    header of the lexicographically first file (only its first
+    ``HEADER_PEEK_BYTES`` reach the driver); record decode runs distributed.
     """
-    binary = spark.read.format("binaryFile").load(path).select("path", "content")
-    first = binary.limit(1).collect()
-    if not first:
+    head = first_file(spark, path, HEADER_PEEK_BYTES)
+    if head is None:
         raise ParseError(f"No Avro files at: {path}")
-    head = bytes(first[0]["content"])[:65536]
     meta, _ = _read_header(_Reader(head))
     try:
         schema = json.loads(meta["avro.schema"])
     except (KeyError, ValueError) as ex:
         raise ParseError(f"Bad avro.schema header: {ex}") from ex
     sp_schema = avro_to_spark_schema(schema)
-    names = [f.name for f in sp_schema.fields]
+    names = sp_schema.fieldNames()
     is_record = isinstance(schema, dict) and schema.get("type") == "record"
 
-    def decode_files(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[list] = []
-            for blob in pdf["content"]:
-                _, recs = decode_container(bytes(blob))
-                for rec in recs:
-                    if is_record:
-                        rows.append([rec.get(n) for n in names])
-                    else:
-                        rows.append([rec])
-            yield pd.DataFrame(rows, columns=names)
+    def decode(data: bytes) -> list[list]:
+        _, recs = decode_container(data)
+        if is_record:
+            return [[rec.get(n) for n in names] for rec in recs]
+        return [[rec] for rec in recs]
 
-    return binary.mapInPandas(decode_files, schema=sp_schema)
+    return decode_files(spark, path, decode, sp_schema)
 
 
 # ---------------------------------------------------------------------------

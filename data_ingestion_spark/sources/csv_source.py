@@ -43,30 +43,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..errors import ParseError
+from .files import first_path
 
 #: Sentinel that never appears in real data: with this as nullValue, empty
 #: CSV fields stay "" and only absent trailing fields become NULL.
 _NULL_SENTINEL = "\u0000"
 
 DEFAULT_RAGGED_EXTRA = 16
-
-
-def _resolve_header_file(spark: SparkSession, path: str) -> str:
-    """For a directory input, the header is read from the lexicographically
-    first file (deterministic — round 1 let the text reader pick an
-    arbitrary one). Driver-side Hadoop FS listing: metadata only, no job."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath) or fs.getFileStatus(hpath).isFile():
-        return path
-    files = []
-    it = fs.listFiles(hpath, True)
-    while it.hasNext():
-        files.append(str(it.next().getPath()))
-    if not files:
-        raise ParseError(f"Empty CSV directory: {path}")
-    return min(files)
 
 
 def _read_header_line(spark: SparkSession, path: str, delimiter: str) -> list[str]:
@@ -76,7 +59,12 @@ def _read_header_line(spark: SparkSession, path: str, delimiter: str) -> list[st
     newline is not reassembled by the LIMIT-1 line read — headers must be
     single-line (true of every reference fixture; the reference's csv crate
     shares the assumption for its header row)."""
-    first = spark.read.text(_resolve_header_file(spark, path)).limit(1).collect()
+    header_file = first_path(spark, path)
+    if header_file is None:
+        raise ParseError(f"No CSV files at: {path}")
+    # A directory's header comes from its lexicographically first file
+    # (deterministic; the text reader alone would pick an arbitrary one).
+    first = spark.read.text(header_file).limit(1).collect()
     if not first:
         raise ParseError(f"Empty CSV file: {path}")
     reader = _csv.reader(io.StringIO(first[0]["value"]), delimiter=delimiter)

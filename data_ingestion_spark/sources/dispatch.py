@@ -1,11 +1,17 @@
 """File-type detection + parser dispatch
 (reference: src/application/ingestion_service.rs:149-158 and
 src/infrastructure/parser_adapter.rs:32-58).
+
+``PARSERS`` is written only here: ``register_parser`` adds a format for the
+life of the process, ``parser_registered`` for one ``with`` block (how the
+opt-in PDF and HTML readers are switched on, so the default registry keeps
+rejecting them like the reference).
 """
 
 from __future__ import annotations
 
-from typing import Any, Callable, Optional
+from contextlib import contextmanager
+from typing import Any, Callable, Iterator, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -47,8 +53,9 @@ def register_parser(
 
     Prefer pure DataFrame-expression parsers (JVM-side, like the .kv
     example in tests/test_pipeline.py); for genuinely irregular formats a
-    Python UDTF / ``mapInPandas`` parser drops in with the same signature —
-    that is the sanctioned slow path, per the XML/Excel readers.
+    whole-file decoder over ``files.decode_files`` drops in with the same
+    signature — that is the sanctioned slow path, per the XML/Excel/PDF
+    readers.
 
     ``overwrite=False`` refuses to shadow a built-in so a plugin typo can't
     silently replace the CSV parser.
@@ -61,6 +68,22 @@ def register_parser(
             f"parser for {ft!r} already registered (pass overwrite=True)"
         )
     PARSERS[ft] = parser
+
+
+@contextmanager
+def parser_registered(file_type: str, parser: Callable[..., DataFrame]) -> Iterator[None]:
+    """Scoped ``register_parser``: ``parser`` serves ``file_type`` inside
+    the ``with`` block, and the previous entry (or none) is back on exit —
+    e.g. ``with parser_registered("pdf", read_pdf): ...``."""
+    ft = file_type.lower().lstrip(".")
+    prev = PARSERS.get(ft)
+    register_parser(ft, parser, overwrite=True)
+    try:
+        yield
+    finally:
+        PARSERS.pop(ft, None)
+        if prev is not None:
+            PARSERS[ft] = prev
 
 
 #: Compression suffixes Spark's text-based readers decompress transparently

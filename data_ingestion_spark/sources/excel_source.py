@@ -14,10 +14,10 @@ Reference semantics reproduced exactly (SURVEY.md §2.2 P8):
 Spark design: there is no native Spark Excel reader and this container has
 no openpyxl, so the workbook decode is a minimal stdlib XLSX reader
 (zipfile + ElementTree over sheet XML + sharedStrings — the public
-ECMA-376/OOXML format). Files load through the binaryFile source and decode
-inside ``mapInPandas`` on executors, so a directory of workbooks scales
-horizontally. Workbooks are inherently whole-file (a zip), matching the
-reference's whole-buffer parse.
+ECMA-376/OOXML format). Each workbook decodes whole on an executor through
+``files.decode_files``, so a directory of workbooks scales horizontally.
+Workbooks are inherently whole-file (a zip), matching the reference's
+whole-buffer parse.
 """
 
 from __future__ import annotations
@@ -28,11 +28,11 @@ import xml.etree.ElementTree as ET
 import zipfile
 from typing import Any, Iterator, Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..errors import ParseError
+from .files import decode_files, first_file
 
 _NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 _CELL_REF = re.compile(r"([A-Z]+)([0-9]+)")
@@ -116,56 +116,36 @@ def read_excel(
     spark: SparkSession,
     path: str,
     parser_config: Optional[dict[str, Any]] = None,
-    include_path: bool = False,
 ) -> DataFrame:
     """Parse xlsx workbook(s) at ``path`` into one all-string DataFrame.
 
-    Header discovery needs one driver-side peek at the first workbook (cheap:
-    headers only); the row decode itself runs distributed via mapInPandas.
+    Header discovery needs one driver-side peek at the lexicographically
+    first workbook (the file CSV takes its header from); the row decode
+    itself runs distributed over every workbook.
     """
     cfg = parser_config or {}
     # Reference ignores sheet_index (parser_adapter.rs:49-52); honoring it is
     # the same documented upgrade as CSV's delimiter (SURVEY.md §2.2 P4).
     sheet_index = int(cfg.get("sheet_index", 0))
 
-    binary = spark.read.format("binaryFile").load(path).select("path", "content")
-    first = binary.limit(1).collect()
-    if not first:
+    first = first_file(spark, path)
+    if first is None:
         raise ParseError(f"No Excel files at: {path}")
-    headers, _ = rows_to_documents(read_xlsx_rows(bytes(first[0]["content"]), sheet_index))
+    headers, _ = rows_to_documents(read_xlsx_rows(first, sheet_index))
     # Duplicate header names collapse to ONE column (the reference's
     # map-insert makes the last duplicate win per row) — keep first
     # occurrence order, unique names only.
     headers = list(dict.fromkeys(headers))
     if not headers:
-        schema = "path string" if include_path else "__empty string"
-        empty = spark.createDataFrame([], schema)
-        return empty if include_path else empty.drop("__empty")
+        return spark.createDataFrame([], "__empty string").drop("__empty")
 
-    out_fields = (["path string"] if include_path else []) + [
-        f"`{h}` string" for h in headers
-    ]
-    out_schema = ", ".join(out_fields)
+    def decode(data: bytes) -> Iterator[list[str]]:
+        hdrs, rows = rows_to_documents(read_xlsx_rows(data, sheet_index))
+        for row in rows:
+            # last-wins per row on duplicate headers (reference map-insert
+            # semantics), then one value per global header — missing → ""
+            rowmap = dict(zip(hdrs, row))
+            yield [rowmap.get(h, "") for h in headers]
 
-    def _parse(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            data: dict[str, list[str]] = {h: [] for h in headers}
-            paths: list[str] = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                hdrs, rows = rows_to_documents(read_xlsx_rows(bytes(content), sheet_index))
-                for row in rows:
-                    paths.append(p)
-                    # last-wins per row on duplicate headers (reference
-                    # map-insert semantics), then exactly ONE append per
-                    # global header — missing cols → ""
-                    rowmap: dict[str, str] = {}
-                    for h, v in zip(hdrs, row):
-                        rowmap[h] = v
-                    for h in headers:
-                        data[h].append(rowmap.get(h, ""))
-            out = pd.DataFrame(data)
-            if include_path:
-                out.insert(0, "path", paths)
-            yield out
-
-    return binary.mapInPandas(_parse, schema=out_schema)
+    schema = T.StructType([T.StructField(h, T.StringType()) for h in headers])
+    return decode_files(spark, path, decode, schema)

@@ -3,8 +3,9 @@ LLM-corpus pipeline needs in front of every text operator.
 
 Reference parity note: like PDF, HTML is outside the reference's shipped
 parser menu (src/infrastructure/parser_adapter.rs:39-57 stops at xlsx), so
-this is an opt-in plug-in registration (S5 API, sources/dispatch.py) —
-the default pipeline keeps rejecting ``.html`` exactly like the reference.
+callers opt in with ``dispatch.parser_registered("html", read_html)`` (or
+``register_parser`` for the whole process) — the default pipeline keeps
+rejecting ``.html`` exactly like the reference.
 
 Extraction tier (pure stdlib ``html.parser``, no lxml dependency):
 
@@ -26,21 +27,20 @@ Extraction tier (pure stdlib ``html.parser``, no lxml dependency):
   status rows elsewhere in the pipeline;
 - entities/charrefs decode via ``convert_charrefs`` (stdlib, spec-exact).
 
-Scale shape: binaryFile scan + Arrow ``mapInPandas`` (one file per task,
-bytes never on the driver) — identical to the xlsx/PDF readers. A real
-crawl would feed WARC segments through the same ``html_extract_blocks``
-seam; a full readability library injects via the ``extractor`` argument.
+Scale shape: one ``files.decode_files`` pass (each file decoded whole on
+an executor, bytes never on the driver) — shared with the xlsx/PDF readers.
+A full readability library plugs in the same way: register a parser that
+calls ``decode_files`` with its own extractor and ``HTML_SCHEMA``.
 """
 
 from __future__ import annotations
 
-from contextlib import contextmanager
 from html.parser import HTMLParser
-from typing import Any, Callable, Iterator, Optional
+from typing import Any, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..errors import ParseError
+from .files import decode_files
 
 BLOCK_TAGS = frozenset(
     "p div h1 h2 h3 h4 h5 h6 li td th blockquote pre title article section "
@@ -136,57 +136,6 @@ def read_html(
     spark: SparkSession,
     path: str,
     parser_config: Optional[dict[str, Any]] = None,
-    extractor: Optional[
-        Callable[[bytes], list[tuple[int, str, str, int, int, bool]]]
-    ] = None,
 ) -> DataFrame:
-    """Parse HTML file(s) at ``path`` to block rows. binaryFile scan +
-    Arrow mapInPandas (one file per task). ``extractor`` injects a full
-    readability/trafilatura-class library in place of the stdlib tier."""
-    extract = extractor or html_extract_blocks
-
-    binary = spark.read.format("binaryFile").load(path).select("content")
-
-    def _parse(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in it:
-            rows: list[tuple] = []
-            for content in pdf["content"]:
-                rows.extend(extract(bytes(content)))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "block_number",
-                    "tag",
-                    "content",
-                    "n_chars",
-                    "link_density_bp",
-                    "kept",
-                ],
-            )
-
-    return binary.mapInPandas(_parse, schema=HTML_SCHEMA)
-
-
-def _html_parser(spark: SparkSession, path: str, parser_config=None) -> DataFrame:
-    try:
-        return read_html(spark, path, parser_config)
-    except ValueError as ex:
-        raise ParseError(f"Failed to parse HTML: {ex}") from ex
-
-
-@contextmanager
-def html_parser_registered():
-    """Scoped registration (register on enter, restore on exit)."""
-    from .dispatch import PARSERS
-
-    prev = PARSERS.get("html")
-    PARSERS["html"] = _html_parser
-    try:
-        yield
-    finally:
-        if prev is None:
-            PARSERS.pop("html", None)
-        else:
-            PARSERS["html"] = prev
+    """Parse HTML file(s) at ``path`` to block rows (``HTML_SCHEMA``)."""
+    return decode_files(spark, path, html_extract_blocks, HTML_SCHEMA)

@@ -6,10 +6,10 @@ formats to support (instructions.md:8), but the shipped parser menu stops
 at xlsx and rejects it (src/infrastructure/parser_adapter.rs:54-57), and
 its seed rules route nothing to a pdf table (migration.js:5-51). This
 module EXCEEDS that fidelity while preserving the out-of-the-box behavior:
-the extractor is NOT in the default dispatch registry — callers opt in via
-``register_pdf_parser()`` / the ``pdf_parser_registered()`` context
-manager (the S5 plug-in API, sources/dispatch.py), so an unconfigured
-pipeline still rejects ``.pdf`` exactly like the reference.
+the extractor is NOT in the default dispatch registry — callers opt in with
+``dispatch.parser_registered("pdf", read_pdf)`` (or ``register_parser`` for
+the whole process), so an unconfigured pipeline still rejects ``.pdf``
+exactly like the reference.
 
 Extraction tier (pure stdlib: zlib + re, public ISO 32000 / PDF 1.4 spec):
 
@@ -18,13 +18,13 @@ Extraction tier (pure stdlib: zlib + re, public ISO 32000 / PDF 1.4 spec):
   page ``/Contents`` (single ref or array);
 - content streams: no filter or ``/FlateDecode`` (zlib); anything else —
   encryption, object streams holding the catalog, exotic filters — raises
-  ValueError so callers fall back to an injected extractor (same seam
-  pattern as the progressive-JPEG tier);
+  ValueError; a full extractor (pdfminer etc.) plugs in as its own ``pdf``
+  parser over ``files.decode_files`` with ``PDF_SCHEMA``;
 - text operators: ``BT``/``ET`` blocks; ``Tj``/``'``/``"`` show-string,
   ``TJ`` arrays (kern numbers ignored, strings concatenated); ``Td``/
   ``TD``/``T*`` start a new line; literal strings with all spec escapes
   (nested parens, ``\\ddd`` octal, line continuations) and ``<hex>``
-  strings. Bytes decode as latin-1 — no CMap/ToUnicode mapping (inject a
+  strings. Bytes decode as latin-1 — no CMap/ToUnicode mapping (register a
   full extractor for that; documented limitation, not silent corruption).
 
 Output shape mirrors the TXT parser with a page axis: one row per text
@@ -40,12 +40,11 @@ from __future__ import annotations
 
 import re
 import zlib
-from contextlib import contextmanager
-from typing import Any, Callable, Iterator, Optional
+from typing import Any, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..errors import ParseError
+from .files import decode_files
 
 _OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b(.*?)endobj", re.DOTALL)
 _STREAM_RE = re.compile(rb"stream\r?\n(.*?)endstream", re.DOTALL)
@@ -103,7 +102,7 @@ def _stream_bytes(body: bytes) -> Optional[bytes]:
         # spec allows trailing EOL before endstream; zlib ignores garbage
         # after the deflate terminator
         return zlib.decompress(raw)
-    raise ValueError("unsupported PDF stream filter — inject a full extractor")
+    raise ValueError("unsupported PDF stream filter — register a full extractor")
 
 
 def _parse_literal_string(b: bytes, i: int) -> tuple[bytes, int]:
@@ -295,7 +294,7 @@ def pdf_extract_text_lines(data: bytes) -> list[tuple[int, int, str]]:
     if not data.startswith(b"%PDF-"):
         raise ValueError("not a PDF (missing %PDF- header)")
     if b"/Encrypt" in data:
-        raise ValueError("encrypted PDF — inject a full extractor")
+        raise ValueError("encrypted PDF — register a full extractor")
     objs = _scan_objects(data)
     page_objs = _page_content_objects(data, objs)
     page_streams: list[list[bytes]]
@@ -384,72 +383,15 @@ def pdf_encode_simple(pages: list[list[str]]) -> bytes:
 
 
 # ---------------------------------------------------------------------------
-# Spark reader + opt-in dispatch registration
+# Spark reader (opt-in: see the module docstring)
 # ---------------------------------------------------------------------------
 def read_pdf(
     spark: SparkSession,
     path: str,
     parser_config: Optional[dict[str, Any]] = None,
-    extractor: Optional[Callable[[bytes], list[tuple[int, int, str]]]] = None,
 ) -> DataFrame:
     """Parse PDF file(s) at ``path`` to (page_number, line_number, content)
-    rows. binaryFile scan + Arrow mapInPandas — the same distributed shape
-    as the xlsx reader (one file per task; bytes never hit the driver).
-    ``extractor`` injects a full library (pdfminer etc.) in place of the
-    stdlib tier; extraction errors raise (the pipeline's warn-and-audit
-    path catches per file)."""
-    extract = extractor or pdf_extract_text_lines
-
-    import pandas as pd  # noqa: F401 (executor-side)
-
-    binary = spark.read.format("binaryFile").load(path).select("content")
-
-    def _parse(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in it:
-            pno, lno, txt = [], [], []
-            for content in pdf["content"]:
-                for p, ln, s in extract(bytes(content)):
-                    pno.append(p)
-                    lno.append(ln)
-                    txt.append(s)
-            yield pd.DataFrame(
-                {"page_number": pno, "line_number": lno, "content": txt}
-            )
-
-    return binary.mapInPandas(_parse, schema=PDF_SCHEMA)
-
-
-def _pdf_parser(spark: SparkSession, path: str, parser_config=None) -> DataFrame:
-    try:
-        return read_pdf(spark, path, parser_config)
-    except ValueError as ex:
-        raise ParseError(f"Failed to parse PDF: {ex}") from ex
-
-
-def register_pdf_parser(overwrite: bool = False) -> None:
-    """Opt into PDF ingestion: plugs ``read_pdf`` into the dispatch
-    registry under ``pdf`` (S5 plug-in API). NOT called at import time —
-    the default pipeline rejects PDFs exactly like the reference."""
-    from .dispatch import register_parser
-
-    register_parser("pdf", _pdf_parser, overwrite=overwrite)
-
-
-@contextmanager
-def pdf_parser_registered():
-    """Scoped registration (register on enter, restore on exit) so callers
-    — tests, the driver-gated ingest_pdf_docs query — can use PDF dispatch
-    without changing the process-global default behavior."""
-    from .dispatch import PARSERS
-
-    prev = PARSERS.get("pdf")
-    PARSERS["pdf"] = _pdf_parser
-    try:
-        yield
-    finally:
-        if prev is None:
-            PARSERS.pop("pdf", None)
-        else:
-            PARSERS["pdf"] = prev
+    rows, each file decoded whole on an executor (bytes never hit the
+    driver). Extraction errors raise when the rows are computed; the
+    pipeline's per-file audit catches them."""
+    return decode_files(spark, path, pdf_extract_text_lines, PDF_SCHEMA)

@@ -31,27 +31,11 @@ from typing import Any, Optional
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from .files import list_files
+
 #: Above this single-file size, auto mode switches to the distributed reader
 #: (whole-file rows stop being cheap around the split size anyway).
 DEFAULT_WHOLEFILE_MAX_BYTES = 128 * 1024 * 1024
-
-
-def _max_file_bytes(spark: SparkSession, path: str) -> int:
-    """Largest single file under ``path`` via a driver-side Hadoop FS
-    listing — metadata only, no Spark job, works for any supported
-    filesystem (file://, s3a://, hdfs://)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
-        return 0
-    biggest = 0
-    it = fs.listFiles(hpath, True)  # recursive; plain files only
-    while it.hasNext():
-        status = it.next()
-        if status.getLen() > biggest:
-            biggest = status.getLen()
-    return biggest
 
 
 def read_txt(
@@ -64,7 +48,8 @@ def read_txt(
     mode = cfg.get("mode", "auto")
     if mode == "auto":
         limit = int(cfg.get("wholefile_max_bytes", DEFAULT_WHOLEFILE_MAX_BYTES))
-        mode = "distributed" if _max_file_bytes(spark, path) > limit else "wholefile"
+        biggest = max((n for _, n in list_files(spark, path)), default=0)
+        mode = "distributed" if biggest > limit else "wholefile"
 
     if mode == "distributed":
         # Scalable path: per-file ordering key from a monotonic id within

@@ -8,29 +8,26 @@ Reference semantics reproduced exactly (SURVEY.md §2.2 P7):
 - ``</record>`` emits the document (xml_parser.rs:46-55)
 - zero records in the file is a parse error (xml_parser.rs:66-69)
 
-Spark design: no external spark-xml jar — files are read with the binaryFile
-source (content + path metadata, lazily loaded per file) and parsed by an
-Arrow-batched ``mapInPandas`` using stdlib ``xml.etree.ElementTree.iterparse``
-(streaming, no DOM — same event-based shape as the reference's quick-xml
-scan). Each file parses independently on an executor, so a directory of XML
-files scales horizontally; per-record schemas are dynamic, so records are
-emitted as a ``map<string,string>`` column and expanded to real columns with
-one JVM-side key-discovery pass.
+Spark design: no external spark-xml jar — each file is decoded whole on an
+executor by ``files.decode_files`` using stdlib
+``xml.etree.ElementTree.iterparse`` (streaming, no DOM — same event-based
+shape as the reference's quick-xml scan), so a directory of XML files scales
+horizontally; per-record schemas are dynamic, so records are emitted as a
+``map<string,string>`` column and expanded to real columns with one
+JVM-side key-discovery pass.
 """
 
 from __future__ import annotations
 
 import io
 import xml.etree.ElementTree as ET
-from typing import Any, Iterator, Optional
+from typing import Any, Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..errors import ParseError
-
-_OUT_SCHEMA = "path string, doc map<string,string>"
+from .files import decode_files
 
 
 def _strip_ns(tag: str) -> str:
@@ -69,33 +66,14 @@ def parse_xml_records(data: bytes) -> list[dict[str, str]]:
     return docs
 
 
-def _parse_partition(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in it:
-        out_paths: list[str] = []
-        out_docs: list[dict[str, str]] = []
-        for path, content in zip(pdf["path"], pdf["content"]):
-            for doc in parse_xml_records(bytes(content)):
-                out_paths.append(path)
-                out_docs.append(doc)
-        # explicit object dtype: an empty partition must not infer float64
-        # (Arrow can't convert that to map<string,string>)
-        yield pd.DataFrame(
-            {
-                "path": pd.Series(out_paths, dtype="object"),
-                "doc": pd.Series(out_docs, dtype="object"),
-            }
-        )
-
-
 def read_xml(
     spark: SparkSession,
     path: str,
     parser_config: Optional[dict[str, Any]] = None,
-    include_path: bool = False,
 ) -> DataFrame:
     """Parse XML file(s) at ``path`` into one all-string DataFrame."""
-    binary = spark.read.format("binaryFile").load(path).select("path", "content")
-    docs = binary.mapInPandas(_parse_partition, schema=_OUT_SCHEMA)
+    docs = decode_files(spark, path, lambda data: [(d,) for d in parse_xml_records(data)],
+                        "doc map<string,string>")
     # Key discovery: union of record keys, JVM-side, one small shuffle.
     keys = [
         r[0]
@@ -107,7 +85,4 @@ def read_xml(
     if not keys:
         # reference: zero <record> elements → parse error (xml_parser.rs:66-69)
         raise ParseError(f"No records found in XML file: {path}")
-    cols = [F.col("doc").getItem(k).alias(k) for k in keys]
-    if include_path:
-        cols = [F.col("path")] + cols
-    return docs.select(*cols)
+    return docs.select(*[F.col("doc").getItem(k).alias(k) for k in keys])

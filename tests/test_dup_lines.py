@@ -4,8 +4,9 @@ and a ratchet that keeps hand-copied shapes out of the query registries.
 A line is redundant when it falls inside a 6-line window (stripped,
 blank and ``#`` lines dropped) whose text appeared earlier in the
 package, files in sorted path order. The registries once held 593 such
-lines; shared builders took them down, and the ratchet below fails when
-a copy comes back. Lower ``REGISTRY_MAX`` when a change removes more.
+lines; shared builders took them down, and the ratchets below fail when
+a copy comes back, in the registries or anywhere in the package. Lower
+``REGISTRY_MAX`` / ``PACKAGE_MAX`` when a change removes more.
 """
 
 from __future__ import annotations
@@ -18,6 +19,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(
 import dup_lines  # noqa: E402
 
 REGISTRY_MAX = 58
+PACKAGE_MAX = 176
 
 SIX = "\n".join(f"x{i} = {i}" for i in range(6)) + "\n"
 
@@ -47,3 +49,8 @@ def test_registry_copies_do_not_come_back():
     counts = dup_lines.redundant_counts(dup_lines.read_package(dup_lines.PKG))
     registry = sum(n for p, n in counts.items() if os.path.basename(p).startswith("registry"))
     assert registry <= REGISTRY_MAX, {p: n for p, n in counts.items() if n}
+
+
+def test_package_copies_do_not_come_back():
+    counts = dup_lines.redundant_counts(dup_lines.read_package(dup_lines.PKG))
+    assert sum(counts.values()) <= PACKAGE_MAX, {p: n for p, n in counts.items() if n}

@@ -4,10 +4,10 @@ gate, skip tags, entities, opt-in dispatch, and malformed-input tolerance."""
 
 from __future__ import annotations
 
+from data_ingestion_spark.sources import dispatch
 from data_ingestion_spark.sources.html_source import (
     html_extract_blocks,
     html_main_text,
-    html_parser_registered,
     read_html,
 )
 
@@ -77,7 +77,7 @@ def test_read_html_distributed(spark, tmp_path):
     p.write_bytes(
         b"<h1>Heading block one</h1><p>Paragraph with plenty of text.</p>"
     )
-    with html_parser_registered():
+    with dispatch.parser_registered("html", read_html):
         rows = sorted(
             (r["block_number"], r["tag"], r["kept"])
             for r in read_html(spark, str(p)).collect()

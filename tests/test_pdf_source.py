@@ -20,7 +20,6 @@ from data_ingestion_spark.sources.pdf_source import (
     pdf_encode_simple,
     pdf_extract_text_lines,
     pdf_metadata,
-    pdf_parser_registered,
     read_pdf,
 )
 
@@ -119,7 +118,7 @@ def test_pdf_dispatch_opt_in_is_scoped(spark, tmp_path):
     # ...inside the context it parses...
     f = tmp_path / "x.pdf"
     f.write_bytes(pdf_encode_simple([["scoped"]]))
-    with pdf_parser_registered():
+    with dispatch.parser_registered("pdf", read_pdf):
         got = dispatch.parse_file(spark, str(f), "pdf").collect()
         assert [r["content"] for r in got] == ["scoped"]
     # ...and the registry is restored afterwards
@@ -141,7 +140,7 @@ def test_pdf_pipeline_end_to_end(spark, tmp_path):
         rules=rules,
         base_dir=str(tmp_path / "landing"),
     )
-    with pdf_parser_registered():
+    with dispatch.parser_registered("pdf", read_pdf):
         res = pipe.process_key("pdf-bucket", "docs/report.pdf")
         assert res.status == "Success" and res.rows == 3
         # a stream-less PDF yields zero rows (nothing extractable) but is
