@@ -66,6 +66,14 @@ def _next_version(manifest: dict) -> int:
     return (max(vs) + 1) if vs else 0
 
 
+def next_version(root: str) -> int:
+    """The version the next commit to ``root`` takes: 0 for a table with
+    no commit yet (single writer, as for every commit here)."""
+    if not os.path.exists(_manifest_path(root)):
+        return 0
+    return _next_version(read_manifest(root))
+
+
 def commit_version(df: DataFrame, root: str) -> int:
     """Write ``df`` as the next immutable snapshot and flip the pointer.
     Returns the new version number. The snapshot directory is fully

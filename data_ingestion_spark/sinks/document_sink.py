@@ -17,6 +17,7 @@ container. Both run executor-side and scale with partition count.
 
 from __future__ import annotations
 
+import json
 import os
 import uuid
 from typing import Callable, Iterable, Iterator, Optional
@@ -25,6 +26,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 BulkWriter = Callable[[str, Iterator[str]], None]
+
+
+def _batches(docs: Iterator[str], batch_size: int) -> Iterator[list]:
+    """Parsed JSON documents in lists of ``batch_size`` (the last one
+    shorter, never empty) — one bulk request each."""
+    batch: list = []
+    for doc in docs:
+        batch.append(json.loads(doc))
+        if len(batch) >= batch_size:
+            yield batch
+            batch = []
+    if batch:
+        yield batch
 
 
 class JsonLinesWriter:
@@ -80,18 +94,10 @@ def make_mongo_writer(
 
             return pymongo.MongoClient(uri)
 
-    import json
-
     def _write(target_table: str, docs: Iterator[str]) -> None:
         client = client_factory()
         coll = client[database][target_table]
-        batch = []
-        for doc in docs:
-            batch.append(json.loads(doc))
-            if len(batch) >= batch_size:
-                coll.insert_many(batch)
-                batch = []
-        if batch:
+        for batch in _batches(docs, batch_size):
             coll.insert_many(batch)
         client.close()
 
@@ -124,23 +130,10 @@ def make_couchdb_writer(
             with urllib.request.urlopen(req) as resp:
                 return resp.read()
 
-    import json
-
     def _write(target_table: str, docs: Iterator[str]) -> None:
         url = f"{base_url.rstrip('/')}/{target_table}/_bulk_docs"
-
-        def _flush(batch: list) -> None:
-            payload = json.dumps({"docs": batch}).encode("utf-8")
-            transport(url, payload)
-
-        batch: list = []
-        for doc in docs:
-            batch.append(json.loads(doc))
-            if len(batch) >= batch_size:
-                _flush(batch)
-                batch = []
-        if batch:
-            _flush(batch)
+        for batch in _batches(docs, batch_size):
+            transport(url, json.dumps({"docs": batch}).encode("utf-8"))
 
     return _write
 

@@ -1,11 +1,10 @@
 """Columnar table sink — the rebuild's canonical target-table store.
 
 Replaces the reference's Mongo ``insert_many`` (data_repo.rs:53-59) with an
-append to a columnar table (parquet by default; ORC as the alternate —
-both are native Spark formats with pushdown + pruning). Schema evolution
-across heterogeneous files of the same target table (Mongo tolerated
-per-doc schemas natively) is handled with union-by-name + nulls
-(SURVEY.md §1.3): parquet readers merge schemas, and appends with
+append to a parquet table (native Spark format with pushdown + pruning).
+Schema evolution across heterogeneous files of the same target table
+(Mongo tolerated per-doc schemas natively) is handled with union-by-name +
+nulls (SURVEY.md §1.3): parquet readers merge schemas, and appends with
 ``mergeSchema`` keep old files readable.
 """
 
@@ -16,18 +15,11 @@ import os
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-_FORMATS = ("parquet", "orc")
-
 
 class ParquetSink:
-    def __init__(
-        self, spark: SparkSession, warehouse_dir: str, fmt: str = "parquet"
-    ) -> None:
-        if fmt not in _FORMATS:
-            raise ValueError(f"Unsupported columnar format: {fmt} (use {_FORMATS})")
+    def __init__(self, spark: SparkSession, warehouse_dir: str) -> None:
         self.spark = spark
         self.warehouse_dir = warehouse_dir
-        self.fmt = fmt
 
     def table_path(self, target_table: str) -> str:
         return os.path.join(self.warehouse_dir, target_table)
@@ -46,16 +38,14 @@ class ParquetSink:
         if not df.columns or df.isEmpty():
             return 0
         written = Observation()
-        df.observe(written, F.count(F.lit(1)).alias("rows")).write.mode("append").format(
-            self.fmt
-        ).save(self.table_path(target_table))
+        df.observe(written, F.count(F.lit(1)).alias("rows")).write.mode(
+            "append"
+        ).parquet(self.table_path(target_table))
         return written.get["rows"]
 
     def read_table(self, target_table: str) -> DataFrame:
-        return (
-            self.spark.read.option("mergeSchema", True)
-            .format(self.fmt)
-            .load(self.table_path(target_table))
+        return self.spark.read.option("mergeSchema", True).parquet(
+            self.table_path(target_table)
         )
 
     def table_exists(self, target_table: str) -> bool:

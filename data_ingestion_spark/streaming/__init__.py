@@ -7,13 +7,16 @@ file stream and an SQS-message stream (ingest_stream), and a boto3-shaped
 SQS receive/delete adapter (sqs_source) — which differ only in source and
 decode: every receive goes through one shared per-receive step (receive).
 It adds the event-time operators Spark unlocks for free once the loop is a
-real stream: watermarked tumbling/sliding/session windows (event_time) and
-a custom stateful sessionizer (sessionize).
+real stream: watermarked tumbling/session windows (event_time), a custom
+stateful sessionizer (sessionize), and the stateful guards — running
+totals, exact dedup, SimHash near-dup, heavy hitters, rate limit — as
+foreachBatch processors over versioned state tables (foreach_batch_state).
+Those guards are batch-granular and share one replay guard keyed by
+(query id, batch_id), so a redelivered micro-batch is a no-op.
 """
 
 from .event_time import (
     session_window_agg,
-    sliding_window_counts,
     stream_events_from_dir,
     tumbling_window_counts,
 )
@@ -32,7 +35,6 @@ __all__ = [
     "dedup_events",
     "interval_join",
     "session_window_agg",
-    "sliding_window_counts",
     "stream_events_from_dir",
     "tumbling_window_counts",
 ]

@@ -17,7 +17,7 @@ and key design are the knobs.
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,61 +37,37 @@ EVENTS_SCHEMA = T.StructType(
 )
 
 
-def stream_events_from_dir(
-    spark: SparkSession, path: str, schema: T.StructType = EVENTS_SCHEMA
-) -> DataFrame:
+def stream_events_from_dir(spark: SparkSession, path: str) -> DataFrame:
     """events as an unbounded stream from a directory of parquet files."""
-    return spark.readStream.schema(schema).parquet(path)
+    return spark.readStream.schema(EVENTS_SCHEMA).parquet(path)
 
 
-def _maybe_watermark(df: DataFrame, ts_col: str, watermark: Optional[str]) -> DataFrame:
+def _maybe_watermark(df: DataFrame, watermark: Optional[str]) -> DataFrame:
     # withWatermark on a batch DataFrame is a no-op in semantics but only
     # valid on streaming plans in some operations; gate it so the same
     # function serves both.
-    return df.withWatermark(ts_col, watermark) if watermark else df
+    return df.withWatermark("ts", watermark) if watermark else df
 
 
 def tumbling_window_counts(
     events: DataFrame,
     window_duration: str = "1 hour",
-    keys: Sequence[str] = ("event_type",),
-    ts_col: str = "ts",
     watermark: Optional[str] = None,
 ) -> DataFrame:
-    """Non-overlapping event-time buckets: count + value sum per key."""
-    df = _maybe_watermark(events, ts_col, watermark)
+    """Non-overlapping event-time buckets: count + value sum per event_type."""
+    df = _maybe_watermark(events, watermark)
     return (
-        df.groupBy(F.window(ts_col, window_duration).alias("w"), *keys)
+        df.groupBy(F.window("ts", window_duration).alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum("value"), 2).alias("sum_value"),
         )
         .select(
             F.col("w.start").alias("window_start"),
-            *keys,
+            "event_type",
             "n_events",
             "sum_value",
         )
-    )
-
-
-def sliding_window_counts(
-    events: DataFrame,
-    window_duration: str = "1 hour",
-    slide_duration: str = "30 minutes",
-    keys: Sequence[str] = ("event_type",),
-    ts_col: str = "ts",
-    watermark: Optional[str] = None,
-) -> DataFrame:
-    """Overlapping event-time buckets (each event lands in
-    window/slide buckets)."""
-    df = _maybe_watermark(events, ts_col, watermark)
-    return (
-        df.groupBy(
-            F.window(ts_col, window_duration, slide_duration).alias("w"), *keys
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), *keys, "n_events")
     )
 
 
@@ -99,7 +75,6 @@ def session_window_agg(
     events: DataFrame,
     gap: str = "30 minutes",
     key: str = "user_id",
-    ts_col: str = "ts",
     watermark: Optional[str] = None,
 ) -> DataFrame:
     """Per-key sessions: events closer than ``gap`` merge into one session.
@@ -111,12 +86,12 @@ def session_window_agg(
     last_ts + gap by definition; ``session_end`` below is the LAST EVENT time
     (max ts) so the oracle needs no interval arithmetic.
     """
-    df = _maybe_watermark(events, ts_col, watermark)
+    df = _maybe_watermark(events, watermark)
     return (
-        df.groupBy(F.session_window(ts_col, gap).alias("w"), key)
+        df.groupBy(F.session_window("ts", gap).alias("w"), key)
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.max(ts_col).alias("session_end"),
+            F.max("ts").alias("session_end"),
             F.round(F.sum("value"), 2).alias("sum_value"),
         )
         .select(

@@ -1,136 +1,117 @@
-"""foreachBatch fallback tier for the stateful streaming guards.
+"""The stateful streaming guards: running totals, exact dedup, SimHash
+near-dup, heavy hitters and rate-limit admission.
 
-``transformWithStateInPandas`` (dedup_stream / neardup_stream /
-running_totals) is the per-row tier, but its Python worker speaks
-protobuf to the state server — an install-time dependency this container
-lacks. This module is the SAME guards re-expressed as the other
-production pattern: ``writeStream.foreachBatch`` + a keyed state TABLE
-committed per micro-batch through the repo's versioned table
-(tableformat.commit_version — crash-safe pointer-flip commits, so a died
-micro-batch never tears the state; together with the stream checkpoint's
-batch-id replay this is the classic Delta-MERGE streaming-dedup shape).
+Each guard is a ``writeStream.foreachBatch`` processor over a keyed
+state TABLE kept in the repo's versioned table format. Every processor
+goes through one replay guard, ``guarded``, which owns the whole
+transaction group under the processor's ``root``:
 
-Semantics vs the tws tier (documented deviations, both batch-granular):
-- replay counters are resolved per micro-batch (one value per key per
-  batch), not per input row;
-- the near-dup guard's WITHIN-batch pass flags a doc that matches ANY
-  earlier state-kept arrival of the same batch — a conservative
-  over-flag of the rare chain case (doc C matching only an
-  already-flagged doc B) that the row-sequential tws tier admits.
-  Flagged docs are never persisted, so state converges identically.
+- ``state``: the guard's keyed state after the last applied batch;
+- ``out``: the rows one applied batch emitted (guards that emit rows);
+- ``applied``: the ledger of applied ``(query_id, batch_id)`` keys, each
+  with the ``out`` version it wrote.
 
-Scale shape: per micro-batch, one keyed agg of the batch + one keyed
-join against the state table + one commit. State lives in parquet
-snapshots (object store at scale), not executor memory; the join prunes
-to touched keys once the state table is bucketed/partitioned by key.
+Per micro-batch the guard reads the state and ledger PINNED by the last
+``tableformat.commit_atomic`` transaction, returns at once when this
+``(query id, batch_id)`` is already in the ledger (a foreachBatch
+redelivery), and otherwise commits the new state, the output and the
+ledger entry as one transaction. A crash between member commits and the
+transaction flip leaves only unpinned orphan versions; the replayed
+batch recomputes from the pinned state. The query id is Spark's
+``sql.streaming.queryId``: stable across restarts from one checkpoint,
+new for a new checkpoint, so a second query over the same root applies
+its own batch 0 instead of skipping it. Calls made outside a stream
+share one fixed key.
+
+Semantics are batch-granular: a key's replay counter is resolved once
+per micro-batch, and the near-dup guard's within-batch pass flags a doc
+that matches ANY earlier state-kept arrival of the same batch (the rare
+chain case, doc C matching only an already-flagged doc B, is flagged
+too). Flagged docs are never stored.
+
+Scale shape: per micro-batch, one keyed agg of the batch, one keyed join
+against the state table and one commit. State lives in parquet snapshots
+(object store at scale), not executor memory. The ledger gains one row
+per applied batch. A watermark-bounded dedup horizon is
+``stream_joins.dedup_events`` (``dropDuplicatesWithinWatermark``).
 """
 
 from __future__ import annotations
 
 import os
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators import tableformat
+from ..functions import tokens
+from ..operators import dedup, tableformat
 from ..session import cut
-from .neardup_stream import band_keys, simhash_expr
+
+#: ledger key of a processor called outside a streaming query
+_DIRECT_QUERY = "direct"
+_LEDGER_SCHEMA = "query_id string, batch_id long, out_v long"
 
 
-def _state_or_empty(spark: SparkSession, root: str, schema: str) -> DataFrame:
-    """Latest committed state snapshot, or an empty frame before the
-    first commit."""
-    if os.path.exists(tableformat._manifest_path(root)):
-        return tableformat.read_version(spark, root)
-    return spark.createDataFrame([], schema)
-
-
-# ---------------------------------------------------------------------------
-# Running totals
-# ---------------------------------------------------------------------------
-def running_totals_batch(state_root: str):
-    """foreachBatch processor: per-user running totals as a versioned
-    state table (user_id, total, n_events)."""
+def guarded(root: str, state_schema: str, step):
+    """The one replay guard: wrap ``step(batch_df, state) -> (new_state,
+    out or None)`` as a foreachBatch processor over the transaction group
+    at ``root`` (see the module docstring). Output rows are stamped with
+    the ``batch_id`` that produced them."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        state = _state_or_empty(
-            spark, state_root, "user_id long, total double, n_events long"
+        query = (
+            spark.sparkContext.getLocalProperty("sql.streaming.queryId")
+            or _DIRECT_QUERY
         )
-        delta = batch_df.groupBy("user_id").agg(
-            F.sum("value").alias("d_total"), F.count(F.lit(1)).alias("d_n")
-        )
-        merged = (
-            state.join(delta, "user_id", "full_outer")
-            .select(
-                "user_id",
-                (F.coalesce("total", F.lit(0.0)) + F.coalesce("d_total", F.lit(0.0))).alias("total"),
-                (F.coalesce("n_events", F.lit(0)) + F.coalesce("d_n", F.lit(0))).alias("n_events"),
+        if os.path.exists(tableformat._txn_path(root)):
+            ledger = [
+                tuple(r)
+                for r in tableformat.read_atomic(spark, root, "applied").collect()
+            ]
+            if any(q == query and b == batch_id for q, b, _ in ledger):
+                return  # micro-batch replay: the pinned txn already has it
+            state = tableformat.read_atomic(spark, root, "state")
+        else:
+            ledger, state = [], spark.createDataFrame([], state_schema)
+        new_state, out = step(batch_df, state)
+        members = {"state": ("plain", new_state)}
+        out_v = None
+        if out is not None:
+            out_v = tableformat.next_version(os.path.join(root, "out"))
+            members["out"] = (
+                "plain", out.withColumn("batch_id", F.lit(int(batch_id)))
             )
-        )
-        tableformat.commit_version(merged, state_root)
+        ledger.append((query, int(batch_id), out_v))
+        members["applied"] = ("plain", spark.createDataFrame(ledger, _LEDGER_SCHEMA))
+        tableformat.commit_atomic(root, members)
 
     return process
 
 
-# ---------------------------------------------------------------------------
-# Exact dedup
-# ---------------------------------------------------------------------------
-def dedup_batch(state_root: str, out_root: str):
-    """foreachBatch processor for first-arrival-wins exact dedup.
-
-    State: (fp, winner_id, n_dup). Within a batch the winner is the
-    MIN doc_id (the deterministic variant dedup_stream's docstring
-    recommends). Emits every input row to ``out_root`` with kept +
-    the key's replay counter after this batch."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        state = _state_or_empty(
-            spark, state_root, "fp string, winner_id long, n_dup long"
-        )
-        agg = batch_df.groupBy("fp").agg(
-            F.min("doc_id").alias("winner_b"), F.count(F.lit(1)).alias("n_b")
-        )
-        resolved = (
-            agg.join(state, "fp", "left")
-            .select(
-                "fp",
-                F.coalesce("winner_id", F.col("winner_b")).alias("winner_id"),
-                (
-                    F.coalesce("n_dup", F.lit(0))
-                    + F.col("n_b")
-                    - F.when(F.col("winner_id").isNull(), 1).otherwise(0)
-                ).alias("n_dup"),
-                F.col("winner_id").isNull().alias("fp_is_new"),
-            )
-        )
-        out = (
-            batch_df.join(resolved, "fp")
-            .select(
-                "fp",
-                "doc_id",
-                (F.col("fp_is_new") & (F.col("doc_id") == F.col("winner_id"))).alias("kept"),
-                "n_dup",
-            )
-        )
-        out.write.mode("append").parquet(out_root)
-        new_state = state.join(agg, "fp", "left_anti").unionByName(
-            resolved.select("fp", "winner_id", "n_dup")
-        )
-        tableformat.commit_version(new_state, state_root)
-
-    return process
+def read_output(spark: SparkSession, root: str) -> DataFrame:
+    """Every applied micro-batch's output rows, each batch once: the
+    ``out`` versions the pinned ledger names (a torn commit's orphan
+    version is never named)."""
+    out_root = os.path.join(root, "out")
+    versions = sorted(
+        r["out_v"]
+        for r in tableformat.read_atomic(spark, root, "applied").collect()
+        if r["out_v"] is not None
+    )
+    return reduce(
+        DataFrame.unionByName,
+        [tableformat.read_version(spark, out_root, v) for v in versions],
+    )
 
 
-def run_dedup_fallback_stream(
-    stream_df: DataFrame, state_root: str, out_root: str, checkpoint: str
-):
-    """Wire the guard as a real Structured Streaming query:
-    readStream → foreachBatch(dedup_batch) with a checkpoint, so replays
-    and batch ids behave exactly as in production."""
+def run_stream(stream_df: DataFrame, process, checkpoint: str):
+    """Wire a processor as a real Structured Streaming query:
+    readStream → foreachBatch(process) with a checkpoint, so replays and
+    batch ids behave exactly as in production."""
     return (
-        stream_df.writeStream.foreachBatch(dedup_batch(state_root, out_root))
+        stream_df.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
@@ -138,140 +119,163 @@ def run_dedup_fallback_stream(
 
 
 # ---------------------------------------------------------------------------
+# Running totals
+# ---------------------------------------------------------------------------
+def running_totals_batch(root: str):
+    """Per-user running totals as keyed state (user_id, total, n_events)."""
+
+    def step(batch_df: DataFrame, state: DataFrame):
+        delta = batch_df.groupBy("user_id").agg(
+            F.sum("value").alias("d_total"), F.count(F.lit(1)).alias("d_n")
+        )
+        merged = state.join(delta, "user_id", "full_outer").select(
+            "user_id",
+            (F.coalesce("total", F.lit(0.0)) + F.coalesce("d_total", F.lit(0.0))).alias("total"),
+            (F.coalesce("n_events", F.lit(0)) + F.coalesce("d_n", F.lit(0))).alias("n_events"),
+        )
+        return merged, None
+
+    return guarded(root, "user_id long, total double, n_events long", step)
+
+
+# ---------------------------------------------------------------------------
+# Exact dedup
+# ---------------------------------------------------------------------------
+def dedup_batch(root: str):
+    """First-arrival-wins exact dedup by content fingerprint ``fp``.
+
+    State: (fp, winner_id, n_dup). Within a batch the winner is the MIN
+    doc_id. Emits every input row with ``kept`` and the key's replay
+    counter after this batch."""
+
+    def step(batch_df: DataFrame, state: DataFrame):
+        agg = batch_df.groupBy("fp").agg(
+            F.min("doc_id").alias("winner_b"), F.count(F.lit(1)).alias("n_b")
+        )
+        resolved = agg.join(state, "fp", "left").select(
+            "fp",
+            F.coalesce("winner_id", F.col("winner_b")).alias("winner_id"),
+            (
+                F.coalesce("n_dup", F.lit(0))
+                + F.col("n_b")
+                - F.when(F.col("winner_id").isNull(), 1).otherwise(0)
+            ).alias("n_dup"),
+            F.col("winner_id").isNull().alias("fp_is_new"),
+        )
+        out = batch_df.join(resolved, "fp").select(
+            "fp",
+            "doc_id",
+            (F.col("fp_is_new") & (F.col("doc_id") == F.col("winner_id"))).alias("kept"),
+            "n_dup",
+        )
+        new_state = state.join(agg, "fp", "left_anti").unionByName(
+            resolved.select("fp", "winner_id", "n_dup")
+        )
+        return new_state, out
+
+    return guarded(root, "fp string, winner_id long, n_dup long", step)
+
+
+# ---------------------------------------------------------------------------
 # SimHash near-dup guard
 # ---------------------------------------------------------------------------
-def neardup_batch(
-    state_root: str, out_root: str, max_hamming: int = 3, max_bucket: int = 64
-):
-    """foreachBatch processor for the banded SimHash guard.
+#: 4 bands of 15 bits: any pair within hamming 3 shares a band (pigeonhole)
+_BANDS, _BAND_BITS, _MAX_HAMMING = 4, 15, 3
+#: stored members per band bucket; a hot bucket degrades to first-N compares
+_MAX_BUCKET = 64
 
-    State: (band_key, doc_id, simhash) member rows per pigeonhole band.
-    A doc is flagged iff ANY of its bands holds a member (stored, or an
-    earlier state-kept arrival of the same batch) within ``max_hamming``.
-    Kept docs append to their bands up to ``max_bucket`` members (capped
-    docs are kept but not stored — same knob as the tws tier)."""
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        state = _state_or_empty(
-            spark, state_root, "band_key string, doc_id long, simhash long"
+def neardup_batch(root: str):
+    """Banded SimHash near-dup guard (signatures from ``dedup.simhash``).
+
+    State: (bk, id, simhash) member rows per pigeonhole band. A doc is
+    flagged iff ANY of its bands holds a member (stored, or an earlier
+    state-kept arrival of the same batch) within hamming 3. Kept docs
+    append to their bands up to 64 members (capped docs are kept but not
+    stored). Docs with no tokens have no signature and emit no row."""
+
+    def step(batch_df: DataFrame, state: DataFrame):
+        sig = cut(dedup.simhash(batch_df, "doc_id", "text"))  # feeds 4 reads
+        banded = sig.select(
+            "id",
+            "simhash",
+            F.explode(dedup.band_keys(F.col("simhash"), _BANDS, _BAND_BITS)).alias("bk"),
         )
-        banded = cut(  # feeds 3 passes below
-            batch_df.select(
-                F.col("doc_id"), simhash_expr(F.col("text")).alias("simhash")
-            )
-            .filter(F.col("simhash").isNotNull())
-            .select(
-                "doc_id",
-                "simhash",
-                F.explode(band_keys(F.col("simhash"))).alias("band_key"),
-            )
-        )
-        ham = lambda a, b: F.bit_count(a.bitwiseXOR(b))  # noqa: E731
+
+        def near(a, b):
+            xor = F.col(f"{a}.simhash").bitwiseXOR(F.col(f"{b}.simhash"))
+            return F.bit_count(xor) <= _MAX_HAMMING
 
         # pass 1: vs stored members
         vs_state = (
-            banded.alias("x")
-            .join(state.alias("m"), "band_key")
-            .filter(ham(F.col("x.simhash"), F.col("m.simhash")) <= max_hamming)
-            .select(F.col("x.doc_id").alias("doc_id"))
-            .distinct()
+            banded.alias("x").join(state.alias("m"), "bk")
+            .filter(near("x", "m")).select("x.id").distinct()
         )
         # pass 2: vs earlier state-kept arrivals of this batch
-        clean = banded.join(vs_state, "doc_id", "left_anti")
+        clean = banded.join(vs_state, "id", "left_anti")
         vs_batch = (
-            clean.alias("x")
-            .join(clean.alias("e"), "band_key")
-            .filter(
-                (F.col("e.doc_id") < F.col("x.doc_id"))
-                & (ham(F.col("x.simhash"), F.col("e.simhash")) <= max_hamming)
-            )
-            .select(F.col("x.doc_id").alias("doc_id"))
-            .distinct()
+            clean.alias("x").join(clean.alias("e"), "bk")
+            .filter((F.col("e.id") < F.col("x.id")) & near("x", "e"))
+            .select("x.id").distinct()
         )
         flagged = vs_state.unionByName(vs_batch).distinct()
-        docs = banded.select("doc_id").distinct()
-        out = docs.join(flagged.withColumn("kept", F.lit(False)), "doc_id", "left").select(
-            "doc_id", F.coalesce("kept", F.lit(True)).alias("kept")
+        out = sig.join(flagged.withColumn("kept", F.lit(False)), "id", "left").select(
+            F.col("id").alias("doc_id"), F.coalesce("kept", F.lit(True)).alias("kept")
         )
-        out.write.mode("append").parquet(out_root)
-
         # pass 3: append kept docs' bands, respecting the bucket cap
-        from pyspark.sql import Window
-
-        kept_bands = banded.join(out.filter("kept"), "doc_id", "left_semi")
-        counts = state.groupBy("band_key").agg(F.count(F.lit(1)).alias("n_m"))
-        rn = F.row_number().over(
-            Window.partitionBy("band_key").orderBy("doc_id")
-        )
+        counts = state.groupBy("bk").agg(F.count(F.lit(1)).alias("n_m"))
+        rn = F.row_number().over(Window.partitionBy("bk").orderBy("id"))
         admitted = (
-            kept_bands.join(counts, "band_key", "left")
+            banded.join(flagged, "id", "left_anti")
+            .join(counts, "bk", "left")
             .withColumn("rn", rn)
-            .filter(F.col("rn") + F.coalesce("n_m", F.lit(0)) <= max_bucket)
-            .select("band_key", "doc_id", "simhash")
+            .filter(F.col("rn") + F.coalesce("n_m", F.lit(0)) <= _MAX_BUCKET)
+            .select("bk", "id", "simhash")
         )
-        tableformat.commit_version(state.unionByName(admitted), state_root)
+        return state.unionByName(admitted), out
 
-    return process
-
-
-def run_neardup_fallback_stream(
-    stream_df: DataFrame,
-    state_root: str,
-    out_root: str,
-    checkpoint: str,
-    max_hamming: int = 3,
-    max_bucket: int = 64,
-):
-    return (
-        stream_df.writeStream.foreachBatch(
-            neardup_batch(state_root, out_root, max_hamming, max_bucket)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return guarded(
+        root, "bk struct<band: int, key: bigint>, id bigint, simhash bigint", step
     )
 
 
 # ---------------------------------------------------------------------------
 # Streaming heavy hitters (sharded weighted Misra-Gries)
 # ---------------------------------------------------------------------------
-def heavy_hitters_batch(state_root: str, n_shards: int = 8, k: int = 16):
-    """foreachBatch tier of heavy_hitters_stream: per micro-batch, one
-    distributed (shard, token) count agg, then each shard's weighted-MG
-    table (the SAME _mg_merge logic as the tws tier) is updated and
-    committed through the versioned state table. Honest limitation vs
-    the tws tier, stated: the per-batch (shard, token) counts are
-    collected to the driver for the merge — fine at per-batch
-    distinct-token scale, whereas the tws tier keeps the merge
-    executor-side per shard; the MG guarantee and lower-bound contract
-    are identical because the merge math is shared.
+def _mg_merge(counters: dict, token: str, weight: int, k: int) -> None:
+    """Weighted Misra-Gries insert: add, then while the table exceeds k,
+    subtract the minimum counter from everything and drop zeros — each
+    pass removes at least one entry, and total decrement mass is bounded
+    by shard_total/(k+1) (the standard weighted-MG argument)."""
+    counters[token] = counters.get(token, 0) + weight
+    while len(counters) > k:
+        m = min(counters.values())
+        for t in list(counters):
+            counters[t] -= m
+            if counters[t] <= 0:
+                del counters[t]
 
-    Replay idempotency (r9, was an r8 ADVICE finding): foreachBatch
-    redelivers a micro-batch after a failure between sink commit and
-    checkpoint advance, and a count MERGE is not idempotent — re-merging
-    double-counts tokens and breaks the count_lb ≤ exact-frequency
-    lower-bound contract. The highest applied batch_id rides INSIDE the
-    committed snapshot as a sentinel row (shard = -1, token =
-    '_applied_batch_id', count_lb = batch_id), so state and high-water
-    mark flip in the same atomic commit; process() no-ops on any
-    batch_id ≤ the recorded one. Readers use read_heavy_hitters_state,
-    which strips the sentinel."""
-    from ..functions import tokens
-    from .heavy_hitters_stream import _mg_merge
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        state = _state_or_empty(
-            spark, state_root, "shard long, token string, count_lb long"
-        )
-        state_rows = state.collect()
-        applied = max(
-            (int(r["count_lb"]) for r in state_rows if int(r["shard"]) == -1),
-            default=-1,
-        )
-        if batch_id <= applied:
-            return  # micro-batch replay: already folded into this state
+def heavy_hitters_batch(root: str, n_shards: int = 8, k: int = 16):
+    """Sharded weighted Misra-Gries: state (shard, token, count_lb).
+
+    Tokens shard by hash, so every occurrence of a token lands in ONE
+    shard and a token's within-shard frequency IS its global frequency:
+    the per-shard MG support guarantee (any token with freq >
+    shard_total/(k+1) survives) is a guarantee about GLOBAL heavy
+    hitters, and counts are lower bounds (decrements only subtract).
+    State is O(k·n_shards), independent of the stream length.
+
+    Per micro-batch, one distributed (shard, token) count agg; the counts
+    and the state are collected to the driver for the merge — fine at
+    per-batch distinct-token scale. A count merge is not idempotent, so
+    the replay guard is what keeps count_lb a lower bound."""
+    schema = "shard long, token string, count_lb long"
+
+    def step(batch_df: DataFrame, state: DataFrame):
+        tables: dict = {}
+        for r in state.collect():
+            tables.setdefault(int(r["shard"]), {})[r["token"]] = int(r["count_lb"])
         counts = (
             batch_df.select(F.explode(tokens(F.col("text"))).alias("token"))
             .withColumn(
@@ -281,122 +285,67 @@ def heavy_hitters_batch(state_root: str, n_shards: int = 8, k: int = 16):
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
         )
-        tables: dict = {}
-        for r in state_rows:
-            if int(r["shard"]) == -1:
-                continue
-            tables.setdefault(int(r["shard"]), {})[r["token"]] = int(r["count_lb"])
         for r in counts:
             _mg_merge(
-                tables.setdefault(int(r["shard"]), {}),
-                str(r["token"]),
-                int(r["n"]),
-                k,
+                tables.setdefault(int(r["shard"]), {}), str(r["token"]), int(r["n"]), k
             )
         rows = [
             (shard, tok, cnt)
             for shard, tab in tables.items()
             for tok, cnt in tab.items()
         ]
-        rows.append((-1, "_applied_batch_id", int(batch_id)))
-        tableformat.commit_version(
-            spark.createDataFrame(rows, "shard long, token string, count_lb long"),
-            state_root,
-        )
+        return batch_df.sparkSession.createDataFrame(rows, schema), None
 
-    return process
-
-
-def read_heavy_hitters_state(spark: SparkSession, state_root: str) -> DataFrame:
-    """The committed heavy-hitters state WITHOUT the idempotency sentinel
-    (shard = -1) — the read path every consumer should use."""
-    return tableformat.read_version(spark, state_root).filter(F.col("shard") >= 0)
+    return guarded(root, schema, step)
 
 
 # ---------------------------------------------------------------------------
-# Per-key quota / rate-limit admission (r9)
+# Per-key quota / rate-limit admission
 # ---------------------------------------------------------------------------
-def rate_limit_batch(
-    root: str, cap: int = 3, window_us: int = 3_600_000_000
-):
-    """foreachBatch admission control: at most ``cap`` events per
-    (user_id, event-time window) are ADMITTED; the rest are emitted
-    flagged ``admitted = false`` — the ingest-side quota guard (API rate
-    caps, per-user sampling ceilings, abuse throttles) in front of the
-    pipeline, so downstream never sees an unbounded hot key. Within a
-    batch the admission order is deterministic — (ts, event_id) — and
-    across batches the per-(user, window) admitted count is the keyed
-    state. Everything is executor-side (one window rank + one state join
-    per batch); state is O(active user·window keys) and old windows age
-    out with vacuum.
+#: event-time window of the quota: one hour, in microseconds
+_WINDOW_US = 3_600_000_000
 
-    Torn-window atomicity (r10, was an r9 ADVICE finding): output and
-    state commit as ONE ``tableformat.commit_atomic`` transaction —
-    members ``out`` and ``state`` under ``root``, one atomic _txn.json
-    flip. The replay sentinel AND the prior quota counts are read from
-    the txn-PINNED state (``read_atomic``), never a member's own current
-    pointer, so a crash between a member commit and the txn flip leaves
-    only unpinned orphan member versions: the replayed batch recomputes
-    from the last pinned state and commits fresh members, and consumers
-    reading through ``read_atomic`` (or the batch_id-stamped ``out``
-    versions) neither double-admit nor double-emit. The previous design
-    (two independent commit_version calls) could commit the same rows as
-    two output versions across a crash+replay.
+
+def rate_limit_batch(root: str, cap: int = 3):
+    """Admission control: at most ``cap`` events per (user_id, event-time
+    hour) are ADMITTED; the rest are emitted flagged ``admitted = false``
+    — the ingest-side quota guard (API rate caps, per-user sampling
+    ceilings, abuse throttles) in front of the pipeline, so downstream
+    never sees an unbounded hot key. Within a batch the admission order
+    is deterministic — (ts, event_id) — and across batches the
+    per-(user, window) admitted count is the keyed state. Everything is
+    executor-side (one window rank + one state join per batch); state is
+    O(active user·window keys) and old windows age out with vacuum.
 
     Window ids use pure long arithmetic —
     ``unix_micros - pmod(unix_micros, window_us)`` — i.e. true floor
     bucketing, so pre-1970 timestamps land in their own window rather
-    than truncating toward zero into the next one (r9 ADVICE low).
+    than truncating toward zero into the next one.
 
-    Returns the process closure; read the consistent pair via
-    ``tableformat.read_atomic(spark, root, "out" | "state")``; feed
-    consumers of ``<root>/out`` versions dedupe on the ``batch_id``
-    column (replayed content is deterministic and byte-identical)."""
+    ``tableformat.read_atomic(spark, root, "out")`` is the last applied
+    batch's output; ``read_output`` is the whole feed."""
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        state_schema = "user_id long, win_start long, admitted long"
-        if os.path.exists(tableformat._txn_path(root)):
-            state = tableformat.read_atomic(spark, root, "state")
-        else:
-            state = spark.createDataFrame([], state_schema)
-        applied = (
-            state.filter(F.col("user_id") == -1)
-            .agg(F.max("admitted").alias("m"))
-            .collect()[0]["m"]
-        )
-        if applied is not None and batch_id <= int(applied):
-            return  # micro-batch replay: txn already pins this batch
-        from pyspark.sql import Window as W
-
+    def step(batch_df: DataFrame, state: DataFrame):
         us = F.unix_micros(F.col("ts"))
         ev = batch_df.select(
             "event_id",
             "user_id",
             "ts",
-            (us - F.pmod(us, F.lit(window_us))).alias("win_start"),
+            (us - F.pmod(us, F.lit(_WINDOW_US))).alias("win_start"),
         )
-        w = W.partitionBy("user_id", "win_start").orderBy("ts", "event_id")
-        ranked = ev.withColumn("rnk", F.row_number().over(w))
-        prior = state.filter(F.col("user_id") >= 0).select(
-            "user_id", "win_start", F.col("admitted").alias("prior")
-        )
-        scored = ranked.join(prior, ["user_id", "win_start"], "left").select(
-            "event_id",
-            "user_id",
-            "ts",
-            "win_start",
-            (
-                F.coalesce(F.col("prior"), F.lit(0)) + F.col("rnk")
-                <= F.lit(cap)
-            ).alias("admitted"),
-        )
-        out = scored.select(
-            "event_id",
-            "user_id",
-            "win_start",
-            "admitted",
-            F.lit(int(batch_id)).alias("batch_id"),
+        w = Window.partitionBy("user_id", "win_start").orderBy("ts", "event_id")
+        prior = state.withColumnRenamed("admitted", "prior")
+        scored = (
+            ev.withColumn("rnk", F.row_number().over(w))
+            .join(prior, ["user_id", "win_start"], "left")
+            .select(
+                "event_id",
+                "user_id",
+                "win_start",
+                (F.coalesce(F.col("prior"), F.lit(0)) + F.col("rnk") <= F.lit(cap)).alias(
+                    "admitted"
+                ),
+            )
         )
         new_counts = (
             scored.groupBy("user_id", "win_start")
@@ -405,21 +354,11 @@ def rate_limit_batch(
             .select(
                 "user_id",
                 "win_start",
-                (
-                    F.coalesce(F.col("prior"), F.lit(0))
-                    + F.coalesce(F.col("d"), F.lit(0))
-                ).cast("long").alias("admitted"),
+                (F.coalesce(F.col("prior"), F.lit(0)) + F.coalesce(F.col("d"), F.lit(0)))
+                .cast("long")
+                .alias("admitted"),
             )
         )
-        sentinel = spark.createDataFrame(
-            [(-1, 0, int(batch_id))], state_schema
-        )
-        tableformat.commit_atomic(
-            root,
-            {
-                "out": ("plain", out),
-                "state": ("plain", new_counts.unionByName(sentinel)),
-            },
-        )
+        return new_counts, scored
 
-    return process
+    return guarded(root, "user_id long, win_start long, admitted long", step)

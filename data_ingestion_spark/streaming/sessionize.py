@@ -81,16 +81,14 @@ def _sessionize_group(
         yield out
 
 
-def sessionize_stream(
-    events: DataFrame, gap_seconds: int = 1800, ts_col: str = "ts"
-) -> DataFrame:
+def sessionize_stream(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
     """Emit closed per-user sessions from a STREAMING events DataFrame."""
 
     def fn(key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState) -> Any:
         return _sessionize_group(key, pdfs, state, gap_seconds)
 
     return (
-        events.selectExpr("user_id", f"{ts_col} AS ts")
+        events.select("user_id", "ts")
         .groupBy("user_id")
         .applyInPandasWithState(
             fn,

@@ -54,7 +54,6 @@ def interval_join(
 def dedup_events(
     events: DataFrame,
     keys: Sequence[str] = ("event_id",),
-    ts_col: str = "ts",
     watermark: Optional[str] = None,
 ) -> DataFrame:
     """Exactly-once event dedup by key.
@@ -65,7 +64,7 @@ def dedup_events(
     ``dropDuplicates`` (the same semantics over a finite input).
     """
     if watermark:
-        return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
+        return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
             list(keys)
         )
     return events.dropDuplicates(list(keys))

@@ -5,6 +5,8 @@ replay skip, per-file ``process_file``).
 The behavioural test sends the same receive through each door and pins
 the same audit rows and tallies; the scan keeps the guard read and the
 per-file ingest in that one step, so no door grows its own copy again.
+A second scan keeps the stateful guards' commits in their one replay
+guard (``streaming/foreach_batch_state.py``).
 """
 
 from __future__ import annotations
@@ -101,4 +103,21 @@ def test_only_the_shared_step_reads_the_guard_or_ingests_a_file():
     assert sorted(calls) == [
         ("receive.py", "process_file", "FrontDoor.ingest"),
         ("receive.py", "successful_files", "FrontDoor.ingest"),
+    ]
+
+
+def test_only_the_replay_guard_commits_stream_state():
+    """Under ``streaming/`` only ``foreach_batch_state.guarded`` commits a
+    versioned table or reads the streaming query id, so every stateful
+    guard keeps its (query id, batch_id) replay check."""
+    calls = []
+    for name in sorted(os.listdir(STREAMING)):
+        if name.endswith(".py"):
+            with open(os.path.join(STREAMING, name), encoding="utf-8") as fh:
+                tree = ast.parse(fh.read(), filename=name)
+            calls += [(name, *call) for call in _calls(
+                tree, {"commit_atomic", "commit_version", "getLocalProperty"})]
+    assert sorted(calls) == [
+        ("foreach_batch_state.py", "commit_atomic", "guarded.process"),
+        ("foreach_batch_state.py", "getLocalProperty", "guarded.process"),
     ]

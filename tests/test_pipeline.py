@@ -130,17 +130,6 @@ def test_heterogeneous_schema_union(spark, warehouse, bucket, tmp_path):
     assert out.count() == 2
 
 
-def test_orc_sink_roundtrip(spark, tmp_path):
-    from data_ingestion_spark.sinks.parquet_sink import ParquetSink
-
-    sink = ParquetSink(spark, str(tmp_path / "wh"), fmt="orc")
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    assert sink.insert_documents("t_orc", df) == 2
-    assert sink.insert_documents("t_orc", df.filter("id = 1")) == 1
-    out = sorted((r["id"], r["v"]) for r in sink.read_table("t_orc").collect())
-    assert out == [(1, "a"), (1, "a"), (2, "b")]
-
-
 def test_register_parser_plugin_kv_format(spark, tmp_path):
     """User-extensible parser registry (the reference's DataParser trait,
     ports.rs:11-14): plug in a pure-DataFrame '.kv' parser and dispatch

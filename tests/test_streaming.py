@@ -1,5 +1,6 @@
 """Structured Streaming tests: the event loop (reference ecs_service.rs
-rebuilt on a file-source stream) and the event-time operators.
+rebuilt on a file-source stream), the event-time operators and the
+stateful guards behind their one replay guard.
 
 Stream results are asserted EQUAL to the same functions run in batch mode —
 the batch/stream polymorphism of the DataFrame API is itself the test.
@@ -8,6 +9,7 @@ the batch/stream polymorphism of the DataFrame API is itself the test.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 import pytest
 
@@ -21,17 +23,6 @@ from data_ingestion_spark.streaming import (
 )
 
 SF_DIR = "/root/testdata/sf0.001"
-
-# transformWithStateInPandas speaks protobuf to its state server; where the
-# install lacks google.protobuf, the stateful-guard E2Es dispatch to the
-# foreachBatch versioned-state fallback tier instead of skipping — a real
-# readStream E2E runs either way (round 7; previously these skipped).
-try:  # pragma: no cover - environment probe
-    import google.protobuf  # noqa: F401
-
-    HAS_TWS = True
-except ImportError:
-    HAS_TWS = False
 
 
 # ---------------------------------------------------------------------------
@@ -290,147 +281,6 @@ def test_streaming_dedup_collapses_redelivery(spark, tmp_path):
     q.awaitTermination()
     got = spark.table("t_sdedup").collect()
     assert len(got) == len({r["event_id"] for r in got}) == n_unique
-
-
-# ---------------------------------------------------------------------------
-# Spark 4 arbitrary-state API (transformWithStateInPandas)
-# ---------------------------------------------------------------------------
-def test_running_totals_stream_equals_batch(spark, tmp_path):
-    """Final per-key running totals must equal the batch groupBy aggregate
-    over the same data — via transformWithStateInPandas when the install
-    has protobuf, else via the foreachBatch versioned-state fallback
-    (streaming/foreach_batch_state.py). Both paths are real readStream
-    E2Es with a checkpoint."""
-    import pyspark.sql.functions as F
-
-    events_batch = load_table(spark, SF_DIR, "events").filter("user_id < 10")
-    src = str(tmp_path / "events_tws_src")
-    events_batch.write.parquet(src)
-    batch = {
-        r["user_id"]: (r["n"], r["total"])
-        for r in events_batch.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total"))
-        .collect()
-    }
-
-    if not HAS_TWS:
-        from data_ingestion_spark.operators import tableformat
-        from data_ingestion_spark.streaming.foreach_batch_state import (
-            running_totals_batch,
-        )
-
-        state_root = str(tmp_path / "rt_state")
-        q = (
-            stream_events_from_dir(spark, src)
-            .writeStream.foreachBatch(running_totals_batch(state_root))
-            .option("checkpointLocation", str(tmp_path / "rt_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        final = {
-            r["user_id"]: (r["n_events"], r["total"])
-            for r in tableformat.read_version(spark, state_root).collect()
-        }
-        assert set(final) == set(batch) and len(batch) > 0
-        for k in batch:
-            assert final[k][0] == batch[k][0]
-            assert abs(final[k][1] - batch[k][1]) < 1e-6
-        return
-
-    from data_ingestion_spark.streaming.running_totals import running_totals_stream
-
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", ""
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        sdf = running_totals_stream(stream_events_from_dir(spark, src))
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName("t_tws")
-            .outputMode("update")
-            .option(
-                "checkpointLocation", str(tmp_path / "tws_ckpt")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # update mode may emit a row per key per micro-batch; the LAST row
-        # per key (max n_events) is the final running total
-        rows = spark.table("t_tws").collect()
-        final = {}
-        for r in rows:
-            cur = final.get(r["user_id"])
-            if cur is None or r["n_events"] > cur[0]:
-                final[r["user_id"]] = (r["n_events"], r["total_value"])
-        assert set(final) == set(batch) and len(batch) > 0
-        for k in batch:
-            assert final[k][0] == batch[k][0]
-            assert abs(final[k][1] - batch[k][1]) < 1e-6
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
-def test_running_totals_processor_logic_with_fake_state():
-    """The StatefulProcessor's accumulation logic, driven directly with a
-    fake handle/state (the state-server transport is env-gated above; the
-    logic is not)."""
-    import pandas as pd
-
-    from data_ingestion_spark.streaming.running_totals import RunningTotals
-
-    class FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    class FakeHandle:
-        def __init__(self):
-            self.state = FakeValueState()
-
-        def getValueState(self, name, schema):
-            return self.state
-
-    proc = RunningTotals()
-    handle = FakeHandle()
-    proc.init(handle)
-    # batch 1: two rows for key 7
-    out1 = list(
-        proc.handleInputRows(
-            (7,), iter([pd.DataFrame({"value": [2.0, 3.0]})]), None
-        )
-    )
-    assert len(out1) == 1
-    r = out1[0].iloc[0]
-    assert (r["user_id"], r["n_events"], r["total_value"]) == (7, 2, 5.0)
-    # batch 2: state carried across micro-batches, two chunks in one batch
-    out2 = list(
-        proc.handleInputRows(
-            (7,),
-            iter([pd.DataFrame({"value": [1.0]}), pd.DataFrame({"value": [4.0]})]),
-            None,
-        )
-    )
-    r2 = out2[0].iloc[0]
-    assert (r2["n_events"], r2["total_value"]) == (4, 10.0)
-    assert handle.state.get() == (4, 10.0)
-    proc.close()
 
 
 def test_watermark_drops_late_rows_across_restarts(spark, tmp_path):
@@ -787,106 +637,55 @@ def test_sqs_front_door_compressed_landing(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Streaming exact dedup (transformWithStateInPandas)
+# Stateful guards: foreachBatch processors over versioned state tables,
+# each behind the one (query id, batch_id) replay guard
 # ---------------------------------------------------------------------------
-class _FakeValueState:
-    def __init__(self):
-        self._v = None
+def test_running_totals_stream_equals_batch(spark, tmp_path):
+    """Final per-key running totals must equal the batch groupBy aggregate
+    over the same data, through a real readStream with a checkpoint."""
+    import pyspark.sql.functions as F
 
-    def exists(self):
-        return self._v is not None
-
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-
-    def clear(self):
-        self._v = None
-
-
-class _FakeDedupHandle:
-    def __init__(self):
-        self.state = _FakeValueState()
-        self.ttl_seen = None
-
-    def getValueState(self, name, schema, ttlDurationMs=None):
-        self.ttl_seen = ttlDurationMs
-        return self.state
-
-
-def test_streaming_dedup_first_wins_and_replays_flagged():
-    """First arrival kept; same-batch and cross-batch replays flagged
-    with an accumulating counter (fake-state harness — the protobuf
-    state-server transport is env-gated, the logic is not)."""
-    import pandas as pd
-
-    from data_ingestion_spark.streaming.dedup_stream import StreamingDedup
-
-    proc = StreamingDedup()
-    handle = _FakeDedupHandle()
-    proc.init(handle)
-    assert handle.ttl_seen is None
-
-    out1 = pd.concat(
-        proc.handleInputRows(
-            ("fp_a",), iter([pd.DataFrame({"doc_id": [10, 11, 12]})]), None
-        )
+    from data_ingestion_spark.operators import tableformat
+    from data_ingestion_spark.streaming.foreach_batch_state import (
+        run_stream,
+        running_totals_batch,
     )
-    assert list(out1["kept"]) == [True, False, False]
-    assert list(out1["doc_id"]) == [10, 11, 12]
-    assert list(out1["n_dup"]) == [0, 1, 2]
-    # batch 2: pure replays — state carried, winner unchanged
-    out2 = pd.concat(
-        proc.handleInputRows(
-            ("fp_a",), iter([pd.DataFrame({"doc_id": [13]})]), None
-        )
-    )
-    assert list(out2["kept"]) == [False] and list(out2["n_dup"]) == [3]
-    assert handle.state.get() == (10, 3)
-    proc.close()
 
-
-def test_streaming_dedup_ttl_readmits_after_state_expiry():
-    """With a TTL the seen-entry ages out of the state store; the next
-    arrival must be re-admitted as a fresh winner (the bounded-state
-    dedup-horizon contract). Expiry is simulated by clearing the fake
-    state, which is exactly how an expired ValueState presents
-    (exists() -> False)."""
-    import pandas as pd
-
-    from data_ingestion_spark.streaming.dedup_stream import StreamingDedup
-
-    proc = StreamingDedup(ttl_ms=60_000)
-    handle = _FakeDedupHandle()
-    proc.init(handle)
-    assert handle.ttl_seen == 60_000
-
-    out1 = pd.concat(
-        proc.handleInputRows(
-            ("fp_b",), iter([pd.DataFrame({"doc_id": [1]})]), None
-        )
-    )
-    assert list(out1["kept"]) == [True]
-    handle.state.clear()  # TTL expiry
-    out2 = pd.concat(
-        proc.handleInputRows(
-            ("fp_b",), iter([pd.DataFrame({"doc_id": [2]})]), None
-        )
-    )
-    assert list(out2["kept"]) == [True]  # re-admitted
-    assert handle.state.get() == (2, 0)
+    events_batch = load_table(spark, SF_DIR, "events").filter("user_id < 10")
+    src = str(tmp_path / "events_rt_src")
+    events_batch.write.parquet(src)
+    batch = {
+        r["user_id"]: (r["n"], r["total"])
+        for r in events_batch.groupBy("user_id")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total"))
+        .collect()
+    }
+    root = str(tmp_path / "rt")
+    run_stream(
+        stream_events_from_dir(spark, src),
+        running_totals_batch(root),
+        str(tmp_path / "rt_ckpt"),
+    ).awaitTermination()
+    final = {
+        r["user_id"]: (r["n_events"], r["total"])
+        for r in tableformat.read_atomic(spark, root, "state").collect()
+    }
+    assert set(final) == set(batch) and len(batch) > 0
+    for k in batch:
+        assert final[k][0] == batch[k][0]
+        assert abs(final[k][1] - batch[k][1]) < 1e-6
 
 
 def test_streaming_dedup_stream_equals_batch(spark, tmp_path):
-    """E2E: final kept-set equals the batch min-per-fingerprint winners —
-    over the transformWithStateInPandas state-server transport when the
-    install has protobuf, else over the foreachBatch versioned-state
-    fallback (which pins strict min-id winners)."""
+    """E2E: the final kept-set equals the batch min-per-fingerprint
+    winners, and every input row surfaces exactly once with a verdict."""
     import pyspark.sql.functions as F
 
-    from data_ingestion_spark.streaming.dedup_stream import dedup_stream
+    from data_ingestion_spark.streaming.foreach_batch_state import (
+        dedup_batch,
+        read_output,
+        run_stream,
+    )
 
     docs = (
         load_table(spark, SF_DIR, "documents")
@@ -902,191 +701,26 @@ def test_streaming_dedup_stream_equals_batch(spark, tmp_path):
         r["fp"]: r["w"]
         for r in docs.groupBy("fp").agg(F.min("doc_id").alias("w")).collect()
     }
-
-    if not HAS_TWS:
-        from data_ingestion_spark.streaming.foreach_batch_state import (
-            run_dedup_fallback_stream,
-        )
-
-        out_root = str(tmp_path / "dedup_out")
-        q = run_dedup_fallback_stream(
-            spark.readStream.schema("fp string, doc_id long").parquet(src),
-            state_root=str(tmp_path / "dedup_state"),
-            out_root=out_root,
-            checkpoint=str(tmp_path / "dedup_fb_ckpt"),
-        )
-        q.awaitTermination()
-        out = spark.read.parquet(out_root)
-        kept = {r["fp"]: r["doc_id"] for r in out.filter("kept").collect()}
-        # the fallback's within-batch winner is strict min-id — exact match
-        assert kept == batch and len(batch) > 0
-        # every input row surfaced exactly once with a kept verdict
-        assert out.count() == docs.count()
-        return
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = (
-            spark.readStream.schema("fp string, doc_id long").parquet(src)
-        )
-        q = (
-            dedup_stream(stream)
-            .writeStream.format("memory")
-            .queryName("t_dedup_stream")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "dedup_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        kept = {
-            r["fp"]: r["doc_id"]
-            for r in spark.table("t_dedup_stream").filter("kept").collect()
-        }
-        batch = {
-            r["fp"]: r["w"]
-            for r in docs.groupBy("fp").agg(F.min("doc_id").alias("w")).collect()
-        }
-        assert set(kept) == set(batch)
-        # a single parquet batch arrives unordered; the stream winner is
-        # SOME member of each fp group (first-arrival semantics)
-        all_ids = docs.groupBy("fp").agg(
-            F.collect_set("doc_id").alias("ids")
-        ).collect()
-        members = {r["fp"]: set(r["ids"]) for r in all_ids}
-        for fp, w in kept.items():
-            assert w in members[fp]
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
-class _FakeListState:
-    def __init__(self):
-        self.rows = []
-
-    def get(self):
-        return iter(self.rows)
-
-    def put(self, rows):
-        self.rows = list(rows)
-
-    def clear(self):
-        self.rows = []
-
-
-class _FakeNearDupHandle:
-    def __init__(self):
-        self.state = _FakeListState()
-        self.ttl_seen = "unset"
-
-    def getListState(self, name, schema, ttlDurationMs=None):
-        self.ttl_seen = ttlDurationMs
-        return self.state
-
-
-def test_neardup_simhash_expr_matches_batch(spark):
-    """The streaming per-row simhash expression must be bit-identical to
-    the batch grouped-aggregation simhash — stream and batch must agree
-    on document identity. Includes the no-token NULL edge."""
-    import pyspark.sql.functions as F
-
-    from data_ingestion_spark.operators.dedup import simhash
-    from data_ingestion_spark.streaming.neardup_stream import simhash_expr
-
-    docs = load_table(spark, SF_DIR, "documents").limit(50).select("doc_id", "text")
-    batch = {r["id"]: r["simhash"] for r in simhash(docs, "doc_id", "text").collect()}
-    stream_side = {
-        r["doc_id"]: r["sig"]
-        for r in docs.select("doc_id", simhash_expr(F.col("text")).alias("sig"))
-        .filter(F.col("sig").isNotNull())
-        .collect()
-    }
-    assert batch == stream_side and len(batch) == 50
-
-    empty = spark.createDataFrame([(1, ""), (2, "   "), (3, "ok")], "doc_id: long, text: string")
-    got = {
-        r["doc_id"]: r["sig"]
-        for r in empty.select("doc_id", simhash_expr(F.col("text")).alias("sig")).collect()
-    }
-    assert got[1] is None and got[2] is None and got[3] is not None
-
-
-def test_neardup_band_keys_match_batch_banding(spark):
-    """band_keys must reproduce the batch pigeonhole banding (4 x 15-bit
-    chunks) so streaming buckets equal batch candidate blocks."""
-    import pyspark.sql.functions as F
-
-    from data_ingestion_spark.streaming.neardup_stream import band_keys
-
-    sigs = [0, 1, (1 << 60) - 1, 0x123456789ABCDEF, 0x800000000000000]
-    df = spark.createDataFrame([(s,) for s in sigs], "sig: long")
-    got = {r["sig"]: r["bk"] for r in df.select("sig", band_keys(F.col("sig")).alias("bk")).collect()}
-    for s in sigs:
-        want = [f"{bi}:{(s >> (bi * 15)) & ((1 << 15) - 1)}" for bi in range(4)]
-        assert got[s] == want
-
-
-def test_streaming_neardup_bucket_logic():
-    """Fake-state harness over StreamingNearDup: exact dup matches at
-    hamming 0 against the EARLIEST member, ham<=3 matches, ham>3 appends
-    as a new member, the bucket cap emits capped=true without storing,
-    and state round-trips across batches."""
-    import pandas as pd
-
-    from data_ingestion_spark.streaming.neardup_stream import StreamingNearDup
-
-    proc = StreamingNearDup(max_hamming=3, max_bucket=3)
-    handle = _FakeNearDupHandle()
-    proc.init(handle)
-    assert handle.ttl_seen is None
-
-    base = 0b111100001111
-    near = base ^ 0b101  # hamming 2
-    far = base ^ ((1 << 20) - 1)  # hamming 20
-    out1 = pd.concat(
-        proc.handleInputRows(
-            ("0:7",),
-            iter([pd.DataFrame({"doc_id": [1, 2, 3], "simhash": [base, near, far]})]),
-            None,
-        )
-    )
-    assert list(out1["kept"]) == [True, False, True]
-    assert out1["match_id"].tolist()[1] == 1 and out1["hamming"].tolist()[1] == 2
-    assert [tuple(r) for r in handle.state.rows] == [(1, base), (3, far)]
-
-    # batch 2: exact dup of member 3; then a non-matching arrival hits the
-    # cap (bucket already holds 2, the dup is not stored, cap is 3)
-    out2 = pd.concat(
-        proc.handleInputRows(
-            ("0:7",),
-            iter([pd.DataFrame({"doc_id": [4, 5, 6], "simhash": [far, base ^ (0xFF << 30), base ^ (0xFF << 40)]})]),
-            None,
-        )
-    )
-    assert list(out2["kept"]) == [False, True, True]
-    assert out2["match_id"].tolist()[0] == 3 and out2["hamming"].tolist()[0] == 0
-    assert list(out2["capped"]) == [False, False, True]
-    # capped arrival (doc 6) was NOT stored
-    assert [r[0] for r in handle.state.rows] == [1, 3, 5]
-    proc.close()
+    root = str(tmp_path / "dedup")
+    run_stream(
+        spark.readStream.schema("fp string, doc_id long").parquet(src),
+        dedup_batch(root),
+        str(tmp_path / "dedup_ckpt"),
+    ).awaitTermination()
+    out = read_output(spark, root)
+    kept = {r["fp"]: r["doc_id"] for r in out.filter("kept").collect()}
+    assert kept == batch and len(batch) > 0
+    assert out.count() == docs.count()
 
 
 def test_streaming_neardup_e2e_flags_planted_near_dups(spark, tmp_path):
-    """E2E: planted near-identical doc pairs must be flagged on at least
-    one band; unrelated docs must not be — over the state-server
-    transport when the install has protobuf, else over the foreachBatch
-    versioned-state fallback (which flags the higher id of a same-batch
-    pair deterministically)."""
-    import pyspark.sql.functions as F
-
-    from data_ingestion_spark.streaming.neardup_stream import neardup_stream
+    """E2E: of a planted same-batch duplicate pair the higher id is
+    flagged; unrelated docs are not."""
+    from data_ingestion_spark.streaming.foreach_batch_state import (
+        neardup_batch,
+        read_output,
+        run_stream,
+    )
 
     rows = [
         (1, "alpha beta gamma delta epsilon zeta eta theta"),
@@ -1095,70 +729,29 @@ def test_streaming_neardup_e2e_flags_planted_near_dups(spark, tmp_path):
     ]
     src = str(tmp_path / "neardup_src")
     spark.createDataFrame(rows, "doc_id: long, text: string").write.parquet(src)
-
-    if not HAS_TWS:
-        from data_ingestion_spark.streaming.foreach_batch_state import (
-            run_neardup_fallback_stream,
-        )
-
-        out_root = str(tmp_path / "neardup_out")
-        q = run_neardup_fallback_stream(
-            spark.readStream.schema("doc_id long, text string").parquet(src),
-            state_root=str(tmp_path / "neardup_state"),
-            out_root=out_root,
-            checkpoint=str(tmp_path / "neardup_fb_ckpt"),
-        )
-        q.awaitTermination()
-        out = spark.read.parquet(out_root)
-        flagged = {r["doc_id"] for r in out.filter("NOT kept").collect()}
-        assert flagged == {2}  # min-id winner kept, replay flagged
-        assert {r["doc_id"] for r in out.filter("kept").collect()} == {1, 3}
-        return
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-        q = (
-            neardup_stream(stream)
-            .writeStream.format("memory")
-            .queryName("t_neardup_stream")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "neardup_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        flagged = {
-            r["doc_id"]
-            for r in spark.table("t_neardup_stream").filter("NOT kept").collect()
-        }
-        assert flagged == {1} or flagged == {2}  # one of the pair, either order
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    root = str(tmp_path / "neardup")
+    run_stream(
+        spark.readStream.schema("doc_id long, text string").parquet(src),
+        neardup_batch(root),
+        str(tmp_path / "neardup_ckpt"),
+    ).awaitTermination()
+    out = read_output(spark, root)
+    assert {r["doc_id"] for r in out.filter("NOT kept").collect()} == {2}
+    assert {r["doc_id"] for r in out.filter("kept").collect()} == {1, 3}
 
 
-# ---------------------------------------------------------------------------
-# foreachBatch versioned-state fallback tier (round 7): cross-batch state
-# persists through the versioned table regardless of which install tier
-# runs the dispatch tests above — these always run.
-# ---------------------------------------------------------------------------
 def test_dedup_fallback_state_persists_across_streams(spark, tmp_path):
     """A fingerprint kept in stream run 1 must be flagged as a replay in
     stream run 2 (separate query, same state root) — the nightly-restart
     shape: state outlives the streaming query."""
+    from data_ingestion_spark.operators import tableformat
     from data_ingestion_spark.streaming.foreach_batch_state import (
-        run_dedup_fallback_stream,
+        dedup_batch,
+        read_output,
+        run_stream,
     )
 
-    state_root = str(tmp_path / "state")
-    out_root = str(tmp_path / "out")
+    root = str(tmp_path / "dedup")
     src1 = str(tmp_path / "src1")
     src2 = str(tmp_path / "src2")
     spark.createDataFrame(
@@ -1168,24 +761,20 @@ def test_dedup_fallback_state_persists_across_streams(spark, tmp_path):
         [("fpA", 3), ("fpC", 4)], "fp string, doc_id long"
     ).write.parquet(src2)
     for i, src in enumerate([src1, src2]):
-        q = run_dedup_fallback_stream(
+        run_stream(
             spark.readStream.schema("fp string, doc_id long").parquet(src),
-            state_root=state_root,
-            out_root=out_root,
-            checkpoint=str(tmp_path / f"ckpt{i}"),
-        )
-        q.awaitTermination()
-    out = {(r["fp"], r["doc_id"]): r["kept"] for r in spark.read.parquet(out_root).collect()}
+            dedup_batch(root),
+            str(tmp_path / f"ckpt{i}"),
+        ).awaitTermination()
+    out = {(r["fp"], r["doc_id"]): r["kept"] for r in read_output(spark, root).collect()}
     assert out == {
         ("fpA", 1): True,
         ("fpB", 2): True,
         ("fpA", 3): False,  # replay across stream restarts
         ("fpC", 4): True,
     }
-    from data_ingestion_spark.operators import tableformat
-
     state = {r["fp"]: (r["winner_id"], r["n_dup"]) for r in
-             tableformat.read_version(spark, state_root).collect()}
+             tableformat.read_atomic(spark, root, "state").collect()}
     assert state == {"fpA": (1, 1), "fpB": (2, 0), "fpC": (4, 0)}
 
 
@@ -1193,11 +782,12 @@ def test_neardup_fallback_state_persists_across_streams(spark, tmp_path):
     """A doc near-identical to a member stored by an EARLIER stream run
     must be flagged; genuinely new content must not be."""
     from data_ingestion_spark.streaming.foreach_batch_state import (
-        run_neardup_fallback_stream,
+        neardup_batch,
+        read_output,
+        run_stream,
     )
 
-    state_root = str(tmp_path / "state")
-    out_root = str(tmp_path / "out")
+    root = str(tmp_path / "neardup")
     src1 = str(tmp_path / "src1")
     src2 = str(tmp_path / "src2")
     text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
@@ -1209,27 +799,22 @@ def test_neardup_fallback_state_persists_across_streams(spark, tmp_path):
         "doc_id long, text string",
     ).write.parquet(src2)
     for i, src in enumerate([src1, src2]):
-        q = run_neardup_fallback_stream(
+        run_stream(
             spark.readStream.schema("doc_id long, text string").parquet(src),
-            state_root=state_root,
-            out_root=out_root,
-            checkpoint=str(tmp_path / f"ckpt{i}"),
-        )
-        q.awaitTermination()
-    out = {r["doc_id"]: r["kept"] for r in spark.read.parquet(out_root).collect()}
+            neardup_batch(root),
+            str(tmp_path / f"ckpt{i}"),
+        ).awaitTermination()
+    out = {r["doc_id"]: r["kept"] for r in read_output(spark, root).collect()}
     assert out == {1: True, 2: False, 3: True}
 
 
-# ---------------------------------------------------------------------------
-# Streaming heavy hitters (sharded weighted Misra-Gries on TWS)
-# ---------------------------------------------------------------------------
 def test_mg_merge_guarantee_and_lower_bounds():
     """Pure-logic check of the weighted MG table: counts are lower bounds
     of the exact frequencies and any token with freq > total/(k+1)
     survives — on random weighted streams."""
     import random
 
-    from data_ingestion_spark.streaming.heavy_hitters_stream import _mg_merge
+    from data_ingestion_spark.streaming.foreach_batch_state import _mg_merge
 
     rnd = random.Random(88)
     for trial in range(5):
@@ -1252,16 +837,19 @@ def test_mg_merge_guarantee_and_lower_bounds():
 
 
 def test_heavy_hitters_stream_cross_batch(spark, tmp_path):
-    """E2E: documents streamed one file per micro-batch; each shard's
-    FINAL table (max emit_seq) must lower-bound the exact token counts
-    and contain every token whose global frequency clears the per-shard
-    MG support bound. State must survive across micro-batches (two
-    source files ⇒ two batches). Runs the tws tier when protobuf is
-    installed, else the foreachBatch versioned-state fallback — same
-    merge math, same contract."""
+    """E2E: documents streamed one file per micro-batch; the final state
+    must lower-bound the exact token counts and contain every token whose
+    global frequency clears the per-shard MG support bound. State must
+    survive across micro-batches (two source files ⇒ two batches), and a
+    redelivery of an applied batch must leave it unchanged."""
     import pyspark.sql.functions as F
 
     from data_ingestion_spark.functions import tokens
+    from data_ingestion_spark.operators import tableformat
+    from data_ingestion_spark.streaming.foreach_batch_state import (
+        heavy_hitters_batch,
+        run_stream,
+    )
 
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
     src = str(tmp_path / "hh_src")
@@ -1269,11 +857,6 @@ def test_heavy_hitters_stream_cross_batch(spark, tmp_path):
     docs.filter("doc_id % 2 = 1").coalesce(1).write.mode("append").parquet(src)
 
     n_shards, k = 8, 16
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
     exact = {
         r["token"]: (r["shard"], r["freq"])
         for r in docs.select(F.explode(tokens(F.col("text"))).alias("token"))
@@ -1286,93 +869,41 @@ def test_heavy_hitters_stream_cross_batch(spark, tmp_path):
     for tok, (shard, freq) in exact.items():
         shard_totals[shard] = shard_totals.get(shard, 0) + freq
 
-    def check(final):
-        for (shard, tok), lb in final.items():
-            assert lb <= exact[tok][1], (shard, tok)
-        hit = 0
-        for tok, (shard, freq) in exact.items():
-            if freq > shard_totals[shard] / (k + 1):
-                assert (shard, tok) in final, (tok, freq)
-                hit += 1
-        assert hit > 0  # the fixture actually exercises the guarantee
-
-    if not HAS_TWS:
-        from data_ingestion_spark.operators import tableformat
-        from data_ingestion_spark.streaming.foreach_batch_state import (
-            heavy_hitters_batch,
-        )
-
-        state_root = str(tmp_path / "hh_state")
-        q = (
-            stream.writeStream.foreachBatch(
-                heavy_hitters_batch(state_root, n_shards=n_shards, k=k)
-            )
-            .option("checkpointLocation", str(tmp_path / "hh_fb_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        assert tableformat.read_manifest(state_root)["current"] >= 1  # ≥2 batches
-        from data_ingestion_spark.streaming.foreach_batch_state import (
-            read_heavy_hitters_state,
-        )
-
-        def snapshot():
-            return {
-                (r["shard"], r["token"]): r["count_lb"]
-                for r in read_heavy_hitters_state(spark, state_root).collect()
-            }
-
-        final = snapshot()
-        check(final)
-        # replay idempotency (r9): redelivering an already-applied
-        # micro-batch must be a no-op — the state snapshot is unchanged
-        # and the lower-bound contract survives.
-        replay = heavy_hitters_batch(state_root, n_shards=n_shards, k=k)
-        replay(docs.filter("doc_id % 2 = 1"), 1)  # batch_id 1 already applied
-        assert snapshot() == final
-        return
-
-    from data_ingestion_spark.streaming.heavy_hitters_stream import (
-        heavy_hitters_stream,
+    root = str(tmp_path / "hh")
+    q = run_stream(
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src),
+        heavy_hitters_batch(root, n_shards=n_shards, k=k),
+        str(tmp_path / "hh_ckpt"),
     )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        sdf = heavy_hitters_stream(stream, n_shards=n_shards, k=k)
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName("t_hh")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "hh_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        rows = spark.table("t_hh").collect()
-        assert rows
-        max_seq = {}
-        for r in rows:
-            max_seq[r["shard"]] = max(max_seq.get(r["shard"], 0), r["emit_seq"])
-        assert max(max_seq.values()) >= 2  # state crossed micro-batches
-        final = {
+    q.awaitTermination()
+    assert tableformat.read_manifest(os.path.join(root, "state"))["current"] >= 1  # ≥2 batches
+
+    def snapshot():
+        return {
             (r["shard"], r["token"]): r["count_lb"]
-            for r in rows
-            if r["emit_seq"] == max_seq[r["shard"]]
+            for r in tableformat.read_atomic(spark, root, "state").collect()
         }
-        check(final)
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+
+    final = snapshot()
+    for (shard, tok), lb in final.items():
+        assert lb <= exact[tok][1], (shard, tok)
+    hit = 0
+    for tok, (shard, freq) in exact.items():
+        if freq > shard_totals[shard] / (k + 1):
+            assert (shard, tok) in final, (tok, freq)
+            hit += 1
+    assert hit > 0  # the fixture actually exercises the guarantee
+    # a redelivery of batch 1 of the same query is a no-op
+    replay = heavy_hitters_batch(root, n_shards=n_shards, k=k)
+    with _as_query(spark, q.id):
+        replay(docs.filter("doc_id % 2 = 1"), 1)
+    assert snapshot() == final
 
 
 # ---------------------------------------------------------------------------
-# Per-key quota / rate-limit admission (foreachBatch tier, r9)
+# Per-key quota / rate-limit admission
 # ---------------------------------------------------------------------------
 def test_rate_limit_admission_across_batches(spark, tmp_path):
     """cap=3 per (user, hour window): batch 1 admits the first 3 of user
@@ -1529,3 +1060,109 @@ def test_rate_limit_torn_commit_replay_is_consistent(spark, tmp_path):
         )
     }
     assert by_batch[1] == {3, 4}
+
+
+# ---------------------------------------------------------------------------
+# The replay guard: every processor is replay-safe and restart-safe
+# ---------------------------------------------------------------------------
+@contextmanager
+def _as_query(spark, query_id):
+    """Run the body as Spark runs a foreachBatch call of query
+    ``query_id`` — the thread's ``sql.streaming.queryId`` property."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("sql.streaming.queryId", str(query_id))
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("sql.streaming.queryId", None)
+
+
+def _guard_cases(spark):
+    """(processor factory, one input batch) per stateful guard."""
+    from pyspark.sql import functions as SF
+
+    from data_ingestion_spark.streaming import foreach_batch_state as fbs
+
+    events = spark.createDataFrame(
+        [(1, 1, 2.0, "2026-01-01 09:00:00"), (2, 1, 3.0, "2026-01-01 09:00:01"),
+         (3, 1, 4.0, "2026-01-01 09:00:02"), (4, 2, 5.0, "2026-01-01 09:00:00")],
+        "event_id long, user_id long, value double, ts string",
+    ).withColumn("ts", SF.to_timestamp("ts"))
+    fps = spark.createDataFrame(
+        [("fpA", 1), ("fpA", 2), ("fpB", 3)], "fp string, doc_id long"
+    )
+    texts = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon zeta eta theta"),
+         (2, "completely different content about other things entirely")],
+        "doc_id long, text string",
+    )
+    return {
+        "running_totals": (fbs.running_totals_batch, events),
+        "dedup": (fbs.dedup_batch, fps),
+        "neardup": (fbs.neardup_batch, texts),
+        "heavy_hitters": (fbs.heavy_hitters_batch, texts),
+        "rate_limit": (lambda root: fbs.rate_limit_batch(root, cap=2), events),
+    }
+
+
+def _guard_view(spark, root):
+    """Sorted state rows and, where the guard emits, sorted output rows."""
+    from data_ingestion_spark.operators import tableformat as tf
+    from data_ingestion_spark.streaming.foreach_batch_state import read_output
+
+    state = sorted(map(tuple, tf.read_atomic(spark, root, "state").collect()), key=repr)
+    if not os.path.exists(os.path.join(root, "out")):
+        return state, None
+    return state, sorted(map(tuple, read_output(spark, root).collect()), key=repr)
+
+
+@pytest.mark.parametrize(
+    "guard", ["running_totals", "dedup", "neardup", "heavy_hitters", "rate_limit"]
+)
+def test_guard_replay_leaves_state_and_output_unchanged(spark, tmp_path, guard):
+    """A second call with the same batch — a foreachBatch redelivery —
+    leaves state and output exactly as after the first call."""
+    make, batch = _guard_cases(spark)[guard]
+    root = str(tmp_path / guard)
+    proc = make(root)
+    proc(batch, 0)
+    first = _guard_view(spark, root)
+    proc(batch, 0)
+    assert _guard_view(spark, root) == first
+    with _as_query(spark, "q-1"):
+        proc(batch, 3)
+        second = _guard_view(spark, root)
+        proc(batch, 3)
+    assert _guard_view(spark, root) == second != first
+
+
+@pytest.mark.parametrize("guard", ["heavy_hitters", "rate_limit"])
+def test_guard_applies_a_new_query_restarting_at_batch_zero(spark, tmp_path, guard):
+    """A second streaming query (new checkpoint, same root) restarts at
+    batch 0; the guard applies its batch instead of skipping it."""
+    from data_ingestion_spark.operators import tableformat as tf
+    from data_ingestion_spark.streaming.foreach_batch_state import run_stream
+
+    make, batch = _guard_cases(spark)[guard]
+    root = str(tmp_path / guard)
+    src1, src2 = str(tmp_path / "src1"), str(tmp_path / "src2")
+    key = "user_id" if guard == "rate_limit" else "doc_id"
+    batch.filter(f"{key} = 1").write.parquet(src1)
+    batch.filter(f"{key} = 2").write.parquet(src2)
+    schema = batch.schema
+    for i, src in enumerate([src1, src2]):
+        run_stream(
+            spark.readStream.schema(schema).parquet(src),
+            make(root),
+            str(tmp_path / f"ckpt{i}"),
+        ).awaitTermination()
+    ledger = tf.read_atomic(spark, root, "applied").collect()
+    assert sorted(r["batch_id"] for r in ledger) == [0, 0]
+    assert len({r["query_id"] for r in ledger}) == 2
+    state = tf.read_atomic(spark, root, "state").collect()
+    if guard == "rate_limit":
+        assert {r["user_id"] for r in state} == {1, 2}
+        assert {r["user_id"] for r in tf.read_atomic(spark, root, "out").collect()} == {2}
+    else:
+        got = {r["token"] for r in state}
+        assert {"alpha", "completely"} <= got
